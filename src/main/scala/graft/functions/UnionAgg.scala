@@ -41,6 +41,17 @@ import graft.geom.Overlay
   * shuffling raw rings (see geo_union_area, which measured 2.1×
   * faster that way at its sparse benchmark shape).
   *
+  * Cost: without that repartition, a union whose partials are small
+  * (many keys of ~100 rings each, e.g. integer boxes per 256-px cell)
+  * shuffles so few bytes that AQE coalesces the whole reduce into ONE
+  * task — every merge, compaction and finish() then runs on a single
+  * core, and the overlay kernel's speed is the stage's wall time. Each
+  * compaction hands `Overlay.unionGroups` one large traced head group
+  * plus tens of single-ring groups; the kernel's classification asks
+  * only the groups whose bbox is near each sample point
+  * (`Overlay.Coverage`), so a compaction costs about one re-trace of
+  * the head, not head fragments × groups.
+  *
   * A traced overlay result is itself a valid even-odd group (holes are
   * CW rings whose parity cancels), which is what makes compaction
   * closed under merge.

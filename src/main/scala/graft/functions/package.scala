@@ -71,10 +71,6 @@ package object functions {
                 xoff: Double, yoff: Double): Column =
     toCol(STAffine(toExpr(poly), a, b, d, e, xoff, yoff))
 
-  /** Local→global tile shift (instanceprocessor.py:90-97). */
-  def st_translate(poly: Column, dx: Double, dy: Double): Column =
-    st_affine(poly, 1, 0, 0, 1, dx, dy)
-
   def st_simplify(poly: Column, tolerance: Double): Column =
     toCol(STSimplify(toExpr(poly), tolerance))
 
@@ -82,18 +78,6 @@ package object functions {
 
   /** [rows, cols, rleCounts...] of the polygon's integer-snapped mask. */
   def poly_rle(poly: Column): Column = toCol(PolyRLE(toExpr(poly)))
-
-  /** bbox IoU as a pure-builtin composition — fully codegen'd. */
-  def bbox_iou(aMinX: Column, aMinY: Column, aMaxX: Column, aMaxY: Column,
-               bMinX: Column, bMinY: Column, bMaxX: Column, bMaxY: Column): Column = {
-    val ix = greatest(lit(0.0), least(aMaxX, bMaxX) - greatest(aMinX, bMinX))
-    val iy = greatest(lit(0.0), least(aMaxY, bMaxY) - greatest(aMinY, bMinY))
-    val inter = ix * iy
-    val areaA = (aMaxX - aMinX) * (aMaxY - aMinY)
-    val areaB = (bMaxX - bMinX) * (bMaxY - bMinY)
-    val u = areaA + areaB - inter
-    when(u <= 0.0, 0.0).otherwise(inter / u)
-  }
 
   /** Lat/lon presentation strings (reference util.py:462-473
     * format_lat_str / format_lon_str): "{abs:.3f}$^\circ$N|S|E|W".

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,10 +22,6 @@ object GeoOps {
 
   def withRegion(pages: DataFrame): DataFrame =
     pages.withColumn("region", col("i").divide(PagesPerRegion).cast("long"))
-
-  /** Cell id column at `level` over the region-local extent. */
-  def withCell(df: DataFrame, level: Int = 8): Column =
-    cell_encode(col("x"), col("y"), level, TileGrid.ExtentX, TileGrid.ExtentY)
 
   object TileGrid {
     val ExtentX = 2048.0

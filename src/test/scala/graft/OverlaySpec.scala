@@ -212,6 +212,183 @@ class OverlaySpec extends AnyFunSuite {
     }
   }
 
+  /** SHA-256 prefix over every output, ring and double, in order
+    * (ring counts, ring lengths and raw double bits all feed it). */
+  private def ringsHash(outs: Seq[Seq[Array[Double]]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val bb = java.nio.ByteBuffer.allocate(8)
+    def put(l: Long): Unit = { bb.clear(); bb.putLong(l); md.update(bb.array()) }
+    outs.foreach { rs =>
+      put(rs.length)
+      rs.foreach { r => put(r.length); r.foreach(d => put(java.lang.Double.doubleToRawLongBits(d))) }
+    }
+    md.digest().take(8).map(b => f"$b%02x").mkString
+  }
+
+  /** The spatial_join union input of one 256-px cell: integer boxes
+    * 6-38 px a side around uniform page points, plus `hot` boxes around
+    * the dense 13×11-px spot. */
+  private def joinCell(rnd: scala.util.Random, n: Int, hot: Int): IndexedSeq[Array[Double]] =
+    (0 until n + hot).map { k =>
+      val (x, y) =
+        if (k < n) (rnd.nextInt(256), rnd.nextInt(256))
+        else (100 + k % 13, 120 + k % 11)
+      rect(x - 3 - rnd.nextInt(17), y - 3 - rnd.nextInt(13),
+        x + 3 + rnd.nextInt(17), y + 3 + rnd.nextInt(17))
+    }
+
+  /** A star-shaped ring with fractional vertices whose spikes can
+    * cross (a self-intersecting input for resolve). */
+  private def star(rnd: scala.util.Random, n: Int): Array[Double] =
+    (0 until n).flatMap { k =>
+      val a = 2 * math.Pi * (k + rnd.nextDouble() * 1.5) / n
+      val r = 5 + rnd.nextDouble() * 45
+      Seq(100 + r * math.cos(a), 100 + r * math.sin(a))
+    }.toArray
+
+  test("golden: exact overlay output is bit-pinned on seeded join and compaction shapes") {
+    val got = (1 to 3).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val cell = joinCell(rnd, 110, 40)
+      val single = Overlay.unionGroups(cell.map(Seq(_)))
+      // compaction shape: one traced head group plus ~40 single boxes
+      val head = Overlay.unionGroups(cell.take(80).map(Seq(_)))
+      val compact = Overlay.unionGroups(head +: joinCell(rnd, 40, 0).map(Seq(_)))
+      val a = Overlay.unionGroups(joinCell(rnd, 50, 10).map(Seq(_)))
+      val b = Overlay.unionGroups(joinCell(rnd, 50, 0).map(Seq(_)))
+      val stars = Seq(star(rnd, 9), star(rnd, 17))
+      val c = genConvex(Gen.Parameters.default, org.scalacheck.rng.Seed(seed.toLong)).get
+      val d = genConvex(Gen.Parameters.default, org.scalacheck.rng.Seed(seed + 100L)).get
+      // near-coincident vertices: each coordinate moved by under a third
+      // of the weld tolerance, so welding, not bit equality, merges the
+      // corners and edges the boxes share
+      val jittered = cell.map(_.map(v => v + (rnd.nextDouble() - 0.5) * 2e-7))
+      ringsHash(Seq(single, compact, Overlay.unionGroups(jittered.map(Seq(_))),
+        Overlay.unionOf(a, b), Overlay.intersection(a, b), Overlay.difference(a, b),
+        Overlay.unionOf(Seq(c), Seq(d)), Overlay.intersection(Seq(c), Seq(d)),
+        Overlay.difference(Seq(c), Seq(d)),
+        Overlay.resolve(stars.take(1)), Overlay.resolve(stars), Overlay.resolve(compact)))
+    }
+    // recorded on the kernel before the pruned classification and
+    // primitive-keyed welding went in; any drift is a behaviour change
+    assert(got === Seq("61de458731502c87", "f01db04b2d801bdf", "011d2699fb08c942"))
+  }
+
+  /** Distance from (px, py) to segment (ax, ay)-(bx, by). */
+  private def segDist(px: Double, py: Double, ax: Double, ay: Double, bx: Double, by: Double): Double = {
+    val dx = bx - ax; val dy = by - ay
+    val l2 = dx * dx + dy * dy
+    val t = if (l2 == 0) 0.0 else math.max(0.0, math.min(1.0, ((px - ax) * dx + (py - ay) * dy) / l2))
+    math.hypot(px - ax - t * dx, py - ay - t * dy)
+  }
+
+  /** Seeded degenerate group sets around `base`, at a unit `u`:
+    * grid-aligned boxes sharing edges, duplicate and collinear
+    * vertices, a box with a hole, zero-area rings, empty groups, a
+    * self-intersecting star and fractional boxes. */
+  private def degenerateGroups(rnd: scala.util.Random, base: Double, u: Double): IndexedSeq[Seq[Array[Double]]] = {
+    def p(k: Double) = base + k * u
+    def box(x0: Double, y0: Double, x1: Double, y1: Double) = rect(p(x0), p(y0), p(x1), p(y1))
+    val gx = rnd.nextInt(4); val gy = rnd.nextInt(4)
+    val shared = (0 until 3).map(k => Seq(box(gx + 4 * k, gy, gx + 4 * k + 4, gy + 4)))
+    val dupCollinear = Array(p(1), p(1), p(1), p(1), p(3), p(1), p(6), p(1),
+      p(6), p(5), p(6), p(5), p(1), p(5), p(1), p(3))
+    val holed = Seq(box(2, 2, 10, 9), box(4, 4, 7, 6))
+    val flat = Array(p(0), p(7), p(5), p(7), p(11), p(7))    // zero area, horizontal
+    val needle = Array(p(8), p(0), p(8), p(5), p(8), p(12))  // zero area, vertical
+    val starRing = star(rnd, 7).map(c => base + (c - 100) / 10 * u)
+    val frac = (0 until 4).map { _ =>
+      val x = rnd.nextInt(10) + rnd.nextDouble(); val y = rnd.nextInt(10) + rnd.nextDouble()
+      Seq(box(x, y, x + 1 + rnd.nextDouble() * 3, y + 1 + rnd.nextDouble() * 3))
+    }
+    rnd.shuffle(shared ++ frac ++ IndexedSeq(Seq(dupCollinear), holed, Seq(flat), Seq(needle),
+      Seq(starRing), Seq.empty, Seq(Array(p(1), p(2))))).toIndexedSeq
+  }
+
+  test("fuzz: pruned coverage equals parityInside at and around every group bbox") {
+    val rnd = new scala.util.Random(20261017)
+    for (base <- Seq(0.0, 1e6, 1e9); _ <- 0 until 4) {
+      val u = math.max(1.0, base * 1e-4)
+      val groups = degenerateGroups(rnd, base, u)
+      val eps = Overlay.weldEpsOf(groups)
+      val cov = new Overlay.Coverage(groups, eps)
+      def check(px: Double, py: Double): Unit = {
+        val want = groups.map(Overlay.parityInside(_, px, py))
+        cov.at(px, py)
+        groups.indices.foreach(g => assert(cov(g) === want(g), s"group $g at ($px, $py), base $base"))
+        assert(cov.any === want.contains(true), s"any at ($px, $py), base $base")
+      }
+      // every bbox edge, on it and within / just beyond eps of it
+      val offsets = Seq(0.0, eps / 2, eps, 2 * eps, -eps / 2, -eps, -2 * eps)
+      groups.foreach { g =>
+        val vs = g.filter(_.length >= 6).flatMap(_.grouped(2).map(v => (v(0), v(1))))
+        if (vs.nonEmpty) {
+          val (x0, x1) = (vs.map(_._1).min, vs.map(_._1).max)
+          val (y0, y1) = (vs.map(_._2).min, vs.map(_._2).max)
+          val xs = Seq(x0, x1, (x0 + x1) / 2).flatMap(x => offsets.map(x + _)) ++
+            Seq(math.nextDown(x0 - eps), math.nextUp(x1 + eps))
+          val ys = Seq(y0, y1, (y0 + y1) / 2).flatMap(y => offsets.map(y + _)) ++
+            Seq(math.nextDown(y0 - eps), math.nextUp(y1 + eps))
+          for (x <- xs; y <- ys) check(x, y)
+          vs.foreach { case (x, y) => offsets.foreach(o => check(x + o, y - o)) }
+        }
+      }
+      (0 until 300).foreach(_ => check(base + (rnd.nextDouble() * 20 - 2) * u, base + (rnd.nextDouble() * 20 - 2) * u))
+      // and the overlays built on it, at sampled points clear of every
+      // input edge (within the weld tolerance the boundary may move)
+      val edges = groups.flatten.filter(_.length >= 6).flatMap { r =>
+        val n = r.length / 2
+        (0 until n).map(i => (r(2 * i), r(2 * i + 1), r(2 * ((i + 1) % n)), r(2 * ((i + 1) % n) + 1)))
+      }
+      val union = Overlay.unionGroups(groups)
+      val inter = Overlay.intersection(groups(0), groups(1))
+      val diff = Overlay.difference(groups(0), groups(1))
+      val res = Overlay.resolve(groups.flatten)
+      (0 until 300).foreach { _ =>
+        val px = base + (rnd.nextDouble() * 20 - 2) * u; val py = base + (rnd.nextDouble() * 20 - 2) * u
+        if (edges.forall { case (ax, ay, bx, by) => segDist(px, py, ax, ay, bx, by) > 1e3 * eps }) {
+          val in = groups.map(Overlay.parityInside(_, px, py))
+          assert(Overlay.parityInside(union, px, py) === in.contains(true), s"union at ($px, $py)")
+          assert(Overlay.parityInside(inter, px, py) === (in(0) && in(1)), s"intersection at ($px, $py)")
+          assert(Overlay.parityInside(diff, px, py) === (in(0) && !in(1)), s"difference at ($px, $py)")
+          assert(Overlay.parityInside(res, px, py) === Overlay.parityInside(groups.flatten, px, py),
+            s"resolve at ($px, $py)")
+        }
+      }
+    }
+  }
+
+  /** Rings as a comparable set: each rotated to start at its least
+    * vertex; the multiset sorted. */
+  private def canonical(rings: Seq[Array[Double]]): Seq[Seq[Double]] =
+    rings.map { r =>
+      val pts = r.grouped(2).map(v => (v(0), v(1))).toIndexedSeq
+      val k = pts.indices.minBy(i => pts(i))
+      (pts.drop(k) ++ pts.take(k)).flatMap { case (x, y) => Seq(x, y) }
+    }.sortBy(_.mkString(","))
+
+  private def aggRings(rows: Seq[Seq[Double]], partitions: Int): Seq[Array[Double]] = {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    spark.createDataset(rows).toDF("poly").repartition(partitions)
+      .agg(graft.functions.UnionAggApi.st_union_agg(col("poly")).as("u"))
+      .head().getSeq[scala.collection.Seq[Double]](0).map(_.toArray).toSeq
+  }
+
+  test("st_union_agg: merge-side and partial-side compaction give the local union's rings") {
+    // the spatial_join shape: 150 integer boxes of one 256-px cell, plus
+    // its dense hot spot
+    val rows = joinCell(new scala.util.Random(77), 150, 50).map(_.toSeq)
+    val local = canonical(Overlay.unionGroups(rows.map(r => Seq(r.toArray)).toIndexedSeq))
+    // 10 round-robin partitions hold 20 rows each, under CompactAt (32):
+    // every partial is uncompacted and all compaction happens in merge
+    assert(canonical(aggRings(rows, 10)) === local)
+    // 2 partitions hold 100 rows each: the partials compact while
+    // reducing, and merge joins two traced heads
+    assert(canonical(aggRings(rows, 2)) === local)
+  }
+
   test("st_union_agg: true Aggregator union equals the local overlay, across partitions") {
     val spark = SparkTestBase.spark
     import spark.implicits._
