@@ -14,10 +14,22 @@ import graft.tables.{FixtureIO, PagesGen}
   * `canopyCover`/`treeCover`, `setThreshold`, `setRoi`, `serialise`.
   * Immutable: the set*ers return new views; every verb is a short
   * DataFrame plan over the merged-crown table + confidence mosaic, so
-  * the whole surface is lazy and cluster-scale.
+  * the surface stays cluster-scale.
+  *
+  * Laziness and sharing: building a result (GraftPipeline.predict)
+  * starts no Spark job. The mosaic's upstream (synthesize →
+  * confidenceTiles exchange → mosaic exchange) runs ONCE, when the first
+  * verb touches [[mosaic]] — canopyCover/treeCover (already when their
+  * DataFrame is built), report, or GeoTiffIO.writeTable(mosaic) — and
+  * this result and every setThreshold/setRoi view reuse that run
+  * through the shuffle files Spark keeps. Nothing is cached: the files
+  * live while the result is reachable, lost ones are recomputed from
+  * lineage, and a new predict runs its own upstream. The instance
+  * verbs each run the merged-table plan.
   *
   * @param merged     merged crown table (CrownOps.MergedCrown schema)
-  * @param mosaic     per-class confidence mosaic tiles
+  * @param mosaicPlan plan of the per-class confidence mosaic tiles;
+  *                   verbs read it through [[mosaic]]
   * @param threshold  score threshold (reference confidence_threshold).
   *                   As in the reference, instances below the PIPELINE
   *                   confidence floor were never stored, so lowering the
@@ -34,10 +46,28 @@ import graft.tables.{FixtureIO, PagesGen}
 final case class CrownResult(
     spark: SparkSession,
     merged: DataFrame,
-    mosaic: Dataset[RasterOps.ConfTile],
+    mosaicPlan: Dataset[RasterOps.ConfTile],
     threshold: Double = 0.3, // = GraftPipeline default confThr (the floor)
     roi: Option[Array[Double]] = None,
     rasterGsd: Int = RasterOps.DefaultGsd) {
+
+  /** Per-class confidence mosaic tiles, read from one shared run of
+    * `mosaicPlan`. `Dataset.rdd` is computed once per Dataset object,
+    * and taking it makes adaptive execution materialize the plan's
+    * shuffle map stages (the confidenceTiles and mosaic exchanges). The
+    * views `copy` makes hold the same plan object, so the first call on
+    * any of them runs those stages and every later action over the
+    * wrapped RDD skips them.
+    *
+    * Deliberately not `Dataset.cache`/`persist`: the CacheManager keys
+    * on the plan, so an identical later predict would be served from
+    * this one's cache, and the cached blocks would pin executor memory.
+    * Here the only state is the shuffle files Spark keeps anyway; the
+    * ContextCleaner removes them once the result is unreachable. */
+  def mosaic: Dataset[RasterOps.ConfTile] = {
+    import spark.implicits._
+    spark.createDataset(mosaicPlan.rdd)
+  }
 
   def setThreshold(t: Double): CrownResult = copy(threshold = t)
 
@@ -114,9 +144,13 @@ final case class CrownResult(
   def treeCover: DataFrame = cover(CrownOps.ClassTree)
 
   /** Distributed serialization for large results: instances as parquet
-    * (cluster-scale; no driver collect). */
+    * (cluster-scale; no driver collect). Dictionary encoding is off: the
+    * vertex and bbox doubles are almost all distinct, so parquet would
+    * build a dictionary per column chunk only to fall back to plain
+    * encoding. */
   def serialiseTable(outDir: String): Unit =
-    instances.write.mode("overwrite").parquet(s"$outDir/instances.parquet")
+    instances.write.mode("overwrite").option("parquet.enable.dictionary", "false")
+      .parquet(s"$outDir/instances.parquet")
 
   /** Serialize to the canonical fixture formats (merged crowns JSONL +
     * coverage JSON) — instancesegmentationresult.py:383-423 serialise.

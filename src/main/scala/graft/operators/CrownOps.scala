@@ -448,17 +448,6 @@ object CrownOps {
         nmsLocal(it.toIndexedSeq, iouThr).iterator)
   }
 
-  /** Fused NMS + merge in ONE shuffle: both operators group on the same
-    * (region, class) key, so running them back-to-back inside a single
-    * flatMapGroups halves the pipeline's shuffles (the dominant cost at
-    * scale). Semantics identical to nms() followed by merge().
-    *
-    * `emitGeom = false` skips the dissolved-geometry border trace (the
-    * dominant per-instance CPU cost — rasterize is still paid for the
-    * exact pixel `area`, but hole-aware ring tracing is not) and leaves
-    * `geom` empty / `perimeter` 0.0. Use it for count/stats consumers
-    * that never read the rings; fixture serialization keeps the
-    * default. */
   /** The columns NMS + merge actually read — shuffled INSTEAD of the
     * full Crown row (drops pageId, tileId and the classScores array:
     * ~25% of the exchanged bytes; guide §2.3 "project before the
@@ -472,6 +461,17 @@ object CrownOps {
     Crown(s.region, s.crownId, 0L, 0L, s.classIdx, s.score,
       s.minX, s.minY, s.maxX, s.maxY, s.poly)
 
+  /** Fused NMS + merge in ONE shuffle: both operators group on the same
+    * (region, class) key, so running them back-to-back inside a single
+    * flatMapGroups halves the pipeline's shuffles (the dominant cost at
+    * scale). Semantics identical to nms() followed by merge().
+    *
+    * `emitGeom = false` skips the dissolved-geometry border trace (the
+    * dominant per-instance CPU cost — rasterize is still paid for the
+    * exact pixel `area`, but hole-aware ring tracing is not) and leaves
+    * `geom` empty / `perimeter` 0.0. Use it for count/stats consumers
+    * that never read the rings; fixture serialization keeps the
+    * default. */
   def nmsMerge(spark: SparkSession, crowns: Dataset[Crown], nmsIou: Double,
                confThr: Double, mergeIou: Double,
                emitGeom: Boolean = true): Dataset[MergedCrown] = {

@@ -36,10 +36,6 @@ object RasterOps {
                             minX: Long, minY: Long, rows: Int, cols: Int,
                             gsd: Int, data: Array[Byte])
 
-  /** Rasterize each tile's crowns into a class-confidence tile:
-    * crown pixels get round(score×255), max-merged (paste mode 1) —
-    * the deterministic analogue of the semantic model's per-tile
-    * confidence output. */
   /** Largest raster resolution ≤ `want` that divides the spec's tile
     * size and every grid edge — keeps tile rasters and mosaic paste
     * offsets exactly on the pixel grid for ARBITRARY specs (e.g. the
@@ -64,6 +60,10 @@ object RasterOps {
     math.max(1L, d).toInt
   }
 
+  /** Rasterize each tile's crowns into a class-confidence tile:
+    * crown pixels get round(score×255), max-merged (paste mode 1) —
+    * the deterministic analogue of the semantic model's per-tile
+    * confidence output. */
   def confidenceTiles(spark: SparkSession, crowns: Dataset[CrownOps.Crown],
                       spec: TileGridSpec, gsd: Int = 8): Dataset[ConfTile] = {
     import spark.implicits._

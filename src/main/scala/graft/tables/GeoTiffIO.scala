@@ -40,8 +40,9 @@ import graft.operators.RasterOps.ConfTile
   *
   * Scale shape: like shapefiles, one .tif is a per-tile artifact; the
   * Spark path parallelizes across files (`writeTable` writes one file
-  * per ConfTile inside foreachPartition through the Hadoop FS,
-  * `readTable` is a distributed binaryFile scan + in-task parse).
+  * per ConfTile inside foreachPartition — java.nio for local paths, the
+  * Hadoop FS otherwise — and `readTable` is a distributed binaryFile
+  * scan + in-task parse).
   */
 object GeoTiffIO {
 
@@ -386,38 +387,61 @@ object GeoTiffIO {
   }
 
   /** Mosaic sink: one GeoTIFF per ConfTile under `dir`, written inside
-    * foreachPartition through the Hadoop FS (no driver collect; works
-    * on any Spark filesystem). File name carries the identity triple. */
+    * foreachPartition (no driver collect). File name carries the
+    * identity triple; an existing file is overwritten. `dir` is created
+    * on the driver before the job, so an empty Dataset still leaves a
+    * directory that [[readTable]] scans as 0 rows.
+    *
+    * A local target (`file:` scheme, or no scheme over a local default
+    * filesystem) is written with java.nio, not the Hadoop FS: without
+    * the native Hadoop library, its local filesystem sets every new
+    * file's permissions by launching a `chmod` process (one per tile,
+    * which dominated this sink's wall time), and its checksum layer
+    * adds a `.crc` sibling per file that the scan never reads. Every
+    * other scheme (HDFS, S3, ...) goes through the Hadoop FS. */
   def writeTable(tiles: Dataset[ConfTile], dir: String, deflate: Boolean = true): Unit = {
     val spark = tiles.sparkSession
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(hconf)
-    tiles.foreachPartition { (it: Iterator[ConfTile]) =>
-      if (it.hasNext) {
-        val base = new org.apache.hadoop.fs.Path(dir)
-        // a PRIVATE FileSystem instance (not the JVM-wide cached one):
-        // checksum filesystems otherwise write a .crc sibling per .tif
-        // (double the file count + a CRC pass over every payload byte)
-        // that the binaryFile re-scan never reads — but flipping
-        // setWriteChecksum on the SHARED cached instance would leak the
-        // setting into every other file:// writer in the session, so
-        // the instance is scoped to this task and closed.
-        val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-          base.toUri, bc.value.value)
-        try {
-          fs.setWriteChecksum(false)
-          fs.mkdirs(base)
-          it.foreach { t =>
-            val p = new org.apache.hadoop.fs.Path(base,
-              s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif")
-            val out = fs.create(p, true)
-            try out.write(write(t, deflate = deflate)) finally out.close()
-          }
-        } finally fs.close()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val base = new org.apache.hadoop.fs.Path(dir)
+    val scheme = Option(base.toUri.getScheme)
+      .getOrElse(org.apache.hadoop.fs.FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme == "file") {
+      val local = base.toUri.getPath
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(local))
+      tiles.foreachPartition { (it: Iterator[ConfTile]) =>
+        it.foreach { t =>
+          java.nio.file.Files.write(java.nio.file.Paths.get(local, fileName(t)),
+            write(t, deflate = deflate))
+        }
+      }
+    } else {
+      base.getFileSystem(conf).mkdirs(base)
+      val bc = spark.sparkContext.broadcast(
+        new org.apache.spark.util.SerializableConfiguration(conf))
+      tiles.foreachPartition { (it: Iterator[ConfTile]) =>
+        if (it.hasNext) {
+          // a PRIVATE FileSystem instance (not the JVM-wide cached one):
+          // checksum filesystems otherwise write a .crc sibling per .tif
+          // (double the file count + a CRC pass over every payload byte)
+          // that the binaryFile re-scan never reads — but flipping
+          // setWriteChecksum on the SHARED cached instance would leak the
+          // setting into every other writer in the session, so the
+          // instance is scoped to this task and closed.
+          val fs = org.apache.hadoop.fs.FileSystem.newInstance(
+            base.toUri, bc.value.value)
+          try {
+            fs.setWriteChecksum(false)
+            it.foreach { t =>
+              val out = fs.create(new org.apache.hadoop.fs.Path(base, fileName(t)), true)
+              try out.write(write(t, deflate = deflate)) finally out.close()
+            }
+          } finally fs.close()
+        }
       }
     }
   }
+
+  private def fileName(t: ConfTile): String = s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif"
 
   /** Distributed scan over a directory of .tif files (same shape as
     * ShapefileIO.readTable): binaryFile listing + in-task parse. */

@@ -2,8 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.SchedulerAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+
 import graft.api.{CrownResult, GraftPipeline}
-import graft.operators.CrownOps
+import graft.operators.{CrownOps, GeoOps, RasterOps}
+import graft.tables.{GeoTiffIO, PagesGen}
 
 /** The interactive result surface — ports the reference ROI test
   * (tests/unit/test_post_processing.py:54-85: shrink bounds to the
@@ -186,5 +193,116 @@ class ApiSpec extends AnyFunSuite {
     assert(reported("tree_cover") === referenceCoverPpm(CrownOps.ClassTree),
       "report.json tree_cover != reference count_nonzero/num_valid recompute")
     assert(reported("canopy_cover").values.forall(v => v > 0 && v < 1000000))
+  }
+
+  test("serialiseTable: parquet reads back as the instances, with no dictionary-encoded column") {
+    val dir = java.nio.file.Files.createTempDirectory("crowntable").toString
+    result.serialiseTable(dir)
+    val path = s"$dir/instances.parquet"
+    val back = spark.read.parquet(path)
+    assert(back.schema.fieldNames.toSeq === result.instances.schema.fieldNames.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.sortBy(_.toString)
+    val want = rows(result.instances)
+    assert(want.nonEmpty)
+    assert(rows(back) === want)
+    val files = new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.nonEmpty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val chunks = files.toSeq.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toURI), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      finally reader.close()
+    }
+    assert(chunks.nonEmpty)
+    chunks.foreach { c =>
+      assert(!c.hasDictionaryPage, s"${c.getPath} has a dictionary page")
+      assert(!c.getEncodings.asScala.exists(_.usesDictionary),
+        s"${c.getPath} lists encodings ${c.getEncodings}")
+    }
+  }
+
+  test("predict starts no job; the mosaic's upstream runs once per result, shared by every view") {
+    // every submitted shuffle map stage, and the shuffle stages each job
+    // lists (a listed stage that is never submitted was skipped)
+    final class Stages extends SparkListener {
+      val submitted = mutable.ArrayBuffer.empty[Int]
+      val listed = mutable.ArrayBuffer.empty[Set[Int]]
+      var jobs = 0
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        jobs += 1
+        listed += e.stageInfos.flatMap(SchedulerAccess.shuffleId).toSet
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+        submitted ++= SchedulerAccess.shuffleId(e.stageInfo)
+      }
+    }
+    val sc = spark.sparkContext
+    def observe[T](body: => T): (T, Stages) = {
+      val l = new Stages
+      sc.addSparkListener(l)
+      try {
+        val out = body
+        SchedulerAccess.drain(sc)
+        (out, l)
+      } finally sc.removeSparkListener(l)
+    }
+    def covers(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getAs[Long]("region") -> r.getAs[Long]("cover_ppm")).toMap
+
+    val (res, built) = observe(GraftPipeline.predictPages(spark, 3000))
+    assert(built.jobs === 0, "predict must start no Spark job")
+
+    val dir = java.nio.file.Files.createTempDirectory("sharedmosaic")
+    val (canopy, c1) = observe(covers(res.canopyCover))
+    val (tree, c2) = observe(covers(res.treeCover))
+    val (strict, c3) = observe(covers(res.setThreshold(0.5).canopyCover))
+    val (_, c4) = observe(GeoTiffIO.writeTable(res.mosaic, dir.toString))
+
+    // the GeoTIFF job reads the mosaic only: the shuffle stages it lists
+    // are the confidenceTiles and mosaic exchanges, and all were skipped
+    val upstream = c4.listed.flatten.toSet
+    assert(upstream.size >= 2, s"writeTable job lists shuffle stages $upstream")
+    assert(c4.submitted.isEmpty, s"writeTable re-ran shuffle stages ${c4.submitted}")
+    // canopyCover ran them once; each later cover runs only its own
+    // aggregation exchange and lists the upstream stages as skipped
+    assert(upstream.subsetOf(c1.submitted.toSet))
+    for (c <- Seq(c2, c3)) {
+      assert(c.submitted.size === 1 && !upstream.contains(c.submitted.head),
+        s"cover submitted ${c.submitted}, upstream $upstream")
+      assert(upstream.subsetOf(c.listed.flatten.toSet))
+    }
+    val all = Seq(c1, c2, c3, c4).flatMap(_.submitted)
+    assert(all.distinct.size === all.size, s"a shuffle stage ran twice: $all")
+    assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty)
+
+    // a second predict on the same pages is a new run: its upstream runs again
+    val (_, again) = observe(covers(GraftPipeline.predictPages(spark, 3000).canopyCover))
+    assert(again.submitted.size === c1.submitted.size)
+    assert(again.submitted.toSet.intersect(all.toSet).isEmpty)
+
+    // the shared run's outputs equal a fresh mosaic plan's
+    val spec = GeoOps.TileGrid.Default
+    val fresh = RasterOps.mosaic(spark, RasterOps.confidenceTiles(spark,
+      CrownOps.synthesize(spark, GeoOps.assignTiles(PagesGen.pages(spark, 3000), spec), spec),
+      spec, res.rasterGsd), spec).collect()
+    val side = (GeoOps.TileGrid.ExtentX / res.rasterGsd).toInt
+    def freshCover(cls: Int, thr: Double): Map[Long, Long] = {
+      val thr255 = math.round(thr * 255).toInt
+      fresh.filter(_.classIdx == cls).groupBy(_.region).map { case (rg, ts) =>
+        val nz = ts.map(_.data.count(b => (b & 0xff) > thr255).toLong).sum
+        rg -> math.floor((1000000L * nz).toDouble / (side.toLong * side)).toLong
+      }
+    }
+    assert(canopy === freshCover(CrownOps.ClassCanopy, res.threshold))
+    assert(tree === freshCover(CrownOps.ClassTree, res.threshold))
+    assert(strict === freshCover(CrownOps.ClassCanopy, 0.5))
+    assert(dir.toFile.list().length === fresh.length)
+    fresh.foreach { t =>
+      val f = dir.resolve(s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif")
+      assert(java.nio.file.Files.readAllBytes(f) sameElements GeoTiffIO.write(t, deflate = true))
+    }
   }
 }

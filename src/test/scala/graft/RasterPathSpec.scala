@@ -542,14 +542,39 @@ class RasterPathSpec extends AnyFunSuite {
     val tiles = RasterOps.mosaic(spark,
       RasterOps.confidenceTiles(spark, crowns, spec), spec)
     val expect = tiles.collect().sortBy(t => (t.region, t.classIdx, t.tileId))
-    val dir = java.nio.file.Files.createTempDirectory("gtif").toString
-    GeoTiffIO.writeTable(tiles, dir)
-    assert(new java.io.File(dir).list().count(_.endsWith(".tif")) === expect.length)
-    val back = GeoTiffIO.readTable(spark, dir).collect().sortBy(t => (t.region, t.classIdx, t.tileId))
-    assert(back.length === expect.length)
-    back.zip(expect).foreach { case (b, e) =>
-      assert(b.minX === e.minX && b.minY === e.minY && b.gsd === e.gsd)
-      assert(b.data sameElements e.data)
+    // every file holds exactly GeoTiffIO.write's bytes, the directory
+    // holds only .tif files (no .crc siblings), and a second write into
+    // the same directory overwrites in place
+    def checkFiles(dir: java.nio.file.Path): Unit = {
+      val names = dir.toFile.list().toSet
+      assert(names.size === expect.length && names.forall(_.endsWith(".tif")), names)
+      expect.foreach { t =>
+        val f = dir.resolve(s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif")
+        assert(java.nio.file.Files.readAllBytes(f) sameElements GeoTiffIO.write(t, deflate = true))
+      }
     }
+    val plain = java.nio.file.Files.createTempDirectory("gtif")
+    val uri = java.nio.file.Files.createTempDirectory("gtif-uri")
+    for ((dir, target) <- Seq(plain -> plain.toString, uri -> uri.toUri.toString)) {
+      GeoTiffIO.writeTable(tiles, target)
+      checkFiles(dir)
+      GeoTiffIO.writeTable(tiles, target)
+      checkFiles(dir)
+      val back = GeoTiffIO.readTable(spark, target).collect()
+        .sortBy(t => (t.region, t.classIdx, t.tileId))
+      assert(back.length === expect.length)
+      back.zip(expect).foreach { case (b, e) =>
+        assert(b.minX === e.minX && b.minY === e.minY && b.gsd === e.gsd)
+        assert(b.data sameElements e.data)
+      }
+    }
+  }
+
+  test("GeoTIFF table sink: an empty write leaves a directory that scans as 0 rows") {
+    import graft.tables.GeoTiffIO
+    val dir = java.nio.file.Files.createTempDirectory("gtif-empty").resolve("masks")
+    GeoTiffIO.writeTable(spark.emptyDataset[RasterOps.ConfTile], dir.toString)
+    assert(java.nio.file.Files.isDirectory(dir))
+    assert(GeoTiffIO.readTable(spark, dir.toString).count() === 0L)
   }
 }
