@@ -381,24 +381,11 @@ object SparkEntry {
        |    b.bminx - asg.tmin_x < 5.0 OR b.bminy - asg.tmin_y < 5.0 OR
        |    b.bmaxx - asg.tmin_x > 1019.0 OR b.bmaxy - asg.tmin_y > 1019.0)))""".stripMargin
 
-  /** Flagship: full geometry pipeline on sf0.001 — pages → geocode →
+  /** Flagship: the `crowns_merged` query on sf0.001 — pages → geocode →
     * tile assign → crown synthesis (with edge rejection) → per-region
     * NMS → dissolve/split merge. Driver smoke-checks rows > 0. */
-  def entry(spark: SparkSession): DataFrame = {
-    val pages = PagesGen.pages(spark, 6000)
-    val assigned = GeoOps.assignTiles(pages)
-    val crowns = CrownOps.synthesize(spark, assigned, GeoOps.TileGrid.Default)
-    import spark.implicits._
-    // fused NMS+merge — ONE shuffle, the same plan shape the bench
-    // pipeline and CrownResult.run use (nms + merge as two stages is
-    // semantically identical but pays a second Exchange)
-    CrownOps.nmsMerge(spark, crowns, nmsIou = 0.7, confThr = 0.3, mergeIou = 0.5)
-      .toDF()
-      .select(col("region"), col("classIdx").as("class_idx"), col("score"),
-        col("minX").as("min_x"), col("minY").as("min_y"),
-        col("maxX").as("max_x"), col("maxY").as("max_y"), col("area"),
-        size(col("memberIds")).as("n_members"))
-  }
+  def entry(spark: SparkSession): DataFrame =
+    queries("crowns_merged")(spark, "sf0.001")
 
   /** The 40 deterministic PIP triangles (region-local coords, vertices
     * at .5 offsets so integer page coords never sit on an edge). */

@@ -28,8 +28,6 @@ object Geom {
            math.max(maxX, o.maxX), math.max(maxY, o.maxY))
     def contains(x: Double, y: Double): Boolean =
       x >= minX && x <= maxX && y >= minY && y <= maxY
-    /** Shrink by pad on all sides (mirrors reference `inset_box`, util.py:557-559). */
-    def inset(pad: Double): BBox = BBox(minX + pad, minY + pad, maxX - pad, maxY - pad)
     /** bbox IoU — the NMS metric (processedinstance.py:523-568 contract). */
     def iou(o: BBox): Double = {
       val ix = math.max(0.0, math.min(maxX, o.maxX) - math.max(minX, o.minX))

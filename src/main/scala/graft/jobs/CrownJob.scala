@@ -35,42 +35,43 @@ object CrownJob {
   val StageMerged = "merged"
   val StageStats = "stats"
 
+  /** Rows of `df` whose region has no committed lineage in `stage` yet:
+    * the resume anti-join every stage runs before it commits. */
+  private def pending(spark: SparkSession, conf: Conf, stage: String,
+                      df: DataFrame): DataFrame =
+    IcebergLite.committedKeys(spark, conf.warehouse, stage) match {
+      case Some(done) => df.join(done.withColumnRenamed("unitKey", "region"),
+        Seq("region"), "left_anti")
+      case None => df
+    }
+
   /** Synthesis stage: pending regions only. `failAfterRegions` (tests)
     * truncates the processed set to simulate a crash after k regions. */
   def runSynth(spark: SparkSession, conf: Conf): Long = {
     val pages = GeoOps.withRegion(PagesGen.pages(spark, conf.nPages))
-    val pending = IcebergLite.committedKeys(spark, conf.warehouse, StageCrowns) match {
-      case Some(done) => pages.join(done.withColumnRenamed("unitKey", "region"),
-        Seq("region"), "left_anti")
-      case None => pages
-    }
+    val todo = pending(spark, conf, StageCrowns, pages)
     val limited =
       if (conf.failAfterRegions >= 0) {
-        val keep = pending.select("region").distinct()
+        val keep = todo.select("region").distinct()
           .orderBy("region").limit(conf.failAfterRegions)
-        pending.join(broadcast(keep), Seq("region"))
-      } else pending
+        todo.join(broadcast(keep), Seq("region"))
+      } else todo
     if (limited.isEmpty) return -1L
     val assigned = GeoOps.assignTiles(limited)
     val crowns = CrownOps.synthesize(spark, assigned, GeoOps.TileGrid.Default).toDF()
     IcebergLite.commit(spark, conf.warehouse, StageCrowns, crowns, "region")
   }
 
-  /** Merge stage over all committed crowns (regions not yet merged). */
+  /** Merge stage over all committed crowns (regions not yet merged):
+    * the same fused NMS + merge as `predict`, one shuffle. */
   def runMerge(spark: SparkSession, conf: Conf): Long = {
     import spark.implicits._
     val crowns = IcebergLite.read(spark, conf.warehouse, StageCrowns)
       .getOrElse(return -1L)
-    val pending = IcebergLite.committedKeys(spark, conf.warehouse, StageMerged) match {
-      case Some(done) => crowns.join(done.withColumnRenamed("unitKey", "region"),
-        Seq("region"), "left_anti")
-      case None => crowns
-    }
-    if (pending.isEmpty) return -1L
-    val ds = pending.as[CrownOps.Crown]
-    val kept = CrownOps.nms(spark, ds, conf.nmsIou)
-    val merged = CrownOps.merge(spark, kept, conf.confThr, conf.mergeIou,
-      emitGeom = conf.emitGeom).toDF()
+    val todo = pending(spark, conf, StageMerged, crowns)
+    if (todo.isEmpty) return -1L
+    val merged = CrownOps.nmsMerge(spark, todo.as[CrownOps.Crown], conf.nmsIou,
+      conf.confThr, conf.mergeIou, emitGeom = conf.emitGeom).toDF()
     IcebergLite.commit(spark, conf.warehouse, StageMerged, merged, "region")
   }
 
@@ -80,13 +81,9 @@ object CrownJob {
   def runStats(spark: SparkSession, conf: Conf): Long = {
     val merged = IcebergLite.read(spark, conf.warehouse, StageMerged)
       .getOrElse(return -1L)
-    val pending = IcebergLite.committedKeys(spark, conf.warehouse, StageStats) match {
-      case Some(done) => merged.join(done.withColumnRenamed("unitKey", "region"),
-        Seq("region"), "left_anti")
-      case None => merged
-    }
-    if (pending.isEmpty) return -1L
-    val stats = pending.groupBy(col("region"), col("classIdx"))
+    val todo = pending(spark, conf, StageStats, merged)
+    if (todo.isEmpty) return -1L
+    val stats = todo.groupBy(col("region"), col("classIdx"))
       .agg(count(lit(1)).as("n_crowns"),
         sum(col("area")).as("total_area"),
         avg(col("score")).as("mean_score"),

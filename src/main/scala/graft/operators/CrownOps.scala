@@ -184,11 +184,6 @@ object CrownOps {
     a.bbox.intersects(b.bbox) &&
       a.parts.exists(pa => b.parts.exists(pb => Geom.intersects(pa, pb)))
 
-  /** IoU between possibly-merged instances: exact convex clip for the
-    * single-part pair; 1-px rasterized mask IoU otherwise (pixel
-    * semantics — the reference's source geometry is masks). */
-  def instIoU(a: Inst, b: Inst): Double = instIoUCached(a, b, null)
-
   /** One-slot memo of instance `a`'s rasterized mask, keyed by the
     * pair-union bbox alignment (mask pixels sample at centers relative
     * to bb.min, so the mask is only reusable at the EXACT same
@@ -205,6 +200,9 @@ object CrownOps {
     var mask: Array[Byte] = null
   }
 
+  /** IoU between possibly-merged instances: exact convex clip for the
+    * single-part pair; 1-px rasterized mask IoU otherwise (pixel
+    * semantics — the reference's source geometry is masks). */
   private def instIoUCached(a: Inst, b: Inst, aCache: MaskCache): Double = {
     if (!a.bbox.intersects(b.bbox)) return 0.0
     if (a.parts.size == 1 && b.parts.size == 1)
@@ -464,7 +462,8 @@ object CrownOps {
   /** Fused NMS + merge in ONE shuffle: both operators group on the same
     * (region, class) key, so running them back-to-back inside a single
     * flatMapGroups halves the pipeline's shuffles (the dominant cost at
-    * scale). Semantics identical to nms() followed by merge().
+    * scale). Output is identical to `nmsLocal` then `mergeLocal` run
+    * per (region, class).
     *
     * `emitGeom = false` skips the dissolved-geometry border trace (the
     * dominant per-instance CPU cost — rasterize is still paid for the
@@ -487,8 +486,7 @@ object CrownOps {
     // sub-threshold crowns never influence which above-threshold
     // crowns survive. Filtering them here (same strict > predicate)
     // removes ~28% of the shuffled rows and of the NMS work with
-    // provably identical merged output. nms() standalone keeps the
-    // full input (its contract returns sub-threshold kept crowns).
+    // provably identical merged output.
     crowns
       .filter(c => c.score > confThr)
       .map(c => SlimCrown(c.region, c.crownId, c.classIdx, c.score,
@@ -536,20 +534,6 @@ object CrownOps {
         bb.minX, bb.minY, bb.maxX, bb.maxY,
         area.toDouble, rings.map(Geom.perimeter).sum, inst.parts.toArray, rings)
     }
-  }
-
-  /** Distributed merge: NMS → dissolve → split → median, per region and
-    * class, one shuffle total. `emitGeom` as in [[nmsMerge]]. */
-  def merge(spark: SparkSession, crowns: Dataset[Crown],
-            confThr: Double, iouThr: Double,
-            emitGeom: Boolean = true): Dataset[MergedCrown] = {
-    import spark.implicits._
-    crowns.groupByKey(c => (c.region, c.classIdx))
-      .flatMapGroups((key: (Long, Int), it: Iterator[Crown]) => {
-        val (region, classIdx) = key
-        mergeLocal(it.toIndexedSeq, classIdx, confThr, iouThr)
-          .iterator.map(toMerged(region, classIdx, _, emitGeom))
-      })
   }
 
   /** Crown-area histogram report aggregate (report.py:118-129): per

@@ -13,8 +13,7 @@ import graft.tables.{IcebergLite, PagesGen}
   * pages flow through the same geocode → tile-assign operators and each
   * batch commits one IcebergLite snapshot with per-region lineage —
   * `foreachBatch` + the commit log, exactly the pattern the survey
-  * prescribes. Event-time windowed aggregation with a watermark is
-  * provided for completeness (`cellCountsWindowed`).
+  * prescribes.
   */
 object StreamingIngest {
 
@@ -49,30 +48,6 @@ object StreamingIngest {
           ()
         }
       }
-  }
-
-  /** Custom-state streaming: cumulative per-cell page counts maintained
-    * with `mapGroupsWithState` (GroupState survives across
-    * micro-batches) — the KeyValueGroupedDataset stateful-processing
-    * shape for state the built-in aggregations can't express. Emits
-    * (cell, running_total, batch_delta) per updated cell per batch. */
-  def runningCellCounts(pages: DataFrame): Dataset[(Long, Long, Long)] = {
-    import graft.functions._
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .withColumn("cell", cell_encode(col("x"), col("y"), 6, 2048.0, 2048.0))
-      .select(col("cell")).as[Long]
-      .groupByKey(identity)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
-        (cell: Long, rows: Iterator[Long],
-         state: org.apache.spark.sql.streaming.GroupState[Long]) => {
-          val delta = rows.size.toLong
-          val total = state.getOption.getOrElse(0L) + delta
-          state.update(total)
-          (cell, total, delta)
-        })
   }
 
   /** Streaming exact dedup — the continuous-ingest flavor of
@@ -128,18 +103,5 @@ object StreamingIngest {
             Iterator.single((h, keeper))
           }
         })
-  }
-
-  /** Event-time tumbling-window per-cell counts with a watermark —
-    * the standard streaming aggregation shape (not required by the
-    * reference; provided as the engine's streaming-agg operator). */
-  def cellCountsWindowed(pages: DataFrame, windowDur: String = "1 minute",
-                         watermark: String = "2 minutes"): DataFrame = {
-    import graft.functions._
-    pages
-      .withColumn("cell", cell_encode(col("x"), col("y"), 6, 2048.0, 2048.0))
-      .withWatermark("warc_ts", watermark)
-      .groupBy(window(col("warc_ts"), windowDur), col("cell"))
-      .agg(count(lit(1)).as("cnt"))
   }
 }

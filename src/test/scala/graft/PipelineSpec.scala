@@ -32,26 +32,40 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("distributed NMS+merge equals the single-node golden pipeline") {
-    val crowns = crownsFor(3000).collect().toIndexedSeq // one region
-    val ds = spark.createDataset(crowns)
-    val distributed = CrownOps.merge(spark,
-      CrownOps.nms(spark, ds, 0.7), confThr = 0.3, iouThr = 0.5)
-      .collect()
-
-    // golden: same ops run purely locally
-    val golden = Seq(CrownOps.ClassCanopy, CrownOps.ClassTree).flatMap { cls =>
-      val clsCrowns = crowns.filter(_.classIdx == cls)
-      val kept = CrownOps.nmsLocal(clsCrowns, 0.7)
-      CrownOps.mergeLocal(kept, cls, 0.3, 0.5).map(inst => (cls, inst))
+    import CrownOps.{Crown, MergedCrown}
+    val jobConf = CrownJob.Conf(2 * GeoOps.PagesPerRegion,
+      java.nio.file.Files.createTempDirectory("wh_parity").toString)
+    import jobConf.{nmsIou, confThr, mergeIou}
+    def fused(crowns: Seq[Crown]): Seq[MergedCrown] =
+      CrownOps.nmsMerge(spark, spark.createDataset(crowns), nmsIou, confThr, mergeIou)
+        .collect().toSeq
+    def jobMerged(): Seq[MergedCrown] = {
+      CrownJob.run(spark, jobConf)
+      IcebergLite.read(spark, jobConf.warehouse, CrownJob.StageMerged).get
+        .as[MergedCrown].collect().toSeq
     }
-
-    assert(distributed.length === golden.length)
-    val dKeys = distributed.map(m => (m.classIdx, m.memberIds.toList, m.score,
-      m.minX, m.minY, m.maxX, m.maxY)).toSet
-    val gKeys = golden.map { case (cls, inst) => (cls, inst.ids.sorted,
-      CrownOps.median(inst.scores), inst.bbox.minX, inst.bbox.minY,
-      inst.bbox.maxX, inst.bbox.maxY) }.toSet
-    assert(dKeys === gKeys)
+    val single = crownsFor(3000).collect().toSeq
+    val small = crownsFor(2000).collect().toSeq
+    // (name, regions in the input, input crowns, their distributed merge)
+    val cases = Seq(
+      ("3000 pages", 1, single, fused(single)),
+      ("2000 pages", 1, small, fused(small)),
+      ("CrownJob merged stage", 2, crownsFor(jobConf.nPages).collect().toSeq,
+        jobMerged()))
+    cases.foreach { case (name, regions, crowns, merged) =>
+      // golden: nmsLocal then mergeLocal per (region, class), on the driver
+      val byGroup = crowns.groupBy(c => (c.region, c.classIdx))
+      assert(byGroup.keys.map(_._1).toSet.size === regions, name)
+      val golden = byGroup.toSeq.flatMap { case ((region, cls), cs) =>
+        CrownOps.mergeLocal(CrownOps.nmsLocal(cs.toIndexedSeq, nmsIou), cls,
+          confThr, mergeIou).map(inst => (region, cls, inst.ids.sorted,
+          CrownOps.median(inst.scores), inst.bbox.minX, inst.bbox.minY,
+          inst.bbox.maxX, inst.bbox.maxY))
+      }
+      assert(merged.length === golden.length, name)
+      assert(merged.map(m => (m.region, m.classIdx, m.memberIds.toList, m.score,
+        m.minX, m.minY, m.maxX, m.maxY)).toSet === golden.toSet, name)
+    }
   }
 
   test("driver smoke gate: entry() returns rows") {
@@ -113,15 +127,6 @@ class PipelineSpec extends AnyFunSuite {
       (knobs.map(_._1) :+ "nmsIou").foreach(k =>
         spark.conf.unset(s"spark.graft.crown.$k"))
     }
-  }
-
-  test("fused nmsMerge equals nms-then-merge") {
-    val ds = crownsFor(2000)
-    val sep = CrownOps.merge(spark, CrownOps.nms(spark, ds, 0.7), 0.3, 0.5).collect()
-    val fused = CrownOps.nmsMerge(spark, ds, 0.7, 0.3, 0.5).collect()
-    def key(m: CrownOps.MergedCrown) =
-      (m.region, m.classIdx, m.memberIds.toList, m.score, m.minX, m.maxY)
-    assert(sep.map(key).toSet === fused.map(key).toSet)
   }
 
   test("NMS drops cross-tile duplicates: no page survives twice per class") {

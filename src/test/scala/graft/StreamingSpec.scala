@@ -8,8 +8,7 @@ import graft.streaming.StreamingIngest
 import graft.tables.{IcebergLite, PagesGen}
 
 /** Structured-Streaming façade: micro-batch ingest through the same
-  * operators, committing IcebergLite snapshots; watermarked windowed
-  * aggregation. */
+  * operators, committing IcebergLite snapshots; streaming dedup. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
 
@@ -42,31 +41,6 @@ class StreamingSpec extends AnyFunSuite {
     q2.awaitTermination(60000)
     assert(IcebergLite.read(spark, wh, "stream_assign").get.count() ===
       graft.operators.GeoOps.assignTiles(PagesGen.pages(spark, 3000)).count())
-  }
-
-  test("mapGroupsWithState running cell counts accumulate across batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
-    val pages = StreamingIngest.pagesFromIndices(mem.toDF())
-    val q = StreamingIngest.runningCellCounts(pages)
-      .toDF("cell", "total", "delta")
-      .writeStream.format("memory").queryName("running_counts")
-      .outputMode("update").start()
-    mem.addData(0L until 500L: _*)
-    q.processAllAvailable()
-    val t1 = spark.sql("SELECT sum(delta) FROM running_counts").head().getLong(0)
-    assert(t1 === 500L)
-    mem.addData(500L until 1000L: _*)
-    q.processAllAvailable()
-    q.stop()
-    // totals are cumulative: the latest total per cell sums to 1000
-    val latest = spark.sql(
-      """SELECT sum(total) FROM (
-        |  SELECT cell, max(total) AS total FROM running_counts GROUP BY cell)""".stripMargin)
-      .head().getLong(0)
-    assert(latest === 1000L)
-    assert(spark.sql("SELECT sum(delta) FROM running_counts").head().getLong(0) === 1000L)
   }
 
   test("streaming exact dedup: first-seen wins within and across batches") {
@@ -312,20 +286,5 @@ class StreamingSpec extends AnyFunSuite {
     withRocksDbState {
       ttlScenario("stream_dedup_ttl_rocks", ttlMs = 8000L, triggerMs = 500L)
     }
-  }
-
-  test("watermarked windowed cell counts aggregate by event time") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
-    val pages = StreamingIngest.pagesFromIndices(mem.toDF())
-    val agg = StreamingIngest.cellCountsWindowed(pages, "1 minute", "2 minutes")
-    val q = agg.writeStream.format("memory").queryName("cell_counts")
-      .outputMode("update").start()
-    mem.addData(0L until 1000L: _*)
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.sql("SELECT sum(cnt) FROM cell_counts").head().getLong(0)
-    assert(rows === 1000L)
   }
 }
