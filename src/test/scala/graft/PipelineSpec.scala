@@ -68,6 +68,21 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("fused nmsMerge equals nms-then-merge") {
+    // staged path: distributed nms, then mergeLocal per (region, class)
+    val ds = crownsFor(2000)
+    val sep = CrownOps.nms(spark, ds, 0.7).collect().toSeq
+      .groupBy(c => (c.region, c.classIdx)).toSeq.flatMap { case ((region, cls), cs) =>
+        CrownOps.mergeLocal(cs.toIndexedSeq, cls, 0.3, 0.5).map(inst =>
+          (region, cls, inst.ids.sorted, CrownOps.median(inst.scores),
+            inst.bbox.minX, inst.bbox.maxY))
+      }
+    val fused = CrownOps.nmsMerge(spark, ds, 0.7, 0.3, 0.5).collect()
+      .map(m => (m.region, m.classIdx, m.memberIds.toList, m.score, m.minX, m.maxY))
+    assert(fused.length === sep.length)
+    assert(fused.toSet === sep.toSet)
+  }
+
   test("driver smoke gate: entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
