@@ -69,7 +69,7 @@ object Bench {
     // `graft.bench.parallelism` overrides defaultParallelism: right
     // after a cluster session starts, executors may not have
     // registered yet and defaultParallelism reads its 2-core floor —
-    // SubmitBench sets the override from the master string so even the
+    // Measure sets the override from the master string so even the
     // first warm-up runs at the cluster's real width
     val par = spark.conf.getOption("graft.bench.parallelism").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
@@ -116,8 +116,8 @@ object Bench {
     else None
   }
 
-  /** The local bench session — ONE recipe shared with [[StressBench]]
-    * so both artifacts measure the same engine configuration (a conf
+  /** The local bench session — ONE recipe shared with [[Measure]]
+    * so both mains measure the same engine configuration (a conf
     * fix applied here cannot silently leave the stress numbers running
     * different settings). */
   def localSession(cores: Int, shufflePartitions: Int): SparkSession = {

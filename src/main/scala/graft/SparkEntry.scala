@@ -21,24 +21,22 @@ object SparkEntry {
 
   private def t(dir: String, name: String) = s"$dir/$name.parquet"
 
-  /** Scratch dir for the file-round-trip queries (gtiff/shp): prefer
-    * tmpfs — raster_geotiff_rt showed a 1.5× quiet-run band (3.5-5.3 s,
-    * rounds 5-6) on unchanged code because /tmp page-cache/writeback
-    * state varies between runs; /dev/shm makes the IO leg
-    * deterministic (same precedent as the Bench shuffle dir). The
-    * payload is ≤ 10 MB at sf0.1. Stale siblings from earlier runs in
-    * the SAME parent are removed first (> 30 min old — a lazily-read
-    * DataFrame from the current process may still hold a younger one),
-    * so repeated bench/verify runs can't accumulate in tmpfs. */
-  private def scratchDir(prefix: String): String = {
-    import java.nio.file.{Files, Paths}
-    val parent = Bench.shmRoot match {
-      case Some(shm) =>
-        val p = shm.resolve("graft-scratch")
-        Files.createDirectories(p)
-        p
-      case None => Paths.get(System.getProperty("java.io.tmpdir"))
-    }
+  /** Scratch dir for the file-round-trip queries (gtiff/shp) under
+    * `<root>/graft-scratch`. The root prefers tmpfs: raster_geotiff_rt
+    * showed a 1.5× quiet-run band (3.5-5.3 s, rounds 5-6) on unchanged
+    * code because /tmp page-cache/writeback state varies between runs;
+    * /dev/shm makes the IO leg deterministic (same precedent as the
+    * Bench shuffle dir). The payload is ≤ 10 MB at sf0.1. Stale
+    * siblings from earlier runs are removed first (> 30 min old — a
+    * lazily-read DataFrame from the current process may still hold a
+    * younger one), so repeated bench/verify runs can't accumulate in
+    * tmpfs. Only `graft-scratch` is cleaned, never the shared root. */
+  private[graft] def scratchDir(
+      prefix: String,
+      root: java.nio.file.Path = Bench.shmRoot.getOrElse(
+        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))): String = {
+    import java.nio.file.Files
+    val parent = Files.createDirectories(root.resolve("graft-scratch"))
     val cutoff = System.currentTimeMillis() - 30 * 60 * 1000L
     val siblings = Files.list(parent)
     try {

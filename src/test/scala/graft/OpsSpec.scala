@@ -507,7 +507,7 @@ class OpsSpec extends AnyFunSuite {
   }
   test("PagesGen url/md5 rewrite is byte-identical to the format_string + built-in md5 form") {
     // the formulation projectColumns replaced, over an i range that
-    // crosses the %08d 8-digit boundary (StressBench reaches i>1e8)
+    // crosses the %08d 8-digit boundary (`Measure stress` reaches i>1e8)
     val idx = (0L until 2000L) ++ Seq(99999998L, 99999999L, 100000000L, 240000000L, 987654321L)
     val base = spark.createDataset(idx).toDF("i")
     val ref = base

@@ -71,4 +71,26 @@ class QueryGoldenSpec extends AnyFunSuite {
       assert(want(name) === h, s"$name: output hash drifted")
     }
   }
+
+  test("scratchDir removes stale entries only inside graft-scratch under its root") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("scratch-root")
+    val stale = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 60 * 60 * 1000L)
+    val foreign = Files.createDirectory(root.resolve("gtiff_q_foreign"))
+    val own = Files.createDirectories(root.resolve("graft-scratch").resolve("gtiff_q_old"))
+    Files.writeString(own.resolve("t.tif"), "x")
+    Seq(foreign, own).foreach(Files.setLastModifiedTime(_, stale))
+    try {
+      val dir = java.nio.file.Paths.get(SparkEntry.scratchDir("gtiff_q", root))
+      assert(Files.isDirectory(foreign), "an entry outside graft-scratch was deleted")
+      assert(!Files.exists(own), "a stale graft-scratch entry survived")
+      assert(dir.getParent === root.resolve("graft-scratch"))
+    } finally {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => { Files.delete(p); () })
+      finally walk.close()
+    }
+  }
 }
