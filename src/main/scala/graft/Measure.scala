@@ -25,9 +25,7 @@ import org.apache.spark.sql.execution.ExplainMode
   *    evidence. `tools/scaling_submit.sh` submits it at
   *    `local-cluster[1,C]` and `[4,C]` and prints the efficiency.
   *
-  * The session comes from the submit environment when `spark.master` is
-  * set, else from [[Bench.localSession]] at `SPARK_GRAFT_CPUS` cores
-  * (default: the available processors). Each JSON line ends with
+  * The session comes from [[session]]. Each JSON line ends with
   * `cores`, `loadavg_start`, `loadavg_end` and `steal_pct`.
   */
 object Measure {
@@ -39,21 +37,27 @@ object Measure {
 
   def main(args: Array[String]): Unit = {
     val mode = parse(args.toSeq)
-    val spark =
-      if (sys.props.contains("spark.master")) {
-        val s = SparkSession.builder()
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.adaptive.enabled", "true")
-          .getOrCreate()
-        s.sparkContext.setLogLevel("WARN")
-        s
-      } else {
-        val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-          .getOrElse(Runtime.getRuntime.availableProcessors)
-        Bench.localSession(cpus, cpus)
-      }
+    val spark = session()
     try mode(spark, println) finally spark.stop()
   }
+
+  /** The session of every main but the frozen [[Bench]]: the submit
+    * environment when `spark.master` is set, else [[Bench.localSession]]
+    * at `SPARK_GRAFT_CPUS` cores (default: the available processors). */
+  private[graft] def session(): SparkSession =
+    if (sys.props.contains("spark.master")) {
+      val b = SparkSession.builder()
+      // builder options beat spark-submit's --conf: fill in only what it left unset
+      Seq("spark.sql.session.timeZone" -> "UTC", "spark.sql.adaptive.enabled" -> "true")
+        .foreach { case (k, v) => if (!sys.props.contains(k)) b.config(k, v) }
+      val s = b.getOrCreate()
+      s.sparkContext.setLogLevel("WARN")
+      s
+    } else {
+      val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors)
+      Bench.localSession(cpus, cpus)
+    }
 
   /** The mode `args.head` names, bound to its arguments; it emits its
     * JSON lines through the given function. Any other first argument

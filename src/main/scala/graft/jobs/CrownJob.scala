@@ -13,11 +13,13 @@ import graft.tables.{IcebergLite, PagesGen}
   * reference lifecycle (/root/reference docs/cache.md:3-23,
   * src/tcd_pipeline/models/model.py:110-216).
   *
-  * Resume granularity = region (one reference image). `run` anti-joins
-  * pending regions against committed lineage keys, so a re-run after a
-  * crash processes exactly the missing regions and appends one more
-  * snapshot — the warm-start semantics of model.py:180-185, with
-  * exactly-once per region guaranteed by the atomic manifest swap.
+  * Resume granularity = region (one reference image). Each stage
+  * subtracts, on the driver, the regions its lineage already holds from
+  * the regions it could do, so a re-run after a crash processes exactly
+  * the missing regions and appends one more snapshot — the warm-start
+  * semantics of model.py:180-185, with exactly-once per region
+  * guaranteed by the atomic manifest swap. A stage with nothing to do
+  * reads only lineage files and runs no Spark job.
   */
 object CrownJob {
 
@@ -35,42 +37,35 @@ object CrownJob {
   val StageMerged = "merged"
   val StageStats = "stats"
 
-  /** Rows of `df` whose region has no committed lineage in `stage` yet:
-    * the resume anti-join every stage runs before it commits. */
-  private def pending(spark: SparkSession, conf: Conf, stage: String,
-                      df: DataFrame): DataFrame =
-    IcebergLite.committedKeys(spark, conf.warehouse, stage) match {
-      case Some(done) => df.join(done.withColumnRenamed("unitKey", "region"),
-        Seq("region"), "left_anti")
-      case None => df
-    }
+  /** Regions whose rows `stage` has committed, from its lineage: every
+    * stage subtracts its own from the regions it could do before it
+    * reads its input. */
+  private def committed(spark: SparkSession, conf: Conf, stage: String): Seq[Long] =
+    IcebergLite.committedKeys(spark, conf.warehouse, stage)
+      .fold(Seq.empty[Long])(_.collect().map(_.getLong(0)).toSeq)
 
   /** Synthesis stage: pending regions only. `failAfterRegions` (tests)
     * truncates the processed set to simulate a crash after k regions. */
   def runSynth(spark: SparkSession, conf: Conf): Long = {
-    val pages = GeoOps.withRegion(PagesGen.pages(spark, conf.nPages))
-    val todo = pending(spark, conf, StageCrowns, pages)
-    val limited =
-      if (conf.failAfterRegions >= 0) {
-        val keep = todo.select("region").distinct()
-          .orderBy("region").limit(conf.failAfterRegions)
-        todo.join(broadcast(keep), Seq("region"))
-      } else todo
+    val all = 0L until (conf.nPages + GeoOps.PagesPerRegion - 1) / GeoOps.PagesPerRegion
+    val todo = all.diff(committed(spark, conf, StageCrowns))
+    val limited = if (conf.failAfterRegions >= 0) todo.sorted.take(conf.failAfterRegions) else todo
     if (limited.isEmpty) return -1L
-    val assigned = GeoOps.assignTiles(limited)
-    val crowns = CrownOps.synthesize(spark, assigned, GeoOps.TileGrid.Default).toDF()
+    val pages = GeoOps.withRegion(PagesGen.pages(spark, conf.nPages))
+      .filter(col("region").isin(limited: _*))
+    val crowns = CrownOps.synthesize(spark, GeoOps.assignTiles(pages), GeoOps.TileGrid.Default).toDF()
     IcebergLite.commit(spark, conf.warehouse, StageCrowns, crowns, "region")
   }
 
-  /** Merge stage over all committed crowns (regions not yet merged):
-    * the same fused NMS + merge as `predict`, one shuffle. */
+  /** Merge stage over the crowns of regions not yet merged: the same
+    * fused NMS + merge as `predict`, one shuffle. */
   def runMerge(spark: SparkSession, conf: Conf): Long = {
     import spark.implicits._
-    val crowns = IcebergLite.read(spark, conf.warehouse, StageCrowns)
-      .getOrElse(return -1L)
-    val todo = pending(spark, conf, StageMerged, crowns)
+    val todo = committed(spark, conf, StageCrowns).diff(committed(spark, conf, StageMerged))
     if (todo.isEmpty) return -1L
-    val merged = CrownOps.nmsMerge(spark, todo.as[CrownOps.Crown], conf.nmsIou,
+    val crowns = IcebergLite.read(spark, conf.warehouse, StageCrowns).get
+      .filter(col("region").isin(todo: _*))
+    val merged = CrownOps.nmsMerge(spark, crowns.as[CrownOps.Crown], conf.nmsIou,
       conf.confThr, conf.mergeIou, emitGeom = conf.emitGeom).toDF()
     IcebergLite.commit(spark, conf.warehouse, StageMerged, merged, "region")
   }
@@ -79,11 +74,11 @@ object CrownJob {
     * (region, class) crown counts, score stats, and area totals —
     * committed with lineage like every other stage. */
   def runStats(spark: SparkSession, conf: Conf): Long = {
-    val merged = IcebergLite.read(spark, conf.warehouse, StageMerged)
-      .getOrElse(return -1L)
-    val todo = pending(spark, conf, StageStats, merged)
+    val todo = committed(spark, conf, StageMerged).diff(committed(spark, conf, StageStats))
     if (todo.isEmpty) return -1L
-    val stats = todo.groupBy(col("region"), col("classIdx"))
+    val stats = IcebergLite.read(spark, conf.warehouse, StageMerged).get
+      .filter(col("region").isin(todo: _*))
+      .groupBy(col("region"), col("classIdx"))
       .agg(count(lit(1)).as("n_crowns"),
         sum(col("area")).as("total_area"),
         avg(col("score")).as("mean_score"),
@@ -130,30 +125,12 @@ object CrownJob {
   }
 
   /** spark-submit entry: `spark-submit --class graft.jobs.CrownJob
-    * <jar> [nPages] [warehouse]`. The master and parallelism knobs are
-    * taken from the SUBMIT environment when present (spark-submit sets
-    * `spark.master` as a system property) — the local[] fallback is
-    * only for bare `java`/sbt runs, so the same main drives a real
-    * multi-executor cluster unchanged. */
+    * <jar> [nPages] [warehouse]`, on the session [[graft.Measure.session]]
+    * builds. */
   def main(args: Array[String]): Unit = {
     val nPages = args.headOption.map(_.toLong).getOrElse(6000L)
     val warehouse = if (args.length > 1) args(1) else "/tmp/graft_warehouse"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-    // never override the submit environment: builder options beat
-    // sys-prop-loaded conf, so EVERY default here is guarded
-    if (!sys.props.contains("spark.sql.session.timeZone"))
-      builder.config("spark.sql.session.timeZone", "UTC")
-    if (!sys.props.contains("spark.master")) {
-      // bare-java fallback only; under spark-submit the shuffle width
-      // comes from the submit conf or Spark's default + AQE coalescing
-      // (pinning it to a driver-local env var would under-decompose a
-      // big cluster)
-      builder.master(s"local[$cpus]").config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", cpus)
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Measure.session()
     run(spark, confFrom(spark, nPages, warehouse))
     println(s"merged rows: ${mergedResult(spark, warehouse).map(_.count()).getOrElse(0L)}")
     spark.stop()

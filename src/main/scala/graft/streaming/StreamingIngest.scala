@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.GeoOps
-import graft.tables.{IcebergLite, PagesGen}
+import graft.tables.IcebergLite
 
 /** Structured-Streaming façade over the batch engine. The reference is
   * batch-with-checkpointing (SURVEY.md §2.10 — no event-time semantics
@@ -16,18 +16,6 @@ import graft.tables.{IcebergLite, PagesGen}
   * prescribes.
   */
 object StreamingIngest {
-
-  /** Turn a stream of page indices into the deterministic pages schema
-    * (same closed-form columns as the batch generator — one code path
-    * would drift, so both call PagesGen's column logic via a join-free
-    * projection). */
-  def pagesFromIndices(indices: DataFrame): DataFrame = {
-    // Reuse the batch generator expressions by re-deriving columns from i.
-    val df = indices.toDF("i")
-    val spark = indices.sparkSession
-    // PagesGen.pages is range-based; mirror its projections on a stream:
-    PagesGen.projectColumns(df)
-  }
 
   /** Micro-batch ingest: per batch, tile-assign and commit one snapshot
     * (stage "stream_assign") with per-region lineage. Returns the

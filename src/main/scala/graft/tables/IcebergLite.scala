@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Minimal Iceberg-style table layer over Parquet, implemented in-repo
   * (no Iceberg jar in this environment — SURVEY.md header): immutable
@@ -14,16 +15,17 @@ import org.apache.spark.sql.functions._
   * docs/cache.md:21-47) with table semantics:
   *
   *  - `commit` appends a snapshot (set of parquet files written by one
-  *    stage run) plus per-partition lineage metrics rows;
+  *    stage run) plus a lineage file: rows per unit key, tallied from
+  *    the written files;
   *  - `read` unions all live snapshots of a stage (append model — the
   *    reference caches are append-only too);
   *  - readers never see a half-written snapshot: data lands under
   *    `data/<stage>/snap-<id>/`, and only the manifest rename makes it
-  *    visible — a crash mid-write leaves the previous manifest intact
-  *    (mirrors Spark's task-commit + the reference's "cache survives
-  *    process death", scripts/predict.py:36-38);
-  *  - `committedKeys` powers resume: the driver anti-joins pending work
-  *    units against keys recorded in lineage
+  *    (and its lineage file) visible — a crash mid-write leaves the
+  *    previous manifest intact (mirrors Spark's task-commit + the
+  *    reference's "cache survives process death", scripts/predict.py:36-38);
+  *  - `committedKeys` powers resume: the driver subtracts the keys
+  *    recorded in lineage from the pending work units
   *    (replaces models/model.py:148-185 warm-start skip).
   *
   * Layout:
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * root/
   *   manifest.json                    # {"snapshots":[...]} atomic swap
   *   data/<stage>/snap-<id>/ *.parquet
-  *   lineage/<stage>/snap-<id>/ *.parquet
+  *   lineage/<stage>/snap-<id>.jsonl  # {"unitKey":k,"rowCount":n} per key
   * }}}
   */
 object IcebergLite {
@@ -44,11 +46,6 @@ object IcebergLite {
   final case class Snapshot(id: Long, stage: String, rowCount: Long, wallMs: Long,
                             key: Long = -1L,
                             keyMin: Long = Long.MinValue, keyMax: Long = Long.MaxValue)
-
-  /** Lineage grain: one row per (work unit, spark partition). */
-  final case class LineageRow(stage: String, snapshotId: Long, unitKey: Long,
-                              partitionId: Int, rowCount: Long, bytes: Long,
-                              wallMs: Long)
 
   private def manifestPath(root: String): Path = Paths.get(root, "manifest.json")
 
@@ -245,17 +242,17 @@ object IcebergLite {
     } catch { case _: java.io.IOException => }
   }
 
-  /** Write `df` as a new snapshot of `stage`, recording per-(unitKey,
-    * partition) lineage metrics. `unitKeyCol` is the resume granularity
-    * (e.g. region id, tile id). Returns the snapshot id.
+  /** Write `df` as a new snapshot of `stage`, recording rows per unit
+    * key as its lineage. `unitKeyCol` is the resume granularity (e.g.
+    * region id, tile id) and must be non-null. Returns the snapshot id.
     *
     * Concurrency contract: MULTI-WRITER SAFE. Snapshot ids are
     * reserved via exclusive marker-file creation (no two writers share
-    * a data dir), and the manifest swap is a CAS loop: rename, re-read,
-    * verify own id present, merge-and-retry on loss — so concurrent
-    * commits are all visible afterwards (a real Iceberg catalog CASes
-    * the manifest pointer the same way). The reference's cache is
-    * single-process (cache.py:46-91); this strengthens it. */
+    * a data dir or lineage file), and the manifest swap is one
+    * read-merge-rename under the manifest lock ([[commitManifest]]),
+    * decided inside the critical section and never retried — so
+    * concurrent commits are all visible afterwards. The reference's
+    * cache is single-process (cache.py:46-91); this strengthens it. */
   def commit(spark: SparkSession, root: String, stage: String, df: DataFrame,
              unitKeyCol: String, idempotencyKey: Long = -1L): Long = {
     val t0 = System.nanoTime()
@@ -272,37 +269,38 @@ object IcebergLite {
     commitManifest(root, snap)
   }
 
-  /** Data + lineage parquet for one snapshot id (everything but the
+  /** Data files + lineage file for one snapshot id (everything but the
     * manifest entry — shared by [[commit]] and [[compact]]). */
   private def writeSnapshotFiles(spark: SparkSession, root: String, stage: String,
                                  snapId: Long, df: DataFrame, unitKeyCol: String,
                                  t0: Long, idempotencyKey: Long): Snapshot = {
+    import spark.implicits._
     val dataDir = s"$root/data/$stage/snap-$snapId"
     df.write.mode("overwrite").parquet(dataDir)
 
-    // lineage/metrics from the written files (ONE re-scan of the
-    // snapshot — it sees exactly what a reader will see)
-    val written = spark.read.parquet(dataDir)
-    val lineageDir = s"$root/lineage/$stage/snap-$snapId"
-    written
-      .groupBy(col(unitKeyCol).cast("long").as("unitKey"), spark_partition_id().as("partitionId"))
-      .agg(count(lit(1)).as("rowCount"))
-      .select(lit(stage).as("stage"), lit(snapId).as("snapshotId"), col("unitKey"),
-        col("partitionId"), col("rowCount"), lit(0L).as("bytes"),
-        lit((System.nanoTime() - t0) / 1000000).as("wallMs"))
-      .write.mode("overwrite").parquet(lineageDir)
-
-    // snapshot rowCount and unit-key range = one agg over the tiny
-    // lineage parquet (no extra pass over the data); the key range
-    // goes into the manifest as snapshot-level stats for readRange
-    val statsRow = spark.read.parquet(lineageDir)
-      .agg(sum(col("rowCount")), min(col("unitKey")), max(col("unitKey"))).head()
-    val rowCount = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-    val kMin = if (statsRow.isNullAt(1)) Long.MinValue else statsRow.getLong(1)
-    val kMax = if (statsRow.isNullAt(2)) Long.MaxValue else statsRow.getLong(2)
-    Snapshot(snapId, stage, rowCount, (System.nanoTime() - t0) / 1000000,
-      idempotencyKey, kMin, kMax)
+    // one job tallies rows per key over the written files, so it sees
+    // exactly what a reader will see; the given schema skips inference
+    val perTask = spark.read.schema(StructType(Seq(df.schema(unitKeyCol)))).parquet(dataDir)
+      .select(col(unitKeyCol).cast("long")).as[Long]
+      .mapPartitions { keys =>
+        val n = scala.collection.mutable.HashMap.empty[Long, Long]
+        keys.foreach(k => n(k) = n.getOrElse(k, 0L) + 1L)
+        Iterator.single(n.toMap)
+      }.collect()
+    val tally = perTask.flatten.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+    val lineageFile = lineagePath(root, stage, snapId)
+    Files.createDirectories(lineageFile.getParent)
+    Files.write(lineageFile, tally.map { case (k, n) => s"""{"unitKey":$k,"rowCount":$n}\n""" }
+      .mkString.getBytes(StandardCharsets.UTF_8))
+    // an empty snapshot keeps the sentinel (full-range) key stats
+    val keys = tally.map(_._1)
+    Snapshot(snapId, stage, tally.map(_._2).sum, (System.nanoTime() - t0) / 1000000,
+      idempotencyKey, keys.headOption.getOrElse(Long.MinValue),
+      keys.lastOption.getOrElse(Long.MaxValue))
   }
+
+  private def lineagePath(root: String, stage: String, snapId: Long): Path =
+    Paths.get(root, "lineage", stage, s"snap-$snapId.jsonl")
 
   /** Compact a stage's UNKEYED snapshots into ONE — the Iceberg
     * `rewrite_data_files` + `expire_snapshots` analogue: resume-heavy
@@ -327,11 +325,12 @@ object IcebergLite {
     *  - Time travel at ids below the compaction is EXPIRED — readAsOf
     *    there returns None/partial history, exactly like Iceberg after
     *    expire_snapshots.
-    *  - Old data/lineage dirs are deleted only when `expireData = true`
-    *    (default false): a LAZY DataFrame handle planned before the
-    *    compaction still references the old paths, and deleting them
-    *    breaks it mid-scan. Opt in when no readers hold pre-compaction
-    *    plans; orphaned dirs are invisible to all new reads either way.
+    *  - Old data dirs and lineage files are deleted only when
+    *    `expireData = true` (default false): a LAZY DataFrame handle
+    *    planned before the compaction still references the old paths,
+    *    and deleting them breaks it mid-scan. Opt in when no readers
+    *    hold pre-compaction plans; orphaned files are invisible to all
+    *    new reads either way.
     *
     * Returns the new snapshot id, or -1 if there is nothing to compact
     * (0 or 1 unkeyed snapshots) or a concurrent compact won.
@@ -363,21 +362,20 @@ object IcebergLite {
     snapId
   }
 
-  /** Recursive best-effort delete of snapshot data+lineage dirs. */
+  /** Best-effort delete of snapshot data dirs and lineage files. */
   private def deleteSnapshotDirs(root: String, stage: String, ids: Seq[Long]): Unit =
     ids.foreach { id =>
-      Seq("data", "lineage").foreach { kind =>
-        scala.util.Try {
-          val dir = Paths.get(s"$root/$kind/$stage/snap-$id")
-          if (Files.isDirectory(dir)) {
-            import scala.jdk.CollectionConverters._
-            val walk = Files.walk(dir)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-            finally walk.close()
-          }
+      scala.util.Try {
+        val dir = Paths.get(s"$root/data/$stage/snap-$id")
+        if (Files.isDirectory(dir)) {
+          import scala.jdk.CollectionConverters._
+          val walk = Files.walk(dir)
+          try walk.sorted(java.util.Comparator.reverseOrder())
+            .iterator().asScala.foreach(p => Files.deleteIfExists(p))
+          finally walk.close()
         }
       }
+      scala.util.Try(Files.deleteIfExists(lineagePath(root, stage, id)))
     }
 
   /** All live data of a stage (union of its committed snapshots). */
@@ -392,15 +390,15 @@ object IcebergLite {
   def readAsOf(spark: SparkSession, root: String, stage: String,
                asOfId: Long): Option[DataFrame] = {
     val snaps = snapshots(root).filter(s => s.stage == stage && s.id <= asOfId)
-    readSnaps(spark, root, "data", stage, snaps)
+    readSnaps(spark, root, stage, snaps)
   }
 
-  /** Union-read one subdir of a snapshot set (shared by readAsOf /
-    * readRange / lineage — the path layout lives in one place). */
-  private def readSnaps(spark: SparkSession, root: String, subdir: String,
+  /** Union-read the data of a snapshot set (shared by readAsOf /
+    * readRange — the path layout lives in one place). */
+  private def readSnaps(spark: SparkSession, root: String,
                         stage: String, snaps: Seq[Snapshot]): Option[DataFrame] =
     if (snaps.isEmpty) None
-    else Some(spark.read.parquet(snaps.map(s => s"$root/$subdir/$stage/snap-${s.id}"): _*))
+    else Some(spark.read.parquet(snaps.map(s => s"$root/data/$stage/snap-${s.id}"): _*))
 
   /** Range read with SNAPSHOT skipping (Iceberg manifest-stats
     * pruning): only snapshots whose recorded [keyMin, keyMax] overlaps
@@ -414,16 +412,39 @@ object IcebergLite {
     // stats — "no stats" must not read as "contains every key"
     val snaps = snapshots(root).filter(s =>
       s.stage == stage && s.rowCount > 0 && s.keyMax >= lo && s.keyMin <= hi)
-    readSnaps(spark, root, "data", stage, snaps)
+    readSnaps(spark, root, stage, snaps)
       .map(_.filter(col(unitKeyCol) >= lo && col(unitKeyCol) <= hi))
   }
 
-  /** Lineage rows of a stage across snapshots. */
-  def lineage(spark: SparkSession, root: String, stage: String): Option[DataFrame] =
-    readSnaps(spark, root, "lineage", stage, snapshots(root).filter(_.stage == stage))
+  /** Lineage of a stage's committed snapshots, as a local DataFrame of
+    * (stage, snapshotId, unitKey, rowCount). */
+  def lineage(spark: SparkSession, root: String, stage: String): Option[DataFrame] = {
+    import spark.implicits._
+    lineageRows(root, stage).map(_.toDF("stage", "snapshotId", "unitKey", "rowCount"))
+  }
 
-  /** Distinct committed work-unit keys of a stage — the resume anti-join
-    * side. */
-  def committedKeys(spark: SparkSession, root: String, stage: String): Option[DataFrame] =
-    lineage(spark, root, stage).map(_.select(col("unitKey")).distinct())
+  /** Distinct committed work-unit keys of a stage, as a local DataFrame
+    * (collecting it runs no Spark job) — what resume subtracts. */
+  def committedKeys(spark: SparkSession, root: String, stage: String): Option[DataFrame] = {
+    import spark.implicits._
+    lineageRows(root, stage).map(_.map(_._3).distinct.toDF("unitKey"))
+  }
+
+  /** Read on the driver from the lineage files that manifest entries
+    * name; None when the stage has no snapshot. A committed snapshot
+    * without its file fails loudly: read as "no keys", it would make
+    * resume redo that snapshot's units and duplicate their rows. */
+  private def lineageRows(root: String, stage: String): Option[Seq[(String, Long, Long, Long)]] = {
+    val snaps = snapshots(root).filter(_.stage == stage)
+    val line = """\{"unitKey":(-?\d+),"rowCount":(\d+)\}""".r
+    if (snaps.isEmpty) None
+    else Some(snaps.flatMap { s =>
+      val p = lineagePath(root, stage, s.id)
+      if (!Files.isRegularFile(p))
+        throw new IllegalStateException(s"snapshot ${s.id} of stage $stage at $root " +
+          s"has no lineage file $p")
+      line.findAllMatchIn(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+        .map(m => (stage, s.id, m.group(1).toLong, m.group(2).toLong))
+    })
+  }
 }

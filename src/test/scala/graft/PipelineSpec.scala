@@ -1,6 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.graft.SchedulerAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CrownOps, GeoOps}
@@ -224,6 +228,79 @@ class PipelineSpec extends AnyFunSuite {
     val after = IcebergLite.readRange(spark, root, "s", "region", 12, 15).get
     assert(after.inputFiles.forall(_.contains("snap-2")),
       "empty snapshot leaked into the pruned file list")
+  }
+
+  /** Spark jobs launched while `body` runs, counted by a listener. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    SchedulerAccess.drain(sc)
+    sc.addSparkListener(l)
+    try { body; SchedulerAccess.drain(sc); jobs.get } finally sc.removeSparkListener(l)
+  }
+
+  test("IcebergLite commit launches at most 2 jobs; a no-op CrownJob.run launches none") {
+    val wh = Files.createTempDirectory("wh_jobs").toString
+    val conf = CrownJob.Conf(GeoOps.PagesPerRegion + 500, wh) // 2 regions
+    CrownJob.run(spark, conf)
+    val crowns = IcebergLite.read(spark, wh, CrownJob.StageCrowns).get.localCheckpoint()
+    val root = Files.createTempDirectory("iceb_jobs").toString
+    val commitJobs = jobsOf(IcebergLite.commit(spark, root, "c", crowns, "region"))
+    assert(commitJobs <= 2, s"commit launched $commitJobs jobs")
+    assert(IcebergLite.read(spark, root, "c").get.count() === crowns.count())
+    val snaps = IcebergLite.snapshots(wh)
+    assert(jobsOf(CrownJob.run(spark, conf)) === 0)
+    assert(IcebergLite.snapshots(wh) === snaps)
+  }
+
+  test("IcebergLite lineage conserves rows over multi-key and empty commits") {
+    val root = Files.createTempDirectory("iceb_conserve").toString
+    val multi = spark.range(1000).toDF("id")
+      .withColumn("region", (col("id") * 7) % 13 - 3).repartition(5)
+    val inputs = Seq(multi, multi.filter(col("id") < 0), multi.filter(col("region") === 4))
+    val ids = inputs.map(IcebergLite.commit(spark, root, "s", _, "region"))
+    val snaps = IcebergLite.snapshots(root)
+    val lin = IcebergLite.lineage(spark, root, "s").get
+      .select("snapshotId", "unitKey", "rowCount").as[(Long, Long, Long)].collect()
+    inputs.zip(ids).foreach { case (df, id) =>
+      val snap = snaps.find(_.id == id).get
+      val want = df.groupBy("region").count().as[(Long, Long)].collect().toMap
+      assert(lin.filter(_._1 == id).map(r => r._2 -> r._3).toMap === want, s"snapshot $id")
+      assert(snap.rowCount === want.values.sum && snap.rowCount === df.count())
+      val stats = if (want.isEmpty) (Long.MinValue, Long.MaxValue)
+        else (want.keys.min, want.keys.max)
+      assert((snap.keyMin, snap.keyMax) === stats, s"snapshot $id")
+    }
+    val data = IcebergLite.read(spark, root, "s").get
+    assert(lin.map(_._3).sum === data.count())
+    assert(IcebergLite.committedKeys(spark, root, "s").get.as[Long].collect().sorted.toSeq ===
+      data.select("region").distinct().as[Long].collect().sorted.toSeq)
+  }
+
+  test("IcebergLite lineage: only manifest-named files count; a missing one fails loudly") {
+    val wh = Files.createTempDirectory("wh_sidecar").toString
+    val conf = CrownJob.Conf(2 * GeoOps.PagesPerRegion, wh)
+    CrownJob.runSynth(spark, conf.copy(failAfterRegions = 1))
+    // a lineage file whose snapshot never reached the manifest claims region 1
+    Files.write(Paths.get(wh, "lineage", CrownJob.StageCrowns, "snap-99.jsonl"),
+      "{\"unitKey\":1,\"rowCount\":5}\n".getBytes("UTF-8"))
+    def keys(stage: String) =
+      IcebergLite.committedKeys(spark, wh, stage).get.as[Long].collect().toSet
+    assert(keys(CrownJob.StageCrowns) === Set(0L))
+    assert(IcebergLite.lineage(spark, wh, CrownJob.StageCrowns).get
+      .filter(col("snapshotId") === 99).count() === 0)
+    CrownJob.run(spark, conf)
+    assert(keys(CrownJob.StageCrowns) === Set(0L, 1L))
+    assert(keys(CrownJob.StageStats) === Set(0L, 1L))
+    // a committed snapshot without its lineage file is not "no keys"
+    val first = IcebergLite.snapshots(wh).head
+    Files.delete(Paths.get(wh, "lineage", first.stage, s"snap-${first.id}.jsonl"))
+    val e = intercept[IllegalStateException](IcebergLite.committedKeys(spark, wh, first.stage))
+    assert(e.getMessage.contains(s"snapshot ${first.id} "))
+    intercept[IllegalStateException](CrownJob.run(spark, conf))
   }
 
   test("resume: crash after k regions, re-run, exactly-once per region") {

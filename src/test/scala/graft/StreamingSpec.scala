@@ -16,7 +16,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[Long]
-    val pages = StreamingIngest.pagesFromIndices(mem.toDF())
+    val pages = PagesGen.projectColumns(mem.toDF().toDF("i"))
     val wh = java.nio.file.Files.createTempDirectory("stream_wh").toString
     val cp = java.nio.file.Files.createTempDirectory("stream_cp").toString
 
@@ -32,8 +32,10 @@ class StreamingSpec extends AnyFunSuite {
     val streamSet = assigned.select("i", "tile_id").collect().map(_.toString()).toSet
     val batchSet = batch.collect().map(_.toString()).toSet
     assert(streamSet === batchSet)
-    // lineage recorded per region
-    assert(IcebergLite.committedKeys(spark, wh, "stream_assign").get.count() >= 1)
+    // lineage records exactly the regions of the ingested pages
+    assert(IcebergLite.committedKeys(spark, wh, "stream_assign").get
+      .collect().map(_.getLong(0)).toSet ===
+      (0L until 2000L).map(_ / graft.operators.GeoOps.PagesPerRegion).toSet)
 
     // second increment appends a new snapshot, no reprocessing of batch 1
     mem.addData(2000L until 3000L: _*)
