@@ -1,10 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.geom.Geom
 import graft.grid.{CellIndex, TileGridSpec}
@@ -116,45 +119,138 @@ object DotKernel {
   }
 }
 
-/** Static kernel behind [[Md5Fast]]. */
-object HashKernels {
-  private val tl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-  private val Hex = "0123456789abcdef".getBytes("US-ASCII")
+/** Static kernel behind [[PagesColumn]]: the pages generator's url,
+  * lang and text strings, each written once into one `byte[]` of exact
+  * size — byte-identical to the column formulation `PagesGen.duckdbSql`
+  * specifies (`printf` zero padding, the i%20 lang CASE,
+  * `repeat(substr(md5(url), 1, 8) || ' ', 1 + i % 7) || md5(url)`).
+  * Padding follows Spark's `lpad` of the decimal string, so a negative
+  * `i` pads before its minus sign ("00-5"). */
+object PagesKernel {
+  /** The eight languages as a frequency table on `i % 20` (en-heavy,
+    * web-like); a negative `i` is 'en' like the CASE's first branch. */
+  private val Langs: Array[String] =
+    Array.fill(10)("en") ++ Array.fill(3)("de") ++ Array.fill(2)("fr") ++
+      Array("es", "zh", "ru", "pt", "ja")
 
-  /** Lowercase-hex MD5 — byte-identical to commons-codec's
-    * `DigestUtils.md5Hex` (the built-in `md5` expression's kernel),
-    * but the MessageDigest is thread-local instead of
-    * `MessageDigest.getInstance("MD5")` per row. */
-  def md5Hex(bytes: Array[Byte]): org.apache.spark.unsafe.types.UTF8String = {
-    val d = tl.get()
-    d.reset()
-    val h = d.digest(bytes)
-    val out = new Array[Byte](32)
-    var i = 0
-    while (i < 16) {
-      out(2 * i) = Hex((h(i) >> 4) & 0xf)
-      out(2 * i + 1) = Hex(h(i) & 0xf)
-      i += 1
+  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
+  private val LangBytes = Langs.map(ascii)
+  private val LangUtf8 = LangBytes.map(UTF8String.fromBytes)
+  private val UrlHead = ascii("https://host-")
+  private val UrlMid = ascii(".example/page-")
+  private val TextUrl = ascii("url=")
+  private val TextLang = ascii(" lang=")
+  private val TextBody = ascii(" body=")
+  private val Hex = ascii("0123456789abcdef")
+
+  private def langIndex(i: Long): Int = math.max(0, (i % 20).toInt)
+
+  def lang(i: Long): UTF8String = LangUtf8(langIndex(i))
+
+  private val Pow10 = Array.iterate(10L, 18)(_ * 10) // 10 .. 10^18
+
+  /** Characters of `v` in decimal, sign included. */
+  private def decLen(v: Long): Int =
+    if (v == Long.MinValue) 20
+    else {
+      val a = math.abs(v)
+      var n = 1
+      while (n < 19 && a >= Pow10(n - 1)) n += 1
+      if (v < 0) n + 1 else n
     }
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(out)
+
+  private def put(buf: Array[Byte], pos: Int, src: Array[Byte]): Int = {
+    System.arraycopy(src, 0, buf, pos, src.length)
+    pos + src.length
+  }
+
+  /** `v` in decimal, left-padded with '0' to `width`; returns the end. */
+  private def putPadded(buf: Array[Byte], pos: Int, v: Long, width: Int): Int = {
+    val n = decLen(v)
+    val end = pos + math.max(width, n)
+    java.util.Arrays.fill(buf, pos, end - n, '0'.toByte)
+    val digits = if (v < 0) n - 1 else n
+    var q = v
+    var p = end
+    while (p > end - digits) { p -= 1; buf(p) = ('0' + math.abs(q % 10)).toByte; q /= 10 }
+    if (v < 0) buf(p - 1) = '-'
+    end
+  }
+
+  private def urlLength(i: Long): Int =
+    UrlHead.length + math.max(4, decLen(i % 1000)) + UrlMid.length + math.max(8, decLen(i))
+
+  private def putUrl(buf: Array[Byte], pos: Int, i: Long): Int = {
+    val host = putPadded(buf, put(buf, pos, UrlHead), i % 1000, 4)
+    putPadded(buf, put(buf, host, UrlMid), i, 8)
+  }
+
+  def url(i: Long): UTF8String = {
+    val buf = new Array[Byte](urlLength(i))
+    putUrl(buf, 0, i)
+    UTF8String.fromBytes(buf)
+  }
+
+  /** A digest for [[text]] (no checked exception for generated Java). */
+  def newMd5(): MessageDigest = MessageDigest.getInstance("MD5")
+
+  /** `md5` is the caller's digest, reset by each call's `digest()`. */
+  def text(i: Long, md5: MessageDigest): UTF8String = {
+    val urlLen = urlLength(i)
+    val lang = LangBytes(langIndex(i))
+    val reps = math.max(0, 1 + (i % 7).toInt)
+    val buf = new Array[Byte](TextUrl.length + urlLen + TextLang.length + lang.length +
+      TextBody.length + 9 * reps + 32)
+    val urlEnd = putUrl(buf, put(buf, 0, TextUrl), i)
+    val body = put(buf, put(buf, put(buf, urlEnd, TextLang), lang), TextBody)
+    md5.update(buf, TextUrl.length, urlLen)
+    val h = md5.digest()
+    val hex = buf.length - 32
+    var k = 0
+    while (k < 16) {
+      buf(hex + 2 * k) = Hex((h(k) >> 4) & 0xf)
+      buf(hex + 2 * k + 1) = Hex(h(k) & 0xf)
+      k += 1
+    }
+    var r = 0
+    while (r < reps) {
+      System.arraycopy(buf, hex, buf, body + 9 * r, 8)
+      buf(body + 9 * r + 8) = ' '
+      r += 1
+    }
+    UTF8String.fromBytes(buf)
   }
 }
 
-/** MD5 hex digest of a BINARY child — value-identical to the built-in
-  * `md5` (same digest, same lowercase hex), minus its per-row
-  * `MessageDigest.getInstance` (a provider lookup per row on the
-  * generator hot path — the pages table computes md5(url) for every
-  * row of every pages-derived query). */
-case class Md5Fast(child: Expression)
+/** One string column (`url`, `lang` or `text`) of the pages generator
+  * as a function of the BIGINT row index, through [[PagesKernel]]. The
+  * text's MD5 digest is codegen mutable state (one per generated
+  * iterator); the interpreted path keeps one per expression instance. */
+case class PagesColumn(child: Expression, column: String)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  require(Set("url", "lang", "text")(column), s"unknown pages column $column")
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "md5_fast"
-  override protected def nullSafeEval(v: Any): Any =
-    HashKernels.md5Hex(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.md5Hex($c)")
+  override def prettyName: String = s"pages_$column"
+
+  @transient private lazy val md5 = PagesKernel.newMd5()
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val i = v.asInstanceOf[Long]
+    column match {
+      case "url" => PagesKernel.url(i)
+      case "lang" => PagesKernel.lang(i)
+      case _ => PagesKernel.text(i, md5)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val args = if (column != "text") "" else ", " + ctx.addMutableState(
+      classOf[MessageDigest].getName, "md5",
+      v => s"$v = graft.functions.PagesKernel.newMd5();")
+    defineCodeGen(ctx, ev, c => s"graft.functions.PagesKernel.$column($c$args)")
+  }
+
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -31,10 +31,10 @@ package object functions {
   /** Grid y-coordinate decoded from a cell id (Morton deinterleave). */
   def cell_iy(cell: Column): Column = toCol(CellCoord(toExpr(cell), 1))
 
-  /** Built-in-md5-identical hex digest with a thread-local digest
-    * instance (see [[Md5Fast]]); accepts string or binary input like
-    * the built-in. */
-  def md5_fast(c: Column): Column = toCol(Md5Fast(toExpr(c.cast("binary"))))
+  /** The pages generator's `url`, `lang` or `text` of row index `i`
+    * (see [[PagesKernel]]); `i` is read as BIGINT. */
+  def pages_column(i: Column, column: String): Column =
+    toCol(PagesColumn(toExpr(i.cast("long")), column))
 
   /** Double dot product of two float/double array columns — the
     * codegen'd replacement of the `aggregate(zip_with(...))` HOF

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal Iceberg-style table layer over Parquet, implemented in-repo
   * (no Iceberg jar in this environment — SURVEY.md header): immutable
@@ -275,12 +275,12 @@ object IcebergLite {
                                  snapId: Long, df: DataFrame, unitKeyCol: String,
                                  t0: Long, idempotencyKey: Long): Snapshot = {
     import spark.implicits._
-    val dataDir = s"$root/data/$stage/snap-$snapId"
-    df.write.mode("overwrite").parquet(dataDir)
+    val dir = dataDir(root, stage, snapId)
+    df.write.mode("overwrite").parquet(dir)
 
     // one job tallies rows per key over the written files, so it sees
     // exactly what a reader will see; the given schema skips inference
-    val perTask = spark.read.schema(StructType(Seq(df.schema(unitKeyCol)))).parquet(dataDir)
+    val perTask = spark.read.schema(StructType(Seq(df.schema(unitKeyCol)))).parquet(dir)
       .select(col(unitKeyCol).cast("long")).as[Long]
       .mapPartitions { keys =>
         val n = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -344,7 +344,7 @@ object IcebergLite {
     val t0 = System.nanoTime()
     val oldIds = snapshots(root).filter(s => s.stage == stage && s.key < 0).map(_.id)
     if (oldIds.size < 2) return -1L
-    val union = oldIds.map(id => spark.read.parquet(s"$root/data/$stage/snap-$id"))
+    val union = oldIds.map(id => readDirs(spark, Seq(dataDir(root, stage, id))))
       .reduce(_ unionByName _).coalesce(targetFiles)
     val snapId = reserveId(root)
     val snap = writeSnapshotFiles(spark, root, stage, snapId, union, unitKeyCol,
@@ -366,7 +366,7 @@ object IcebergLite {
   private def deleteSnapshotDirs(root: String, stage: String, ids: Seq[Long]): Unit =
     ids.foreach { id =>
       scala.util.Try {
-        val dir = Paths.get(s"$root/data/$stage/snap-$id")
+        val dir = Paths.get(dataDir(root, stage, id))
         if (Files.isDirectory(dir)) {
           import scala.jdk.CollectionConverters._
           val walk = Files.walk(dir)
@@ -398,7 +398,34 @@ object IcebergLite {
   private def readSnaps(spark: SparkSession, root: String,
                         stage: String, snaps: Seq[Snapshot]): Option[DataFrame] =
     if (snaps.isEmpty) None
-    else Some(spark.read.parquet(snaps.map(s => s"$root/data/$stage/snap-${s.id}"): _*))
+    else Some(readDirs(spark, snaps.map(s => dataDir(root, stage, s.id))))
+
+  private def dataDir(root: String, stage: String, snapId: Long): String =
+    s"$root/data/$stage/snap-$snapId"
+
+  /** Parquet read of snapshot data dirs with the schema given, so no
+    * schema-inference job starts. The schema is the one Spark recorded
+    * in the first data file's footer (`org.apache.spark.sql.parquet.row.metadata`),
+    * read on the driver; with no such file Spark infers it as before. */
+  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val first = dirs.iterator.map(Paths.get(_)).filter(Files.isDirectory(_)).flatMap { d =>
+      val ls = Files.list(d)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(f => f.endsWith(".parquet") && !f.startsWith(".") && !f.startsWith("_"))
+        .toSeq.sorted.headOption.map(d.resolve)
+      finally ls.close()
+    }.nextOption()
+    val schema = first.flatMap { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    }.map(DataType.fromJson(_).asInstanceOf[StructType])
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(dirs: _*)
+  }
 
   /** Range read with SNAPSHOT skipping (Iceberg manifest-stats
     * pruning): only snapshots whose recorded [keyMin, keyMax] overlaps

@@ -6,8 +6,11 @@ import org.apache.spark.sql.functions._
 /** Deterministic synthetic Common-Crawl-style pages table
   * (`BASELINE.json.input_hint`: url STRING, warc_ts TIMESTAMP,
   * html BINARY, text STRING, lang STRING) — generated from
-  * `spark.range(n)` with pure column expressions so the whole generator
-  * whole-stage-codegens and never materializes driver-side.
+  * `spark.range(n)` with codegen'd column expressions, so the whole
+  * generator whole-stage-codegens and never materializes driver-side.
+  * `url`, `lang` and `text` come from one static kernel
+  * ([[graft.functions.PagesKernel]]) that writes each value once into a
+  * byte array of exact size; the rest are built-in expressions.
   *
   * Every column is a closed-form function of the row index `i`, chosen
   * so ANSI SQL (DuckDB `generate_series`) reproduces each value
@@ -33,14 +36,6 @@ object PagesGen {
     val sf = raw"sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1).toDouble).getOrElse(0.001)
     math.max(1L, (6000000 * sf).toLong)
   }
-
-  /** The eight languages with a CASE frequency table on i%20
-    * (en-heavy, web-like). */
-  private def langExpr = expr(
-    """CASE WHEN i % 20 < 10 THEN 'en' WHEN i % 20 < 13 THEN 'de'
-      |     WHEN i % 20 < 15 THEN 'fr' WHEN i % 20 < 16 THEN 'es'
-      |     WHEN i % 20 < 17 THEN 'zh' WHEN i % 20 < 18 THEN 'ru'
-      |     WHEN i % 20 < 19 THEN 'pt' ELSE 'ja' END""".stripMargin)
 
   /** Same logic as [[pages]], as a DuckDB SQL snippet over
     * generate_series — used by oracle queries to recompute the table
@@ -73,27 +68,12 @@ object PagesGen {
   /** The generator's column logic over any (i BIGINT) relation — shared
     * by the batch `range` path and the streaming ingest path. */
   def projectColumns(base: DataFrame): DataFrame = {
-    import graft.functions.md5_fast
-    // url: %04d/%08d zero-padding as concat+lpad — byte-identical to
-    // format_string for every i ≥ 0 (the host part is always < 1000 →
-    // 4 digits; the page part falls back to the bare decimal once it
-    // outgrows 8 digits exactly like %08d), without the per-row
-    // java.util.Formatter the format_string expression instantiates
-    // (measured ~2× the whole url projection at 24M rows). md5_fast is
-    // the built-in md5 minus its per-row MessageDigest.getInstance.
-    val pageDigits = col("i").cast("string")
+    import graft.functions.pages_column
     base
-      .withColumn("url", concat(lit("https://host-"),
-        lpad((col("i") % 1000).cast("string"), 4, "0"),
-        lit(".example/page-"),
-        when(length(pageDigits) > 8, pageDigits).otherwise(lpad(pageDigits, 8, "0"))))
+      .withColumn("url", pages_column(col("i"), "url"))
       .withColumn("warc_ts", timestamp_seconds(lit(1609459200L) + (col("i") * 37) % 31536000))
-      .withColumn("lang", langExpr)
-      .withColumn("text",
-        concat(lit("url="), col("url"), lit(" lang="), col("lang"), lit(" body="),
-          repeat(concat(substring(md5_fast(col("url")), 1, 8), lit(" ")),
-            (lit(1) + col("i") % 7).cast("int")),
-          md5_fast(col("url"))))
+      .withColumn("lang", pages_column(col("i"), "lang"))
+      .withColumn("text", pages_column(col("i"), "text"))
       .withColumn("html", encode(col("text"), "utf-8"))
       .withColumn("x",
         when(col("i") % 41 === 0, lit(640) + col("i") % 13)

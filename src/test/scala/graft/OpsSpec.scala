@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
@@ -506,22 +507,46 @@ class OpsSpec extends AnyFunSuite {
     }
   }
   test("PagesGen url/md5 rewrite is byte-identical to the format_string + built-in md5 form") {
-    // the formulation projectColumns replaced, over an i range that
-    // crosses the %08d 8-digit boundary (`Measure stress` reaches i>1e8)
-    val idx = (0L until 2000L) ++ Seq(99999998L, 99999999L, 100000000L, 240000000L, 987654321L)
-    val base = spark.createDataset(idx).toDF("i")
-    val ref = base
-      .withColumn("url_ref", format_string("https://host-%04d.example/page-%08d",
-        col("i") % 1000, col("i")))
-      .withColumn("md5_ref", md5(col("url_ref")))
-    val got = graft.tables.PagesGen.projectColumns(base)
-      .select(col("i"), col("url"), col("text"))
-      .join(ref, Seq("i"))
-      .withColumn("md5_fast_v", graft.functions.md5_fast(col("url")))
-    val bad = got.filter(col("url") =!= col("url_ref") ||
-      col("md5_fast_v") =!= col("md5_ref") ||
-      !col("text").contains(col("md5_ref"))).count()
-    assert(bad === 0L)
+    // the column formulation PagesKernel replaced, over an i range that
+    // crosses the %08d 8-digit boundary (`Measure stress` reaches i>1e8);
+    // once through whole-stage codegen (doGenCode) and once interpreted
+    // (eval). The rows come from ranges, not a local relation, so no
+    // optimizer rule folds the projection into its own interpreted
+    // evaluation.
+    val ranges = Seq((0L, 2000L), (99999998L, 100000001L), (240000000L, 240000001L),
+      (987654321L, 987654322L))
+    val base = ranges.map { case (a, b) => spark.range(a, b) }.reduce(_ union _).toDF("i")
+    val urlRef = format_string("https://host-%04d.example/page-%08d", col("i") % 1000, col("i"))
+    val langRef = expr(
+      """CASE WHEN i % 20 < 10 THEN 'en' WHEN i % 20 < 13 THEN 'de'
+        |     WHEN i % 20 < 15 THEN 'fr' WHEN i % 20 < 16 THEN 'es'
+        |     WHEN i % 20 < 17 THEN 'zh' WHEN i % 20 < 18 THEN 'ru'
+        |     WHEN i % 20 < 19 THEN 'pt' ELSE 'ja' END""".stripMargin)
+    val textRef = concat(lit("url="), urlRef, lit(" lang="), langRef, lit(" body="),
+      repeat(concat(substring(md5(urlRef), 1, 8), lit(" ")), (lit(1) + col("i") % 7).cast("int")),
+      md5(urlRef))
+    val ref = base.select(col("i"), urlRef.as("url_ref"), langRef.as("lang_ref"),
+      textRef.as("text_ref"), encode(textRef, "utf-8").as("html_ref"))
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try for ((factory, wholeStage) <- Seq("CODEGEN_ONLY" -> true, "NO_CODEGEN" -> false)) {
+      conf.set("spark.sql.codegen.factoryMode", factory)
+      conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      val got = graft.tables.PagesGen.projectColumns(base)
+        .select("i", "url", "lang", "text", "html")
+      val plan = got.queryExecution.executedPlan
+      assert(plan.toString.contains("pages_text"), s"$factory: kernel not in the plan:\n$plan")
+      assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]) === wholeStage, s"$factory:\n$plan")
+      val joined = got.join(ref, Seq("i"))
+      assert(joined.count() === ranges.map { case (a, b) => b - a }.sum, factory)
+      val bad = joined.filter(col("url") =!= col("url_ref") || col("lang") =!= col("lang_ref") ||
+        col("text") =!= col("text_ref") || col("html") =!= col("html_ref"))
+      assert(bad.count() === 0L, s"$factory: ${bad.take(3).mkString("; ")}")
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
   test("rasterizeMaxInto is pixel-identical to rasterize + max blend on random polygons") {
     import graft.geom.Raster

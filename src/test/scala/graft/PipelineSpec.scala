@@ -256,6 +256,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(IcebergLite.snapshots(wh) === snaps)
   }
 
+  test("IcebergLite read and compact start no schema-inference job") {
+    val root = Files.createTempDirectory("iceb_schema").toString
+    val df = spark.range(40).toDF("id")
+      .withColumn("region", col("id") % 3).withColumn("tag", lit("t").cast("string"))
+    (0 until 3).foreach(k => IcebergLite.commit(spark, root, "s", df.filter(col("id") % 3 === k), "region"))
+    val files = IcebergLite.snapshots(root).map(s => s"$root/data/s/snap-${s.id}")
+    lazy val read = IcebergLite.read(spark, root, "s").get
+    assert(jobsOf(read) === 0)
+    assert(jobsOf(IcebergLite.readRange(spark, root, "s", "region", 1, 1).get) === 0)
+    assert(read.schema === spark.read.parquet(files: _*).schema)
+    assert(read.count() === 40L)
+    // compaction: the rewrite's data write and tally, no read of its own
+    assert(jobsOf(IcebergLite.compact(spark, root, "s", "region")) <= 2)
+    assert(IcebergLite.read(spark, root, "s").get.count() === 40L)
+  }
+
   test("IcebergLite lineage conserves rows over multi-key and empty commits") {
     val root = Files.createTempDirectory("iceb_conserve").toString
     val multi = spark.range(1000).toDF("id")

@@ -39,6 +39,13 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Generate"), s"generator not in codegen span:\n$plan")
     // there is NO join node: tile assignment is a generator
     assert(!plan.contains("Join"), s"unexpected join:\n$plan")
+    // the generator's url/text kernel sits in the same span's projection,
+    // and nothing on the path is interpreted
+    assert(plan.linesIterator.exists(l => l.contains("*(1) Project [") &&
+      l.contains("pages_url(") && l.contains("pages_text(")), s"kernel not in *(1):\n$plan")
+    val fallbacks = assigned.queryExecution.executedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case e: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback => e }))
+    assert(fallbacks.isEmpty, s"CodegenFallback on the tile-assign path: $fallbacks")
   }
 
   test("pipJoin broadcasts the polygon side") {
