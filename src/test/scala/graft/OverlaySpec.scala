@@ -263,15 +263,21 @@ class OverlaySpec extends AnyFunSuite {
       // of the weld tolerance, so welding, not bit equality, merges the
       // corners and edges the boxes share
       val jittered = cell.map(_.map(v => v + (rnd.nextDouble() - 0.5) * 2e-7))
-      ringsHash(Seq(single, compact, Overlay.unionGroups(jittered.map(Seq(_))),
+      val outs = Seq(single, compact, Overlay.unionGroups(jittered.map(Seq(_))),
         Overlay.unionOf(a, b), Overlay.intersection(a, b), Overlay.difference(a, b),
         Overlay.unionOf(Seq(c), Seq(d)), Overlay.intersection(Seq(c), Seq(d)),
         Overlay.difference(Seq(c), Seq(d)),
-        Overlay.resolve(stars.take(1)), Overlay.resolve(stars), Overlay.resolve(compact)))
+        Overlay.resolve(stars.take(1)), Overlay.resolve(stars), Overlay.resolve(compact))
+      (ringsHash(outs), ringsHash(outs.map(canonical(_).map(_.toArray))))
     }
-    // recorded on the kernel before the pruned classification and
-    // primitive-keyed welding went in; any drift is a behaviour change
-    assert(got === Seq("61de458731502c87", "f01db04b2d801bdf", "011d2699fb08c942"))
+    // raw bytes: recorded on the kernel before the pruned classification
+    // and primitive-keyed welding went in; any drift is a behaviour change
+    assert(got.map(_._1) === Seq("61de458731502c87", "f01db04b2d801bdf", "011d2699fb08c942"))
+    // canonical ring sets (each ring from its least vertex, rings
+    // sorted): recorded on the kernel whose fragments iterated a
+    // HashSet[(Int, Int)]; the geometry itself must never drift, even
+    // where ring order and start vertices are deliberately re-pinned
+    assert(got.map(_._2) === Seq("9dc8e13119d90955", "afb2e1038c3f4653", "374e1705952ddc1e"))
   }
 
   /** Distance from (px, py) to segment (ax, ay)-(bx, by). */
