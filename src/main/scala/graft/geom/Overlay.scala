@@ -145,25 +145,39 @@ object Overlay {
     private val bh = if (yMax > yMin) (yMax - yMin) / nb else 1.0
     private def bucketOf(y: Double): Int =
       math.min(nb - 1, math.max(0, ((y - yMin) / bh).toInt))
-    private val buckets: Array[Array[Int]] = {
-      val bs = Array.fill(nb)(mutable.ArrayBuffer.empty[Int])
+    // bucket b lists edges bucketIds(bucketStart(b) until bucketStart(b + 1)),
+    // ascending: one counting pass, one filling pass
+    private val (bucketStart, bucketIds) = {
+      val start = new Array[Int](nb + 1)
       var e = 0
       while (e < m) {
         var b = bucketOf(math.min(yiA(e), yjA(e)))
         val b1 = bucketOf(math.max(yiA(e), yjA(e)))
-        while (b <= b1) { bs(b) += e; b += 1 }
+        while (b <= b1) { start(b + 1) += 1; b += 1 }
         e += 1
       }
-      bs.map(_.toArray)
+      var b = 0
+      while (b < nb) { start(b + 1) += start(b); b += 1 }
+      val fill = java.util.Arrays.copyOf(start, nb)
+      val ids = new Array[Int](start(nb))
+      e = 0
+      while (e < m) {
+        var b = bucketOf(math.min(yiA(e), yjA(e)))
+        val b1 = bucketOf(math.max(yiA(e), yjA(e)))
+        while (b <= b1) { ids(fill(b)) = e; fill(b) += 1; b += 1 }
+        e += 1
+      }
+      (start, ids)
     }
 
     def parity(px: Double, py: Double): Boolean = {
       if (m == 0 || py < yMin || py > yMax) return false
       var odd = false
-      val ids = buckets(bucketOf(py))
-      var k = 0
-      while (k < ids.length) {
-        val e = ids(k)
+      val b = bucketOf(py)
+      var k = bucketStart(b)
+      val end = bucketStart(b + 1)
+      while (k < end) {
+        val e = bucketIds(k)
         val xi = xiA(e); val yi = yiA(e)
         val xj = xjA(e); val yj = yjA(e)
         if (((yi > py) != (yj > py)) &&
@@ -216,6 +230,14 @@ object Overlay {
     i = 0
     while (i < keys.length) { order(fill(keys(i))) = i; fill(keys(i)) += 1; i += 1 }
     (start, order)
+  }
+
+  /** `values(order(k))` for every k, without boxing. */
+  private def gather(values: Array[Int], order: Array[Int]): Array[Int] = {
+    val out = new Array[Int](order.length)
+    var k = 0
+    while (k < order.length) { out(k) = values(order(k)); k += 1 }
+    out
   }
 
   private def filled(n: Int, v: Int): Array[Int] = {
@@ -357,7 +379,7 @@ object Overlay {
       }
       val groupOf = regGroup.result()
       val (start, order) = byKey(regCell.result(), nx * ny)
-      (wideB.result(), start, order.map(groupOf(_)))
+      (wideB.result(), start, gather(groupOf, order))
     }
 
     private var px, py = 0.0
@@ -399,6 +421,9 @@ object Overlay {
     val bxB = new mutable.ArrayBuilder.ofDouble
     val byB = new mutable.ArrayBuilder.ofDouble
     groups.foreach(_.foreach { r =>
+      // a ring is x, y pairs: an odd length is malformed input, and
+      // halving it would silently drop the last coordinate
+      require(r.length % 2 == 0, s"overlay ring has an odd number of coordinates (${r.length})")
       val n = r.length / 2
       if (n >= 3) {
         var i = 0
@@ -483,9 +508,8 @@ object Overlay {
     }
     val outliers = outliersB.result()
     val (cellStart, cellEdges) = {
-      val edgeOf = regEdge.result()
       val (start, order) = byKey(regCell.result(), cells.size)
-      (start, order.map(edgeOf(_)))
+      (start, gather(regEdge.result(), order))
     }
     val stamp = filled(nE, -1) // per-i dedupe of multi-cell candidates
     val cand = new mutable.ArrayBuilder.ofInt
@@ -711,21 +735,49 @@ object Overlay {
     rings.toSeq
   }
 
-  /** Stable sort of `order(from until to)` by `t(order(k))`: insertion
-    * sort for the usual handful of splits per edge, the (stable)
-    * library sort otherwise. */
-  private def sortByT(order: Array[Int], from: Int, to: Int, t: Array[Double]): Unit =
-    if (to - from <= 32) {
-      var k = from + 1
-      while (k < to) {
+  private val SortRun = 32
+
+  /** Stable sort of `order(from until to)` by `t(order(k))`, on
+    * primitives: insertion sort of each run of `SortRun` (the usual
+    * edge has a handful of splits, so one run), then bottom-up merges
+    * of runs through a scratch array. Ties keep discovery order.
+    * Every split's t is finite and inside (0, 1), where `<=` is the
+    * total order. */
+  private def sortByT(order: Array[Int], from: Int, to: Int, t: Array[Double]): Unit = {
+    var lo = from
+    while (lo < to) {
+      val hi = math.min(lo + SortRun, to)
+      var k = lo + 1
+      while (k < hi) {
         val s = order(k)
         var m = k - 1
-        while (m >= from && t(order(m)) > t(s)) { order(m + 1) = order(m); m -= 1 }
+        while (m >= lo && t(order(m)) > t(s)) { order(m + 1) = order(m); m -= 1 }
         order(m + 1) = s
         k += 1
       }
-    } else {
-      val sorted = order.slice(from, to).sortBy(t(_))(Ordering.Double.TotalOrdering)
-      System.arraycopy(sorted, 0, order, from, sorted.length)
+      lo = hi
     }
+    val n = to - from
+    if (n > SortRun) {
+      var src = java.util.Arrays.copyOfRange(order, from, to)
+      var dst = new Array[Int](n)
+      var w = SortRun
+      while (w < n) {
+        var a = 0
+        while (a < n) {
+          val mid = math.min(a + w, n); val end = math.min(a + 2 * w, n)
+          var i = a; var j = mid; var k = a
+          while (k < end) {
+            if (j == end || (i < mid && t(src(i)) <= t(src(j)))) { dst(k) = src(i); i += 1 }
+            else { dst(k) = src(j); j += 1 }
+            k += 1
+          }
+          a = end
+        }
+        val s = src; src = dst; dst = s
+        w *= 2
+      }
+      System.arraycopy(src, 0, order, from, n)
+    }
+  }
 }

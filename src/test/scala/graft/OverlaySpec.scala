@@ -417,6 +417,38 @@ class OverlaySpec extends AnyFunSuite {
     }
   }
 
+  /** Whether `e` or a cause of it is the overlay's odd-length-ring
+    * rejection. */
+  private def oddRingRejected(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("odd number of coordinates"))
+
+  test("odd-length rings fail loudly in st_union_agg and st_union; short rings are skipped") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    GraftExtensions.register(spark)
+    val square = Seq(0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 4.0)
+    val odd = Seq(5.0, 5.0, 9.0, 5.0, 9.0, 9.0, 5.0) // last vertex lacks its y
+    val agg = intercept[Exception] {
+      Seq(square, odd).toDF("poly")
+        .agg(graft.functions.UnionAggApi.st_union_agg(col("poly"))).collect()
+    }
+    assert(oddRingRejected(agg), agg.toString)
+    val pair = intercept[Exception] {
+      Seq((square, odd)).toDF("a", "b").selectExpr("st_union(a, b)").collect()
+    }
+    assert(oddRingRejected(pair), pair.toString)
+    // a ring of under 3 vertices has no area: skipped, not an error
+    val short = Seq(1.0, 1.0, 2.0, 2.0)
+    val unionArea = "aggregate(transform(u, r -> st_area(r)), 0D, (a, x) -> a + x)"
+    assert(Seq(square, short).toDF("poly")
+      .agg(graft.functions.UnionAggApi.st_union_agg(col("poly")).as("u"))
+      .selectExpr(unionArea).head().getDouble(0) === 16.0)
+    assert(Seq((square, short)).toDF("a", "b").selectExpr("st_union(a, b) AS u")
+      .selectExpr(unionArea).head().getDouble(0) === 16.0)
+  }
+
   test("SQL surface: st_union / st_intersection / st_difference / st_make_valid") {
     val spark = SparkTestBase.spark
     GraftExtensions.register(spark)
