@@ -211,9 +211,9 @@ object Overlay {
     * on a list checked for every query instead. */
   private val MaxCells = 64L
 
-  /** Grid cell (cx, cy) as one key; exact for |cx|, |cy| < 2³¹, which
-    * every grid here satisfies (cells are ≥ 1e-9 of the coordinate
-    * magnitude). */
+  /** Grid cell (cx, cy), or vertex pair, as one key; exact for |cx|,
+    * |cy| < 2³¹, which every grid here satisfies (cells are ≥ 1e-9 of
+    * the coordinate magnitude), as do vertex ids. */
   private def pack(cx: Long, cy: Long): Long = (cx << 32) | (cy & 0xFFFFFFFFL)
 
   /** Stable counting sort of `keys` (each in [0, n)): for key k,
@@ -246,8 +246,9 @@ object Overlay {
     a
   }
 
-  /** Open-addressing map from a packed cell key to a dense cell number
-    * (0, 1, 2, … in first-insertion order), with unboxed keys. */
+  /** Open-addressing map from a packed key (a grid cell, or a
+    * fragment's vertex pair) to a dense number (0, 1, 2, … in
+    * first-insertion order), with unboxed keys. */
   private final class CellTable(expected: Int) {
     private var shift = 64 - 4
     while ((1 << (64 - shift)) < 2 * expected) shift -= 1
@@ -647,11 +648,18 @@ object Overlay {
       }
     }
 
-    // ---- 4. fragments (undirected, deduped across coincident edges);
-    // the set's iteration order fixes ring order and start vertices
-    val fragSet = new mutable.HashSet[(Int, Int)]()
+    // ---- 4. fragments (undirected, deduped across coincident edges by
+    // their packed vertex pair), in first-insertion order, which fixes
+    // ring order and start vertices
+    val fragIds = new CellTable(maxV)
+    val fragPB = new mutable.ArrayBuilder.ofInt
+    val fragQB = new mutable.ArrayBuilder.ofInt
     def fragment(p: Int, q: Int): Unit =
-      if (p != q) fragSet += (if (p < q) (p, q) else (q, p))
+      if (p != q) {
+        val lo = math.min(p, q); val hi = math.max(p, q)
+        val fresh = fragIds.size
+        if (fragIds.id(pack(lo, hi)) == fresh) { fragPB.addOne(lo); fragQB.addOne(hi) }
+      }
     i = 0
     while (i < nE) {
       var p = weld(ax(i), ay(i))
@@ -675,7 +683,10 @@ object Overlay {
     // directed boundary fragments, interior on the left
     val frToB = new mutable.ArrayBuilder.ofInt
     val frFromB = new mutable.ArrayBuilder.ofInt
-    fragSet.foreach { case (p, q) =>
+    val fragP = fragPB.result(); val fragQ = fragQB.result()
+    var f = 0
+    while (f < fragP.length) {
+      val p = fragP(f); val q = fragQ(f)
       val mx = (vx(p) + vx(q)) / 2; val my = (vy(p) + vy(q)) / 2
       val dx = vx(q) - vx(p); val dy = vy(q) - vy(p)
       val len = math.sqrt(dx * dx + dy * dy)
@@ -685,6 +696,7 @@ object Overlay {
       if (inL != inR) {
         if (inL) { frFromB.addOne(p); frToB.addOne(q) } else { frFromB.addOne(q); frToB.addOne(p) }
       }
+      f += 1
     }
     val frFrom = frFromB.result(); val frTo = frToB.result()
     // outgoing fragments per vertex, ascending fragment index
