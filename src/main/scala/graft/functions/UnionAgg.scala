@@ -14,8 +14,10 @@ import graft.geom.Overlay
   *
   * Buffer = ONE flat byte array encoding a list of even-odd ring
   * GROUPS (each group is one valid polygon-with-holes description):
-  * `[nGroups][headBytes][group…]`, group = `[nRings][ring…]`,
-  * ring = `[nDoubles][doubles…]`, all little-endian. The binary buffer
+  * `[nGroups][headWord][group…]`, group = `[nRings][ring…]`,
+  * ring = `[nDoubles][doubles…]`, all little-endian. `headWord` is the
+  * first (head) group's byte length, with its top bit set when that
+  * group is a traced overlay result (a compaction's output). The binary buffer
   * is deliberate: Spark serializes aggregation buffers on every
   * partial-row update, and a nested `Seq[Seq[Seq[Double]]]` paid
   * Catalyst's recursive collection encoder per input row — measured at
@@ -27,9 +29,13 @@ import graft.geom.Overlay
   * concatenates; past `CompactAt` groups the buffer COMPACTS by
   * unioning into a single traced group — geometrically (only once the
   * uncompacted tail carries at least as many bytes as the traced
-  * head), so each ring is re-traced O(log n) times. finish() unions
-  * the remaining groups and returns traced rings (outer CCW, holes
-  * CW).
+  * head), so each ring is re-traced O(log n) times. finish() returns
+  * traced rings (outer CCW, holes CW): a buffer that is exactly one
+  * traced group is already that, so its rings are returned as stored
+  * (the flag travels in the bytes, through Spark's partial → final
+  * exchange); any other buffer is unioned once more. Groups often end
+  * that way: a cell whose rings all sat in one map partition compacts
+  * there and reaches finish() as one traced group.
   *
   * Two usage shapes, both correct: `groupBy(key).agg(...)` gets
   * map-side partial aggregation — DENSE groups (many rings per group
@@ -45,12 +51,28 @@ import graft.geom.Overlay
   * (many keys of ~100 rings each, e.g. integer boxes per 256-px cell)
   * shuffles so few bytes that AQE coalesces the whole reduce into ONE
   * task — every merge, compaction and finish() then runs on a single
-  * core, and the overlay kernel's speed is the stage's wall time. Each
-  * compaction hands `Overlay.unionGroups` one large traced head group
-  * plus tens of single-ring groups; the kernel's classification asks
-  * only the groups whose bbox is near each sample point
-  * (`Overlay.Coverage`), so a compaction costs about one re-trace of
-  * the head, not head fragments × groups.
+  * core, and the overlay kernel's speed is the stage's wall time.
+  * Code here cannot widen that reduce:
+  *   - AQE's `CoalesceShufflePartitions` (with `parallelismFirst`)
+  *     targets max(1 MB `minPartitionSize`, shuffle bytes / cores),
+  *     judged from map-output bytes alone, session-wide;
+  *   - neither an `Aggregator` nor a `TypedImperativeAggregate`
+  *     chooses its own exchange; the only exchange exempt from
+  *     coalescing is the caller's `repartition(n, key)`;
+  *   - a planner rule would need a session extension, loaded through
+  *     `spark.sql.extensions` or a ServiceLoader resource, which a
+  *     caller's classpath need not carry.
+  * So the lever is the reduce's CPU. Two ways to move work were
+  * measured and lost: tracing every ring once in finish() (no
+  * compaction under 64 KB) lost 2 of 3 perfbench `spatial_join`
+  * pairs, and tracing the map-side partials cut a replayed reduce by
+  * only ~25% while adding map CPU. What is kept: finish() returns a
+  * traced single group untouched, and each compaction hands
+  * `Overlay.unionGroups` one large traced head group plus tens of
+  * single-ring groups, whose classification asks only the groups
+  * whose bbox is near each sample point (`Overlay.Coverage`) — a
+  * compaction costs about one re-trace of the head, not head
+  * fragments × groups.
   *
   * A traced overlay result is itself a valid even-odd group (holes are
   * CW rings whose parity cancels), which is what makes compaction
@@ -59,7 +81,9 @@ import graft.geom.Overlay
 object UnionAgg extends Aggregator[Seq[Double], Array[Byte], Seq[Seq[Double]]] {
 
   private val CompactAt = 32
-  private val Header = 8 // nGroups + headBytes
+  private val Header = 8 // nGroups + headWord
+  /** The head-word bit marking a traced head group. */
+  private val TracedHead = Int.MinValue
 
   val empty: Array[Byte] = {
     val b = ByteBuffer.allocate(Header).order(ByteOrder.LITTLE_ENDIAN)
@@ -70,8 +94,14 @@ object UnionAgg extends Aggregator[Seq[Double], Array[Byte], Seq[Seq[Double]]] {
   private def nGroups(b: Array[Byte]): Int =
     ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt(0)
 
-  private def headBytes(b: Array[Byte]): Int =
+  private def headWord(b: Array[Byte]): Int =
     ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt(4)
+
+  private def headBytes(b: Array[Byte]): Int = headWord(b) & ~TracedHead
+
+  /** Whether `b` is exactly one group, and that group is traced. */
+  private[graft] def tracedOnly(b: Array[Byte]): Boolean =
+    nGroups(b) == 1 && (headWord(b) & TracedHead) != 0
 
   /** One group holding one ring, as raw block bytes. */
   private def ringBlock(ring: Seq[Double]): Array[Byte] = {
@@ -107,10 +137,11 @@ object UnionAgg extends Aggregator[Seq[Double], Array[Byte], Seq[Seq[Double]]] {
     }
   }
 
+  /** A buffer of one traced group: an overlay result's rings. */
   private def encodeOne(group: Seq[Array[Double]]): Array[Byte] = {
     val bytes = 4 + group.iterator.map(r => 4 + 8 * r.length).sum
     val out = ByteBuffer.allocate(Header + bytes).order(ByteOrder.LITTLE_ENDIAN)
-    out.putInt(1).putInt(bytes)
+    out.putInt(1).putInt(bytes | TracedHead)
     out.putInt(group.size)
     group.foreach { r =>
       out.putInt(r.length)
@@ -148,10 +179,12 @@ object UnionAgg extends Aggregator[Seq[Double], Array[Byte], Seq[Seq[Double]]] {
     }
   }
 
-  /** Always re-traces, so output rings are canonical (outer CCW, holes
-    * CW, exact vertices) regardless of input orientation. */
+  /** Output rings are canonical (outer CCW, holes CW, exact vertices)
+    * regardless of input orientation: a traced single group already
+    * is, anything else (a raw ring included) is re-traced. */
   override def finish(b: Array[Byte]): Seq[Seq[Double]] =
     if (nGroups(b) == 0) Nil
+    else if (tracedOnly(b)) decode(b).head.map(_.toSeq)
     else Overlay.unionGroups(decode(b)).map(_.toSeq)
 
   override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY

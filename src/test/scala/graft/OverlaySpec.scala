@@ -396,6 +396,55 @@ class OverlaySpec extends AnyFunSuite {
     assert(canonical(aggRings(rows, 2)) === local)
   }
 
+  test("st_union_agg: a buffer compacted to one traced group finishes to its stored rings") {
+    import graft.functions.UnionAgg
+    val rings = joinCell(new scala.util.Random(5), 33, 0)
+    // the 33rd ring passes CompactAt (32) with a tail as large as the
+    // head: compaction leaves one traced group, the union of all 33
+    val b = rings.foldLeft(UnionAgg.zero)((acc, r) => UnionAgg.reduce(acc, r.toSeq))
+    assert(UnionAgg.tracedOnly(b))
+    val stored = Overlay.unionGroups(rings.map(Seq(_)))
+    val done = UnionAgg.finish(b).map(_.toArray)
+    assert(done.length === stored.length)
+    done.zip(stored).foreach { case (d, s) => assert(d sameElements s) }
+    // and those rings are the union a re-trace would give
+    assert(canonical(done) === canonical(Overlay.unionGroups(IndexedSeq(stored))))
+    assert(UnionAgg.finish(UnionAgg.merge(UnionAgg.zero, b)).map(_.toArray).zip(stored)
+      .forall { case (d, s) => d sameElements s })
+  }
+
+  test("st_union_agg: a single raw ring is still re-traced (clockwise in, CCW out)") {
+    import graft.functions.UnionAgg
+    val cw = Array(0.5, 0.5, 0.5, 8.5, 6.5, 8.5, 6.5, 0.5)
+    assert(Geom.signedArea(cw) < 0)
+    val b = UnionAgg.reduce(UnionAgg.zero, cw.toSeq)
+    assert(!UnionAgg.tracedOnly(b))
+    val out = UnionAgg.finish(b).map(_.toArray)
+    assert(out.length === 1 && Geom.signedArea(out.head) === -Geom.signedArea(cw))
+  }
+
+  test("st_union_agg: the traced flag survives the partial -> final buffer exchange") {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val rnd = new scala.util.Random(11)
+    // 4 slices of 33 rows: groups 0 and 1 each fill one slice, so each
+    // compacts map-side to one traced group; group 2 spans two slices,
+    // and its final buffer holds two traced partials
+    val rows = Seq(0 -> 33, 1 -> 33, 2 -> 66).flatMap { case (g, n) =>
+      joinCell(rnd, n, 0).map(r => (g, r.toSeq)) }
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("g", "poly")
+    val flags = df.groupBy(col("g")).agg(org.apache.spark.sql.functions.udaf(TracedOnlyProbe).apply(col("poly")))
+      .collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
+    assert(flags === Map(0 -> true, 1 -> true, 2 -> false))
+    val got = df.groupBy(col("g")).agg(graft.functions.UnionAggApi.st_union_agg(col("poly")))
+      .collect().map(r => r.getInt(0) -> r.getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toSeq).toMap
+    (0 until 3).foreach { g =>
+      val local = Overlay.unionGroups(rows.filter(_._1 == g).map(r => Seq(r._2.toArray)).toIndexedSeq)
+      assert(canonical(got(g)) === canonical(local), s"group $g")
+    }
+  }
+
   test("st_union_agg: true Aggregator union equals the local overlay, across partitions") {
     val spark = SparkTestBase.spark
     import spark.implicits._
@@ -476,4 +525,18 @@ class OverlaySpec extends AnyFunSuite {
       .head().getDouble(0)
     assert(math.abs(agg - 200.0) < 1e-9)
   }
+}
+
+/** `st_union_agg`'s buffer path with a finish that reports whether the
+  * final buffer is one traced group. */
+object TracedOnlyProbe
+    extends org.apache.spark.sql.expressions.Aggregator[Seq[Double], Array[Byte], Boolean] {
+  import graft.functions.UnionAgg
+  override def zero: Array[Byte] = UnionAgg.zero
+  override def reduce(b: Array[Byte], ring: Seq[Double]): Array[Byte] = UnionAgg.reduce(b, ring)
+  override def merge(b1: Array[Byte], b2: Array[Byte]): Array[Byte] = UnionAgg.merge(b1, b2)
+  override def finish(b: Array[Byte]): Boolean = UnionAgg.tracedOnly(b)
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] = UnionAgg.bufferEncoder
+  override def outputEncoder: org.apache.spark.sql.Encoder[Boolean] =
+    org.apache.spark.sql.Encoders.scalaBoolean
 }
