@@ -39,10 +39,15 @@ import scala.collection.mutable
   * their y-bucketed crossing index. A sample therefore costs O(groups
   * near it), not O(groups) — the shape `st_union_agg` compaction
   * produces (one large traced head group plus tens of single-box
-  * groups). Every acceleration is bit-identical to the naive loops
-  * (same pair arithmetic in the same order; same crossing test, which
-  * is XOR-commutative; a group is skipped only where its parity is
-  * provably even — see [[Coverage]]). It remains a per-group LOCAL
+  * groups). Every acceleration computes the naive loops' geometry
+  * bit-identically (same pair arithmetic in the same order; same
+  * crossing test, which is XOR-commutative; a group is skipped only
+  * where its parity is provably even — see [[Coverage]]). Fragments
+  * are deduped in a primitive table and walked in first-insertion
+  * order; that order fixes which ring comes first and where each ring
+  * starts, and it changed once, from a tuple hash set's order, with
+  * every canonical ring set (rings rotated to their least vertex,
+  * sorted) unchanged. It remains a per-group LOCAL
   * kernel (run inside flatMapGroups or an aggregate's merge on bounded
   * groups, like every geometry kernel here), not a distributed
   * operator. Classification resolution is ~1e-8 of the coordinate
@@ -146,28 +151,19 @@ object Overlay {
     private def bucketOf(y: Double): Int =
       math.min(nb - 1, math.max(0, ((y - yMin) / bh).toInt))
     // bucket b lists edges bucketIds(bucketStart(b) until bucketStart(b + 1)),
-    // ascending: one counting pass, one filling pass
+    // ascending
     private val (bucketStart, bucketIds) = {
-      val start = new Array[Int](nb + 1)
+      val regBucket = new mutable.ArrayBuilder.ofInt
+      val regEdge = new mutable.ArrayBuilder.ofInt
       var e = 0
       while (e < m) {
         var b = bucketOf(math.min(yiA(e), yjA(e)))
         val b1 = bucketOf(math.max(yiA(e), yjA(e)))
-        while (b <= b1) { start(b + 1) += 1; b += 1 }
+        while (b <= b1) { regBucket.addOne(b); regEdge.addOne(e); b += 1 }
         e += 1
       }
-      var b = 0
-      while (b < nb) { start(b + 1) += start(b); b += 1 }
-      val fill = java.util.Arrays.copyOf(start, nb)
-      val ids = new Array[Int](start(nb))
-      e = 0
-      while (e < m) {
-        var b = bucketOf(math.min(yiA(e), yjA(e)))
-        val b1 = bucketOf(math.max(yiA(e), yjA(e)))
-        while (b <= b1) { ids(fill(b)) = e; fill(b) += 1; b += 1 }
-        e += 1
-      }
-      (start, ids)
+      val (start, order) = byKey(regBucket.result(), nb)
+      (start, gather(regEdge.result(), order))
     }
 
     def parity(px: Double, py: Double): Boolean = {
