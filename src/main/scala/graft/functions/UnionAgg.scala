@@ -188,7 +188,8 @@ object UnionAgg extends Aggregator[Seq[Double], Array[Byte], Seq[Seq[Double]]] {
     else Overlay.unionGroups(decode(b)).map(_.toSeq)
 
   override def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  override def outputEncoder: Encoder[Seq[Seq[Double]]] = ExpressionEncoder()
+  // built once: deriving it reflects over the type on every call
+  override lazy val outputEncoder: Encoder[Seq[Seq[Double]]] = ExpressionEncoder()
 }
 
 object UnionAggApi {

@@ -509,7 +509,9 @@ object Overlay {
       (start, gather(regEdge.result(), order))
     }
     val stamp = filled(nE, -1) // per-i dedupe of multi-cell candidates
-    val cand = new mutable.ArrayBuilder.ofInt
+    // edge i's candidates cand(0 until nCand), in one reused array
+    var cand = new Array[Int](16)
+    var nCand = 0
     // split points in discovery order: edge, param along it, point
     val spE = new mutable.ArrayBuilder.ofInt
     val spT = new mutable.ArrayBuilder.ofDouble
@@ -521,12 +523,16 @@ object Overlay {
     var i = 0
     while (i < nE) {
       val rX = bx(i) - ax(i); val rY = by(i) - ay(i)
-      cand.clear()
+      nCand = 0
       def consider(j: Int): Unit =
         if (j > i && stamp(j) != i) {
           stamp(j) = i
           if (eMinX(i) <= eMaxX(j) && eMinX(j) <= eMaxX(i) &&
-              eMinY(i) <= eMaxY(j) && eMinY(j) <= eMaxY(i)) cand.addOne(j)
+              eMinY(i) <= eMaxY(j) && eMinY(j) <= eMaxY(i)) {
+            if (nCand == cand.length) cand = java.util.Arrays.copyOf(cand, 2 * nCand)
+            cand(nCand) = j
+            nCand += 1
+          }
         }
       if (isOutlier(i)) {
         // an outlier's own cell range is the thing we refused to walk —
@@ -551,11 +557,10 @@ object Overlay {
         var oi = 0
         while (oi < outliers.length) { consider(outliers(oi)); oi += 1 }
       }
-      val candArr = cand.result()
-      java.util.Arrays.sort(candArr) // original ascending-j visit order
+      java.util.Arrays.sort(cand, 0, nCand) // original ascending-j visit order
       var ci = 0
-      while (ci < candArr.length) {
-        val j = candArr(ci)
+      while (ci < nCand) {
+        val j = cand(ci)
         val sX = bx(j) - ax(j); val sY = by(j) - ay(j)
         val qpX = ax(j) - ax(i); val qpY = ay(j) - ay(i)
         val d = rX * sY - rY * sX
@@ -614,13 +619,21 @@ object Overlay {
     val wHead = new Array[Int](maxV); val wTail = new Array[Int](maxV)
     val vNext = new Array[Int](maxV)
     def weld(px: Double, py: Double): Int = {
-      val cx = math.floor(px / (4 * weldEps)).toLong
-      val cy = math.floor(py / (4 * weldEps)).toLong
+      val fx = px / (4 * weldEps); val fy = py / (4 * weldEps)
+      val cx = math.floor(fx).toLong
+      val cy = math.floor(fy).toLong
+      // a vertex within weldEps (a quarter cell) of p lies in p's cell
+      // or in a neighbour p is that close to; 0.3 and 0.7 leave room for
+      // rounding, so the cells skipped hold no match and the first match
+      // in the original 3 × 3 visit order is still the one found
+      val dyLo = if (fy - cy < 0.3) -1L else 0L
+      val dyHi = if (fy - cy > 0.7) 1L else 0L
       var found = -1
-      var dx = -1L
-      while (found < 0 && dx <= 1) {
-        var dy = -1L
-        while (found < 0 && dy <= 1) {
+      var dx = if (fx - cx < 0.3) -1L else 0L
+      val dxHi = if (fx - cx > 0.7) 1L else 0L
+      while (found < 0 && dx <= dxHi) {
+        var dy = dyLo
+        while (found < 0 && dy <= dyHi) {
           val c = wCells.find(pack(cx + dx, cy + dy))
           var id = if (c < 0) -1 else wHead(c)
           while (found < 0 && id >= 0) {

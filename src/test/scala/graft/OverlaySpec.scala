@@ -281,6 +281,23 @@ class OverlaySpec extends AnyFunSuite {
     assert(got.map(_._1) === Seq("d8090443f7a1a21b", "71107bbb52dc134a", "4453ceb893d2d633"))
   }
 
+  test("welding: near-coincident vertices on either side of a weld-cell border merge") {
+    // the far box fixes the coordinate scale at 1000, so the weld
+    // tolerance is 1e-6 and weld cells are 4e-6 wide: x = 1 and y = 1
+    // lie close to cell borders, and ±eps/3 puts the two copies of each
+    // shared corner in different cells (249999 and 250000)
+    val far = rect(999, 999, 1000, 1000)
+    val d = 1e-6 / 3
+    val left = rect(0, 0, 1 - d, 1); val right = rect(1 + d, 0, 2, 1)
+    val low = rect(0, 0, 1, 1 - d); val high = rect(0, 1 + d, 1, 2)
+    for ((a, b) <- Seq((left, right), (right, left), (low, high), (high, low))) {
+      val u = Overlay.union(Seq(a, b, far))
+      // one 2 × 1 ring (its two shared corners welded) plus the far box
+      assert(u.length === 2 && u.map(_.length / 2).sorted === Seq(4, 6), u.map(_.toSeq))
+      assert(math.abs(Overlay.areaOf(u) - 3) < 1e-5)
+    }
+  }
+
   /** Distance from (px, py) to segment (ax, ay)-(bx, by). */
   private def segDist(px: Double, py: Double, ax: Double, ay: Double, bx: Double, by: Double): Double = {
     val dx = bx - ax; val dy = by - ay
