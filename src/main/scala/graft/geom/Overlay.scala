@@ -480,7 +480,7 @@ object Overlay {
     val outliersB = new mutable.ArrayBuilder.ofInt
     val isOutlier = new Array[Boolean](nE)
     // (cell number, edge) registrations, then grouped by cell number
-    val cells = new CellTable(2 * nE)
+    val cells = new CellTable(nE)
     val regCell = new mutable.ArrayBuilder.ofInt
     val regEdge = new mutable.ArrayBuilder.ofInt
     k0 = 0
@@ -615,7 +615,9 @@ object Overlay {
     var nV = 0
     // per weld cell, its vertices in insertion order: a head/tail per
     // cell number, a successor per vertex
-    val wCells = new CellTable(maxV)
+    // sized for the usual vertex count, about one per edge plus one per
+    // crossing (the table grows past that), not for the bound maxV
+    val wCells = new CellTable(nE + splitT.length)
     val wHead = new Array[Int](maxV); val wTail = new Array[Int](maxV)
     val vNext = new Array[Int](maxV)
     def weld(px: Double, py: Double): Int = {
@@ -660,7 +662,7 @@ object Overlay {
     // ---- 4. fragments (undirected, deduped across coincident edges by
     // their packed vertex pair), in first-insertion order, which fixes
     // ring order and start vertices
-    val fragIds = new CellTable(maxV)
+    val fragIds = new CellTable(nE + splitT.length) // fragments ≤ edges + splits
     val fragPB = new mutable.ArrayBuilder.ofInt
     val fragQB = new mutable.ArrayBuilder.ofInt
     def fragment(p: Int, q: Int): Unit =
