@@ -17,8 +17,8 @@ import graft.geom.Overlay
   * `[nGroups][headWord][group…]`, group = `[nRings][ring…]`,
   * ring = `[nDoubles][doubles…]`, all little-endian. `headWord` is the
   * first (head) group's byte length, with its top bit set when that
-  * group is a traced overlay result (a compaction's output). The binary buffer
-  * is deliberate: Spark serializes aggregation buffers on every
+  * group is a traced overlay result (a compaction's output). The
+  * binary buffer is deliberate: Spark serializes aggregation buffers on every
   * partial-row update, and a nested `Seq[Seq[Seq[Double]]]` paid
   * Catalyst's recursive collection encoder per input row — measured at
   * sf0.1 that overhead exceeded the overlay math itself. BinaryType

@@ -614,9 +614,9 @@ object Overlay {
     val vy = new Array[Double](maxV)
     var nV = 0
     // per weld cell, its vertices in insertion order: a head/tail per
-    // cell number, a successor per vertex
-    // sized for the usual vertex count, about one per edge plus one per
-    // crossing (the table grows past that), not for the bound maxV
+    // cell number, a successor per vertex. The table starts at the usual
+    // vertex count, about one per edge plus one per crossing, and grows
+    // past it; maxV is only the bound.
     val wCells = new CellTable(nE + splitT.length)
     val wHead = new Array[Int](maxV); val wTail = new Array[Int](maxV)
     val vNext = new Array[Int](maxV)

@@ -6,7 +6,11 @@ Spark event log (`local-*`) and a JFR recording (`rec.jfr`) there; BENCH.md
 has the recipe for that copy.
 
 Stages are attributed to the SQL execution (call site) whose job listed
-them first; a stage a job lists but never runs was skipped. Repetitions are
+them first; a stage a job lists but never runs was skipped. Under each call
+site's per-repetition row comes one row per stage it ran, in stage-id order:
+its task count, wall time, summed executor CPU (`Executor CPU Time` of its
+tasks) and longest task, so a reduce squeezed into one task shows as a
+1-task stage whose longest task is its wall time. Repetitions are
 counted by the call site that marks one, chosen by the workload prefix of
 the run directory's name: `GeoTiffIO.writeTable`'s `foreachPartition` for
 predict, `collect at Workloads` for assign and spatial_join (the most
@@ -33,9 +37,9 @@ MARKERS = {"predict": "foreachPartition at GeoTiffIO",
            "spatial_join": "collect at Workloads"}
 # frame substrings per group, tried from the top frame down
 GROUPS = [
-    # HashKernels: the thread-local md5 kernel the generator used before PagesKernel
+    ("overlay kernel", ("graft.geom.Overlay",)),
     ("md5", ("sun.security.provider.MD5", "sun.security.provider.DigestBase",
-             "java.security.MessageDigest", "graft.functions.HashKernels")),
+             "java.security.MessageDigest")),
     ("string building", ("UTF8String", "graft.functions.PagesKernel", "java.lang.Long.toString",
                          "java.lang.String.valueOf", "java.lang.StringLatin1",
                          "org.apache.spark.sql.catalyst.expressions.Encode")),
@@ -55,6 +59,8 @@ with open(glob.glob(f"{run}/local-*")[0]) as f:
     log = [json.loads(line) for line in f]
 sql, site_of, listed, done = {}, {}, [], {}
 marked = collections.defaultdict(set)
+# per stage: executor CPU s, longest task s
+task_cpu, task_max = collections.Counter(), collections.defaultdict(float)
 for e in log:
     ev = e["Event"]
     if ev.endswith("SparkListenerSQLExecutionStart"):
@@ -68,23 +74,36 @@ for e in log:
             site_of.setdefault(s, site)
     elif ev == "SparkListenerStageCompleted":
         done[e["Stage Info"]["Stage ID"]] = e["Stage Info"]
+    elif ev == "SparkListenerTaskEnd":
+        sid, info = e["Stage ID"], e["Task Info"]
+        task_cpu[sid] += e.get("Task Metrics", {}).get("Executor CPU Time", 0) / 1e9
+        task_max[sid] = max(task_max[sid], (info["Finish Time"] - info["Launch Time"]) / 1000)
 if not marked:
     sys.exit(f"{run}: no `{marker}` SQL execution in the event log")
 call, runs = max(marked.items(), key=lambda kv: len(kv[1]))
 reps = len(runs)
-rows = collections.defaultdict(lambda: [0, 0, 0, 0.0])
+rows = collections.defaultdict(lambda: [0, 0, 0, 0.0, 0.0])
+stages_of = collections.defaultdict(list)
 for site, n in listed:
     rows[site][0] += n
-for sid, s in done.items():
+for sid in sorted(done):
+    s = done[sid]
+    wall = (s["Completion Time"] - s["Submission Time"]) / 1000
     r = rows[site_of[sid]]
     r[1] += 1
     r[2] += s["Number of Tasks"]
-    r[3] += (s["Completion Time"] - s["Submission Time"]) / 1000
+    r[3] += wall
+    r[4] += task_cpu[sid]
+    stages_of[site_of[sid]].append((sid, s["Number of Tasks"], wall, task_cpu[sid], task_max[sid]))
 print(f"repetitions ({call} executions): {reps}")
-print("| SQL execution (call site) | stages listed | stages run | tasks | stage wall s |")
-print("|---|---|---|---|---|")
-for k, (n_listed, n_run, tasks, wall) in sorted(rows.items(), key=lambda kv: -kv[1][3]):
-    print(f"| {k} | {n_listed / reps:.1f} | {n_run / reps:.1f} | {tasks / reps:.1f} | {wall / reps:.3f} |")
+print("| SQL execution (call site) / stage | stages listed | stages run | tasks | stage wall s "
+      "| executor CPU s | longest task s |")
+print("|---|---|---|---|---|---|---|")
+for k, (n_listed, n_run, tasks, wall, cpu) in sorted(rows.items(), key=lambda kv: -kv[1][3]):
+    print(f"| {k} | {n_listed / reps:.1f} | {n_run / reps:.1f} | {tasks / reps:.1f} | {wall / reps:.3f} "
+          f"| {cpu / reps:.3f} | |")
+    for sid, tasks, wall, cpu, longest in stages_of[k]:
+        print(f"| &nbsp;&nbsp;stage {sid} | | | {tasks} | {wall:.3f} | {cpu:.3f} | {longest:.3f} |")
 
 jfr = f"{run}/rec.jfr"
 out = subprocess.run(["jfr", "print", "--events", "jdk.ProcessStart", jfr],
