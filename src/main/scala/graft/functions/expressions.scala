@@ -23,6 +23,10 @@ import graft.grid.{CellIndex, TileGridSpec}
 case class CellEncode(x: Expression, y: Expression,
                       level: Int, extentX: Double, extentY: Double)
     extends BinaryExpression {
+  // a cell coordinate keeps 28 bits, so above MaxLevel distinct cells
+  // would share an id; a negative level has no grid at all
+  require(level >= 0 && level <= CellIndex.MaxLevel,
+    s"cell_encode: level $level outside [0, ${CellIndex.MaxLevel}]")
   override def left: Expression = x
   override def right: Expression = y
   override def dataType: DataType = LongType

@@ -343,8 +343,7 @@ object Geom {
     * Invalid input (self-intersecting ring, or rings crossing each
     * other) is resolved to its even-odd interior by the exact vector
     * overlay, so output vertices are the exact self-intersection
-    * points, not grid-quantized ones (Raster.makeValid remains the
-    * mask-space variant for pixel-origin geometry). */
+    * points, not grid-quantized ones. */
   def makeValid(rings: Seq[Array[Double]]): Seq[Array[Double]] = {
     val rs = rings.filter(_.length >= 6)
     val valid = rs.forall(isSimpleRing) &&
@@ -420,16 +419,6 @@ object Geom {
       i += 2
     }
     out
-  }
-
-  /** Inverse of the 6-param affine. */
-  def affineInverse(a: Double, b: Double, d: Double, e: Double,
-                    xoff: Double, yoff: Double): (Double, Double, Double, Double, Double, Double) = {
-    val det = a * e - b * d
-    require(math.abs(det) > 1e-300, "singular affine")
-    val ia = e / det; val ib = -b / det
-    val id = -d / det; val ie = a / det
-    (ia, ib, id, ie, -(ia * xoff + ib * yoff), -(id * xoff + ie * yoff))
   }
 
   /** Union-find — the connected-components core behind the dissolve /

@@ -19,8 +19,7 @@ import scala.collection.mutable
   *
   * Output vertices are EXACT: original input vertices pass through
   * bit-identical, and crossing vertices are the double-precision
-  * line-line intersection points (no grid quantization — the vector
-  * complement of Raster.makeValid's mask-space resolution).
+  * line-line intersection points (no grid quantization).
   *
   * Semantics are even-odd throughout, matching the engine's rasterizer
   * (Raster.rasterizeRings) and ray-cast (Geom.containsPoint): a ring

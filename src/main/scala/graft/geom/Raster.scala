@@ -7,9 +7,8 @@ package graft.geom
   *  - COCO-style column-major RLE encode/decode
   *    (processedinstance.py:102-147)
   *  - mask paste with max/min merge (util.py:476-528 `paste_array`)
-  *  - union area of many polygons via rasterization — the reference's
-  *    masks ARE the ground truth geometry, so rasterized union area is
-  *    the faithful semantic for dissolve stats.
+  *  - bilinear resample and affine warp (util.py:138-193)
+  *  - mask→polygon vectorization with holes (util.py:82-109)
   */
 object Raster {
 
@@ -125,20 +124,6 @@ object Raster {
       }
       r += 1
     }
-  }
-
-  /** Union area of polygons by rasterizing into a shared mask over
-    * `bbox` at unit (pixel) resolution — exact for the integer-snapped
-    * crowns of the reference (masks are the source geometry). */
-  def unionArea(polys: Seq[Array[Double]], bbox: Geom.BBox): Double = {
-    val cols = math.max(1, math.ceil(bbox.maxX - bbox.minX).toInt)
-    val rows = math.max(1, math.ceil(bbox.maxY - bbox.minY).toInt)
-    val mask = new Array[Byte](rows * cols)
-    polys.foreach { p => rasterize(Geom.translate(p, -bbox.minX, -bbox.minY), rows, cols, mask) }
-    var s = 0L
-    var i = 0
-    while (i < mask.length) { s += mask(i); i += 1 }
-    s.toDouble
   }
 
   /** COCO RLE encode: column-major (Fortran order) run lengths of
@@ -291,80 +276,15 @@ object Raster {
     out
   }
 
-  /** General raster warp (P8, util.py:138-170 `reproject_image` /
-    * rasterio.warp.reproject structure): for each DESTINATION pixel
-    * center, `dstToSrc` maps its (x, y) to source pixel coordinates
-    * (the transformer), then the sample is taken nearest-neighbor
-    * (the reference's mask setting, `Resampling.nearest` with
-    * src/dst nodata 0) or bilinear (its imagery setting). Destination
-    * pixels mapping outside the source read as 0 = nodata, exactly the
-    * reference's "critical to keep masks" behavior. The mapping is a
-    * plain function, so an affine (see [[warpAffine]]) or any
-    * CRS-pair transformer plugs in without touching the kernel. */
-  def warpWith(src: Array[Byte], rows: Int, cols: Int,
-               outRows: Int, outCols: Int,
-               dstToSrc: (Double, Double) => (Double, Double),
-               bilinear: Boolean = false): Array[Byte] = {
-    val out = new Array[Byte](outRows * outCols)
-    var r = 0
-    while (r < outRows) {
-      var c = 0
-      while (c < outCols) {
-        val (sx, sy) = dstToSrc(c + 0.5, r + 0.5)
-        if (bilinear) {
-          val fy = sy - 0.5
-          val fx = sx - 0.5
-          if (fx > -1 && fx < cols && fy > -1 && fy < rows) {
-            val y0 = math.max(0, math.min(rows - 1, math.floor(fy).toInt))
-            val y1 = math.min(rows - 1, y0 + 1)
-            val wy = math.max(0.0, math.min(1.0, fy - y0))
-            val x0 = math.max(0, math.min(cols - 1, math.floor(fx).toInt))
-            val x1 = math.min(cols - 1, x0 + 1)
-            val wx = math.max(0.0, math.min(1.0, fx - x0))
-            val v =
-              (src(y0 * cols + x0) & 0xff) * (1 - wy) * (1 - wx) +
-              (src(y0 * cols + x1) & 0xff) * (1 - wy) * wx +
-              (src(y1 * cols + x0) & 0xff) * wy * (1 - wx) +
-              (src(y1 * cols + x1) & 0xff) * wy * wx
-            out(r * outCols + c) = math.round(v).toByte
-          } // else stays 0 = nodata
-        } else {
-          val sc = math.floor(sx).toInt
-          val sr = math.floor(sy).toInt
-          if (sc >= 0 && sc < cols && sr >= 0 && sr < rows)
-            out(r * outCols + c) = src(sr * cols + sc)
-        }
-        c += 1
-      }
-      r += 1
-    }
-    out
-  }
-
-  /** Affine warp: `fwd = (a, b, tx, d, e, ty)` maps SOURCE pixel
-    * coords to DESTINATION pixel coords (x' = a·x + b·y + tx,
-    * y' = d·x + e·y + ty); the kernel inverts it analytically and
-    * resamples per [[warpInverseAffine]]. Degenerate (non-invertible)
-    * affines fail loud. */
-  def warpAffine(src: Array[Byte], rows: Int, cols: Int,
-                 outRows: Int, outCols: Int,
-                 a: Double, b: Double, tx: Double,
-                 d: Double, e: Double, ty: Double,
-                 bilinear: Boolean = false): Array[Byte] = {
-    val det = a * e - b * d
-    require(math.abs(det) > 1e-12, s"non-invertible affine (det=$det)")
-    warpInverseAffine(src, rows, cols, outRows, outCols,
-      e / det, -b / det, (b * ty - e * tx) / det,
-      -d / det, a / det, (d * tx - a * ty) / det,
-      bilinear)
-  }
-
-  /** Affine warp given the INVERSE mapping directly (dst pixel →
-    * src pixel: sx = ia·x + ib·y + itx, sy = id·x + ie·y + ity).
-    * Allocation-free hot loop like the other kernels here — the
-    * affine case never pays [[warpWith]]'s per-pixel closure/tuple;
-    * callers with a composed pixel-space affine (warpTiles) come
-    * here. */
+  /** Raster warp (P8, util.py:138-170 `reproject_image` /
+    * rasterio.warp.reproject structure) given the INVERSE affine
+    * (dst pixel → src pixel: sx = ia·x + ib·y + itx,
+    * sy = id·x + ie·y + ity), evaluated at each destination pixel
+    * center. The sample is nearest-neighbor (the reference's mask
+    * setting, `Resampling.nearest` with src/dst nodata 0) or bilinear
+    * (its imagery setting); destination pixels mapping outside the
+    * source read 0 = nodata. Allocation-free hot loop; `warpTiles`
+    * composes its world affine into this pixel-space inverse. */
   def warpInverseAffine(src: Array[Byte], rows: Int, cols: Int,
                         outRows: Int, outCols: Int,
                         ia: Double, ib: Double, itx: Double,
@@ -407,89 +327,6 @@ object Raster {
       r += 1
     }
     out
-  }
-
-  /** Separable box blur with odd `kernel` size (edge-clamped) — the
-    * reference's anti-alias "fake PSF" before downsampling
-    * (data/tiling.py:427-437). */
-  def boxBlur(src: Array[Byte], rows: Int, cols: Int, kernel: Int): Array[Byte] = {
-    val k = kernel / 2
-    val tmp = new Array[Int](rows * cols)
-    val out = new Array[Byte](rows * cols)
-    var r = 0
-    while (r < rows) { // horizontal pass
-      var c = 0
-      while (c < cols) {
-        var s = 0; var n = 0
-        var d = -k
-        while (d <= k) {
-          val cc = c + d
-          if (cc >= 0 && cc < cols) { s += src(r * cols + cc) & 0xff; n += 1 }
-          d += 1
-        }
-        tmp(r * cols + c) = s / n
-        c += 1
-      }
-      r += 1
-    }
-    r = 0
-    while (r < rows) { // vertical pass
-      var c = 0
-      while (c < cols) {
-        var s = 0; var n = 0
-        var d = -k
-        while (d <= k) {
-          val rr = r + d
-          if (rr >= 0 && rr < rows) { s += tmp(rr * cols + c); n += 1 }
-          d += 1
-        }
-        out(r * cols + c) = (s / n).toByte
-        c += 1
-      }
-      r += 1
-    }
-    out
-  }
-
-  /** buffer(0)-style validity fix under MASK semantics (reference
-    * util.py:99-104: `if not all_polygons.is_valid: buffer(0)`): a
-    * self-intersecting / pinched ring set is resolved by rasterizing it
-    * over its integer-snapped bbox and re-tracing — the even-odd
-    * interior is what survives, which is buffer(0)'s resolution of a
-    * bowtie at pixel resolution. Use ONLY for pixel-origin geometry:
-    * input is quantized to the integer pixel grid unconditionally, so
-    * sub-pixel rings vanish and valid input does not pass through
-    * unchanged — [[Geom.makeValid]] is the exact vector variant that
-    * gates on validity and preserves coordinates. Returns one
-    * hole-aware ring list per resulting component, in the input's
-    * global coordinates. */
-  def makeValid(rings: Seq[Array[Double]]): Seq[Seq[Array[Double]]] = {
-    val boxes = rings.filter(_.length >= 6).map(Geom.BBox.ofPolygon)
-    if (boxes.isEmpty) return Seq.empty
-    val bb = boxes.reduce(_ union _)
-    val ox = math.floor(bb.minX); val oy = math.floor(bb.minY)
-    val cols = math.max(1, math.ceil(bb.maxX - ox).toInt)
-    val rows = math.max(1, math.ceil(bb.maxY - oy).toInt)
-    val mask = rasterizeRings(rings.map(Geom.translate(_, -ox, -oy)), rows, cols)
-    vectorizeWithHoles(mask, rows, cols).map(_.map(Geom.translate(_, ox, oy)))
-  }
-
-  /** Median of the raster values under a polygon (geometry-mask sample,
-    * reference P9/J5: util.py:37-79 filter_shapefile + R3
-    * geometry_mask). Returns -1 when the polygon covers no pixel. */
-  def maskedMedian(src: Array[Byte], rows: Int, cols: Int,
-                   poly: Array[Double]): Double = {
-    val mask = rasterize(poly, rows, cols)
-    val vals = new scala.collection.mutable.ArrayBuffer[Int]()
-    var i = 0
-    while (i < mask.length) {
-      if (mask(i) != 0) vals += (src(i) & 0xff)
-      i += 1
-    }
-    if (vals.isEmpty) return -1.0
-    val s = vals.sorted
-    val n = s.size
-    if (n % 2 == 1) s(n / 2).toDouble else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
   /** mask→polygon: trace the outer boundary of each connected component

@@ -23,6 +23,7 @@ package graft.grid
   */
 object CellIndex {
 
+  /** Deepest level whose cell coordinates fit [[interleave]]'s 28 bits. */
   val MaxLevel = 28
 
   /** Morton interleave of two 28-bit ints (x in even bits, y in odd). */
@@ -76,18 +77,6 @@ object CellIndex {
     val l = level(id)
     require(l > 0, "root has no parent")
     ((l - 1).toLong << 58) | ((id & ((1L << 58) - 1)) >> 2)
-  }
-
-  /** Contiguous Morton id range [lo, hi] covered by this cell at
-    * `childLevel` — the prefix range for range joins / pruning. */
-  def childRange(id: Long, childLevel: Int): (Long, Long) = {
-    val l = level(id)
-    require(childLevel >= l)
-    val shift = 2 * (childLevel - l)
-    val m = id & ((1L << 58) - 1)
-    val lo = (childLevel.toLong << 58) | (m << shift)
-    val hi = lo + ((1L << shift) - 1)
-    (lo, hi)
   }
 
   /** Ring of neighbor cell ids at Chebyshev distance <= r (the (2r+1)²

@@ -98,23 +98,6 @@ object RasterOps {
       }
   }
 
-  /** Empty-tile skip by mean pixel (P3, model.py:162-176 `skip_empty`):
-    * drop tiles whose mean is ≤ `lo` (all-black) or ≥ `hi` (all-white)
-    * before the expensive downstream stages — the reference runs this
-    * per batch ahead of inference. Narrow partition-local filter. */
-  def skipEmptyTiles(tiles: Dataset[ConfTile], lo: Double = 1.0,
-                     hi: Double = 254.0): Dataset[ConfTile] =
-    tiles.filter { t =>
-      if (t.data.isEmpty) false
-      else {
-        var s = 0L
-        var i = 0
-        while (i < t.data.length) { s += (t.data(i) & 0xff); i += 1 }
-        val m = s.toDouble / t.data.length
-        m > lo && m < hi
-      }
-    }
-
   /** Inner-crop a confidence tile by overlap/2 with the reference's edge
     * rules (semanticprocessor.py:62-86): left/bottom pad drops at the
     * extent origin; right/top always crop at least 1 px. */
@@ -203,8 +186,7 @@ object RasterOps {
     * (paste-only regroup — NOT [[mosaic]], whose innerCrop and
     * non-negative grid assumptions are specific to the overlapping
     * inference grid). The affine covers the reference's
-    * `calculate_default_transform`-shaped reprojects; a non-affine CRS
-    * pair plugs into `Raster.warpWith` directly. */
+    * `calculate_default_transform`-shaped reprojects. */
   def warpTiles(spark: SparkSession, tiles: Dataset[ConfTile],
                 a: Double, b: Double, tx: Double,
                 d: Double, e: Double, ty: Double,
@@ -321,53 +303,6 @@ object RasterOps {
         (t.region, t.tileId, t.classIdx, area, world.head, rings.size - 1)
       }
     }.toDF("region", "cache_tile", "class_idx", "area", "poly", "n_holes")
-  }
-
-  /** GSD rescale of confidence tiles (T4/R4): box-blur ≈1.5×scale then
-    * bilinear resize — the reference's downsample path
-    * (data/tiling.py:421-449). Partition-local kernel, no shuffle. */
-  def resampleTiles(spark: SparkSession, tiles: Dataset[ConfTile],
-                    newGsd: Int): Dataset[ConfTile] = {
-    import spark.implicits._
-    tiles.map { t =>
-      val scale = newGsd.toDouble / t.gsd
-      val data =
-        if (scale > 1) {
-          val kernel = math.max(1, math.round(1.5 * scale).toInt | 1)
-          val blurred = Raster.boxBlur(t.data, t.rows, t.cols, kernel)
-          Raster.resampleBilinear(blurred, t.rows, t.cols,
-            math.max(1, (t.rows / scale).toInt), math.max(1, (t.cols / scale).toInt))
-        } else Raster.resampleBilinear(t.data, t.rows, t.cols,
-          math.max(1, (t.rows / scale).toInt), math.max(1, (t.cols / scale).toInt))
-      val nr = math.max(1, (t.rows / scale).toInt)
-      val nc = math.max(1, (t.cols / scale).toInt)
-      t.copy(rows = nr, cols = nc, gsd = newGsd, data = data)
-    }
-  }
-
-  /** Semantic-score polygon filter (P9/J5): equi-join polygons (from
-    * vectorizeMosaic: region, cache_tile, class_idx, poly) to their
-    * raster tiles, compute the median confidence under each polygon
-    * (geometry-mask sample), keep those ≥ thr255. Mirrors
-    * util.py:37-79 `filter_shapefile` (median > 0.4). */
-  def filterByMaskMedian(spark: SparkSession, polys: DataFrame,
-                         mosaicTiles: Dataset[ConfTile], thr255: Double): DataFrame = {
-    import spark.implicits._
-    val tiles = mosaicTiles
-      .map(t => (t.region, t.classIdx, t.tileId, t.minX, t.minY, t.rows, t.cols, t.gsd, t.data))
-      .toDF("region", "class_idx", "cache_tile", "t_min_x", "t_min_y",
-        "t_rows", "t_cols", "t_gsd", "t_data")
-    val medianUdf = udf((poly: Seq[Double], minX: Long, minY: Long,
-                         rows: Int, cols: Int, gsd: Int, data: Array[Byte]) => {
-      val local = Geom.affine(poly.toArray, 1.0 / gsd, 0, 0, 1.0 / gsd,
-        -minX.toDouble / gsd, -minY.toDouble / gsd)
-      Raster.maskedMedian(data, rows, cols, local)
-    })
-    polys.join(tiles, Seq("region", "class_idx", "cache_tile"))
-      .withColumn("median_conf", medianUdf(col("poly"), col("t_min_x"),
-        col("t_min_y"), col("t_rows"), col("t_cols"), col("t_gsd"), col("t_data")))
-      .filter(col("median_conf") >= thr255)
-      .drop("t_min_x", "t_min_y", "t_rows", "t_cols", "t_gsd", "t_data")
   }
 
   /** Confusion-matrix metrics (A8) between two mosaics of the same

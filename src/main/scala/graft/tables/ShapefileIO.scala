@@ -440,24 +440,14 @@ object ShapefileIO {
     * `bundle_geojson`): the reference reads the .shp+.dbf through
     * pyshp's `__geo_interface__` and dumps a FeatureCollection as
     * `tree_geojson.js` prefixed with `var tree_shapes = `. Re-created
-    * here over our own trio reader: each record becomes a Feature with
-    * a Polygon geometry (rings closed per GeoJSON, record ring order
-    * preserved: outer first, then holes) and its dbf row as typed
-    * properties (N fields with decimals → float, without → int,
-    * C → string; blanks → null). Canonical number formatting via
-    * [[FixtureIO.fmt]] keeps the bundle byte-deterministic. */
-  def bundleGeojson(shpPath: String): String = {
-    val base = shpPath.replaceAll("\\.(shp|shx|dbf)$", "")
-    val recs = read(base + ".shp")
-    val dbf = Paths.get(base + ".dbf")
-    val (fields, rows): (Seq[DbfField], Seq[Seq[String]]) =
-      if (Files.exists(dbf)) parseDbf(Files.readAllBytes(dbf))
-      else (Seq.empty, Seq.empty)
-    bundleGeojson(recs, fields, rows)
-  }
-
-  /** In-memory variant (report() already holds the records — no need
-    * to re-read and re-parse the trio it just wrote). */
+    * here from the trio's records and dbf rows in memory (`report`
+    * already holds them, so the files it just wrote are not re-read):
+    * each record becomes a Feature with a Polygon geometry (rings
+    * closed per GeoJSON, record ring order preserved: outer first,
+    * then holes) and its dbf row as typed properties (N fields with
+    * decimals → float, without → int, C → string; blanks → null).
+    * Canonical number formatting via [[FixtureIO.fmt]] keeps the
+    * bundle byte-deterministic. */
   def bundleGeojson(recs: Seq[ShpRecord], fields: Seq[DbfField],
                     rows: Seq[Seq[String]]): String = {
     def jsonProp(f: DbfField, cell: String): String = {
@@ -518,13 +508,6 @@ object ShapefileIO {
           s"""${FixtureIO.fmt(xs.max)}, ${FixtureIO.fmt(ys.max)}], """
       }
     s"""{"type": "FeatureCollection", $bbox"features": ${feats.mkString("[", ", ", "]")}}"""
-  }
-
-  /** Write the reference's `tree_geojson.js` sibling artifact. */
-  def writeGeojsonJs(shpPath: String): Unit = {
-    val dir = Paths.get(shpPath).toAbsolutePath.getParent
-    Files.write(dir.resolve("tree_geojson.js"),
-      ("var tree_shapes = " + bundleGeojson(shpPath)).getBytes(StandardCharsets.UTF_8))
   }
 
   /** Distributed scan over a directory of .shp files: Spark's binaryFile

@@ -124,6 +124,12 @@ class ApiSpec extends AnyFunSuite {
       assert(java.nio.file.Files.exists(file(s"site_tcd_0.3.$ext")), ext)
     val js = new String(java.nio.file.Files.readAllBytes(file("tree_geojson.js")), "UTF-8")
     assert(js.startsWith("var tree_shapes = {\"type\": \"FeatureCollection\""))
+    // the bundle written from the in-memory records is the trio's own,
+    // read back from disk
+    val (fields, rows) = graft.tables.ShapefileIO.parseDbf(
+      java.nio.file.Files.readAllBytes(file("site_tcd_0.3.dbf")))
+    assert(js.drop("var tree_shapes = ".length) === graft.tables.ShapefileIO.bundleGeojson(
+      graft.tables.ShapefileIO.read(file("site_tcd_0.3.shp").toString), fields, rows))
     // the histogram image is a REAL JPEG: decode it back with JdkCodec
     val jpg = java.nio.file.Files.readAllBytes(file("area_histogram.jpg"))
     val img = graft.operators.Multimodal.JdkCodec.decodeImage(jpg)

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
-import graft.grid.{CellIndex, TileGridSpec, Tiler}
+import graft.grid.{CellIndex, TileGridSpec}
+import graft.grid.TileGridSpec.Tile
 
 /** Integer-exact tile-grid goldens ported from the reference
   * (tests/unit/test_tiling.py:15-77, tests/unit/test_data.py:33-41)
@@ -23,13 +24,13 @@ class GridSpec extends AnyFunSuite {
   }
 
   test("golden: 2048² @ tile 2048 / overlap 256 → exactly 1 tile, full window") {
-    val tiles = Tiler.overlappingGrid(2048, 2048, 2048, 256)
+    val tiles = TileGridSpec(2048, 2048, 2048, 256).tiles
     assert(tiles.length === 1)
-    assert(tiles(0) === Tiler.Tile(0, 0, 0, 2048, 2048))
+    assert(tiles(0) === Tile(0, 0, 0, 2048, 2048))
   }
 
   test("golden: 2048² @ tile 1024 / overlap 256 → 9 tiles, all exactly 1024²") {
-    val tiles = Tiler.overlappingGrid(2048, 2048, 1024, 256)
+    val tiles = TileGridSpec(2048, 2048, 1024, 256).tiles
     assert(tiles.length === 9)
     tiles.foreach { t =>
       assert(t.maxX - t.minX === 1024 && t.maxY - t.minY === 1024)
@@ -40,64 +41,76 @@ class GridSpec extends AnyFunSuite {
   }
 
   test("golden: 2048² @ tile 1024 / overlap 0 → 4 tiles") {
-    assert(Tiler.overlappingGrid(2048, 2048, 1024, 0).length === 4)
+    assert(TileGridSpec(2048, 2048, 1024, 0).tiles.length === 4)
   }
 
   test("golden: 2048² @ tile 1024 / overlap 512 → 9 tiles (test_data.py:33-41)") {
-    assert(Tiler.overlappingGrid(2048, 2048, 1024, 512).length === 9)
+    assert(TileGridSpec(2048, 2048, 1024, 512).tiles.length === 9)
   }
 
   test("golden: oversize tile 4096 @ 2048² → 1 over-extending tile") {
-    val tiles = Tiler.overlappingGrid(2048, 2048, 4096, 256)
+    val tiles = TileGridSpec(2048, 2048, 4096, 256).tiles
     assert(tiles.length === 1)
-    assert(tiles(0) === Tiler.Tile(0, 0, 0, 4096, 4096))
+    assert(tiles(0) === Tile(0, 0, 0, 4096, 4096))
   }
 
-  test("geoGrid (P13): GSD-aware source windows + unknown-resolution fallback") {
+  test("atGsd (P13): GSD-aware source windows + unknown-resolution fallback") {
+    def tilesAtGsd(width: Long, height: Long, tileSize: Long, minOverlap: Long,
+                srcGsd: Double, targetGsd: Double): (Array[Tile], Double) = {
+      val (spec, scale) = TileGridSpec.atGsd(width, height, tileSize, minOverlap, srcGsd, targetGsd)
+      (spec.tiles, scale)
+    }
     // reference docstring case (tiling.py:389-392): tile 1024, src_gsd
     // 0.05, target 0.1 → scale 2, source windows 2048²
-    val (g, scale) = Tiler.geoGrid(8192, 8192, 1024, 256, srcGsd = 0.05, targetGsd = 0.1)
+    val (g, scale) = tilesAtGsd(8192, 8192, 1024, 256, srcGsd = 0.05, targetGsd = 0.1)
     assert(scale === 2.0)
     assert(g.forall(t => t.maxX - t.minX === 2048L && t.maxY - t.minY === 2048L))
     // fractional GSD: scale = round(0.1/0.07, 6) = 1.428571 (half-even),
     // source tile = round(1024 * 1.428571) = 1463 (Python round)
-    val (g2, s2) = Tiler.geoGrid(8192, 8192, 1024, 256, srcGsd = 0.07, targetGsd = 0.1)
+    val (g2, s2) = tilesAtGsd(8192, 8192, 1024, 256, srcGsd = 0.07, targetGsd = 0.1)
     assert(s2 === 1.428571)
     assert(g2.head.maxX - g2.head.minX === 1463L)
     // unknown resolution (res == 0): warn-and-continue semantics — the
     // plain grid at scale 1, not an exception (imagedataset.py:110-118)
-    val (g3, s3) = Tiler.geoGrid(2048, 2048, 1024, 256, srcGsd = 0.0, targetGsd = 0.1)
+    val (g3, s3) = tilesAtGsd(2048, 2048, 1024, 256, srcGsd = 0.0, targetGsd = 0.1)
     assert(s3 === 1.0 && g3.length === 9)
     // matched GSD degenerates to the plain grid
-    val (g4, s4) = Tiler.geoGrid(2048, 2048, 1024, 256, srcGsd = 0.1, targetGsd = 0.1)
+    val (g4, s4) = tilesAtGsd(2048, 2048, 1024, 256, srcGsd = 0.1, targetGsd = 0.1)
     assert(s4 === 1.0 && g4.length === 9)
     // invalid TARGET gsd also degrades to scale 1 (no negative-overlap
     // gapped grid, no crash)
-    val (g5, s5) = Tiler.geoGrid(2048, 2048, 1024, 256, srcGsd = 0.1, targetGsd = 0.0)
+    val (g5, s5) = tilesAtGsd(2048, 2048, 1024, 256, srcGsd = 0.1, targetGsd = 0.0)
     assert(s5 === 1.0 && g5.length === 9)
     // extreme downscale: rounded overlap clamps below the tile so the
     // grid stays valid and gap-free
-    val (t6, o6, _) = Tiler.geoScale(1024, 1000, srcGsd = 341.0, targetGsd = 1.0)
+    val (t6, o6, _) = TileGridSpec.geoScale(1024, 1000, srcGsd = 341.0, targetGsd = 1.0)
     assert(o6 >= 0 && o6 < t6)
   }
 
   test("overlap > tile size raises (test_tiling.py:41-44)") {
-    assertThrows[IllegalArgumentException](Tiler.overlappingGrid(2048, 2048, 256, 512))
+    assertThrows[IllegalArgumentException](TileGridSpec(2048, 2048, 256, 512))
+  }
+
+  test("negative overlap or non-positive tile size is rejected, not a gapped grid") {
+    // overlap -512 strides 1536 px: x-edges [0, 1536, 3072] leave
+    // [1024, 1536) uncovered, so covering(1200, y) would be empty and
+    // assignTiles' explode would drop the page
+    val gapped = intercept[IllegalArgumentException](TileGridSpec(4096, 4096, 1024, -512))
+    assert(gapped.getMessage.contains("overlap=-512"))
+    assertThrows[IllegalArgumentException](TileGridSpec(4096, 4096, 0, -1))
+    assertThrows[IllegalArgumentException](TileGridSpec(4096, 4096, -1024, -2048))
+    // zero overlap stays legal: the edges abut with no gap
+    val abut = TileGridSpec(4096, 4096, 1024, 0)
+    assert(abut.xEdges.toSeq === Seq(0L, 1024L, 2048L, 3072L))
+    assert(abut.covering(1200.0, 0.0).toSeq === Seq(1L))
   }
 
   test("linspace truncation matches numpy astype(int)") {
     // numpy: linspace(0, 1000, 3) = [0, 500, 1000]; linspace(0, 1001, 3)
     // = [0, 500.5, 1001] → astype(int) = [0, 500, 1001]
-    assert(Tiler.linspaceInt(1000, 3).toSeq === Seq(0L, 500L, 1000L))
-    assert(Tiler.linspaceInt(1001, 3).toSeq === Seq(0L, 500L, 1001L))
-    assert(Tiler.linspaceInt(-2048, 1).toSeq === Seq(0L))
-  }
-
-  test("non-overlapping grid: clamped edge tiles (tiling.py:17-44)") {
-    val tiles = Tiler.nonOverlappingGrid(2500, 2048, 1024)
-    assert(tiles.length === 3 * 2)
-    assert(tiles.forall(t => t.maxX <= 2500 && t.maxY <= 2048))
-    assert(tiles.exists(t => t.maxX - t.minX == 2500 - 2048)) // clamped last column
+    assert(TileGridSpec.linspaceInt(1000, 3).toSeq === Seq(0L, 500L, 1000L))
+    assert(TileGridSpec.linspaceInt(1001, 3).toSeq === Seq(0L, 500L, 1001L))
+    assert(TileGridSpec.linspaceInt(-2048, 1).toSeq === Seq(0L))
   }
 
   test("covering tiles: grid spec arithmetic agrees with brute force") {
@@ -111,12 +124,6 @@ class GridSpec extends AnyFunSuite {
       assert(got === want)
       assert(got.nonEmpty) // grid covers the extent
     }
-  }
-
-  test("covering matches Tiler.coveringTiles helper") {
-    val got = Tiler.coveringTiles(2048, 2048, 1024, 256, 700.0, 300.0)
-    val spec = TileGridSpec(2048, 2048, 1024, 256)
-    assert(got.toSet === spec.covering(700.0, 300.0).toSet)
   }
 
   test("closed-form covering == linear edge scan over random specs × 10⁴ points") {
@@ -164,7 +171,7 @@ class GridSpec extends AnyFunSuite {
     }
   }
 
-  test("encode/decode/parent/childRange coherence") {
+  test("encode/decode/parent coherence") {
     val id = CellIndex.encode(1000.0, 500.0, 8, 2048.0, 2048.0)
     assert(CellIndex.level(id) === 8)
     assert(CellIndex.ix(id) === (1000.0 / 2048 * 256).toLong)
@@ -172,8 +179,6 @@ class GridSpec extends AnyFunSuite {
     val p = CellIndex.parent(id)
     assert(CellIndex.level(p) === 7)
     assert(CellIndex.ix(p) === CellIndex.ix(id) / 2)
-    val (lo, hi) = CellIndex.childRange(p, 8)
-    assert(id >= lo && id <= hi) // descendant ids form one contiguous range
   }
 
   test("neighborhood ring: interior cell has (2r+1)² neighbors, corner clamps") {

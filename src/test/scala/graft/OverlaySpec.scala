@@ -508,12 +508,12 @@ class OverlaySpec extends AnyFunSuite {
     assert(oddRingRejected(pair), pair.toString)
     // a ring of under 3 vertices has no area: skipped, not an error
     val short = Seq(1.0, 1.0, 2.0, 2.0)
-    val unionArea = "aggregate(transform(u, r -> st_area(r)), 0D, (a, x) -> a + x)"
+    val ringAreaSum = "aggregate(transform(u, r -> st_area(r)), 0D, (a, x) -> a + x)"
     assert(Seq(square, short).toDF("poly")
       .agg(graft.functions.UnionAggApi.st_union_agg(col("poly")).as("u"))
-      .selectExpr(unionArea).head().getDouble(0) === 16.0)
+      .selectExpr(ringAreaSum).head().getDouble(0) === 16.0)
     assert(Seq((square, short)).toDF("a", "b").selectExpr("st_union(a, b) AS u")
-      .selectExpr(unionArea).head().getDouble(0) === 16.0)
+      .selectExpr(ringAreaSum).head().getDouble(0) === 16.0)
   }
 
   test("SQL surface: st_union / st_intersection / st_difference / st_make_valid") {

@@ -106,6 +106,28 @@ class PlanSpec extends AnyFunSuite {
     assert(row.getDouble(3) === 400.0 && row.getDouble(4) === 5.0)
   }
 
+  test("cell_encode rejects a level outside [0, MaxLevel] in SQL and the column API") {
+    GraftExtensions.register(spark)
+    def causes(t: Throwable): Iterator[Throwable] = Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+    def rejected(level: Int)(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(s"level $level outside [0, 28]")), e.toString)
+    }
+    // level 29 would let distinct cells share an id (28-bit interleave)
+    for (level <- Seq(29, -1)) {
+      rejected(level)(spark.sql(s"SELECT cell_encode(100D, 200D, $level, 2048D, 2048D)").collect())
+      rejected(level)(spark.range(1).select(cell_encode(lit(100.0), lit(200.0), level, 2048.0, 2048.0)))
+    }
+    // both ends of the range still encode
+    for (level <- Seq(0, graft.grid.CellIndex.MaxLevel)) {
+      val got = spark.sql(s"SELECT cell_encode(100D, 200D, $level, 2048D, 2048D)").head().getLong(0)
+      assert(got === graft.grid.CellIndex.encode(100, 200, level, 2048, 2048))
+      assert(spark.range(1).select(cell_encode(lit(100.0), lit(200.0), level, 2048.0, 2048.0))
+        .head().getLong(0) === got)
+    }
+  }
+
   test("knnGridExact equals brute-force kNN on sparse points (ring-1 insufficient)") {
     import spark.implicits._
     // 120 points in 2048^2 at level 5 (64-px cells): most cells empty,

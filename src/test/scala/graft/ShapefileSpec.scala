@@ -15,6 +15,15 @@ class ShapefileSpec extends AnyFunSuite {
   private val square = Array(0.5, 0.5, 0.5, 10.5, 10.5, 10.5, 10.5, 0.5) // CW outer
   private val hole = Array(3.25, 3.25, 6.75, 3.25, 6.75, 6.75, 3.25, 6.75) // CCW hole
 
+  /** The GeoJSON bundle of a trio read back from disk (.dbf optional). */
+  private def bundleFromDisk(shp: String): String = {
+    val dbf = java.nio.file.Paths.get(shp.stripSuffix(".shp") + ".dbf")
+    val (fields, rows) =
+      if (java.nio.file.Files.exists(dbf)) ShapefileIO.parseDbf(java.nio.file.Files.readAllBytes(dbf))
+      else (Seq.empty, Seq.empty)
+    ShapefileIO.bundleGeojson(ShapefileIO.read(shp), fields, rows)
+  }
+
   test("write/parse round trip preserves record numbers, ring structure, exact coords") {
     val recs = Seq(
       ShpRecord(1, Seq(square)),
@@ -243,7 +252,7 @@ class ShapefileSpec extends AnyFunSuite {
       Seq(ShpRecord(1, Seq(square)), ShpRecord(2, Seq(tri))),
       ShapefileIO.MergeFields,
       Seq(Seq[Any]("0", 100.0, 40.0, 0.875, 1), Seq[Any]("1", 24.0, 20.5, 0.5, 0)))
-    val json = ShapefileIO.bundleGeojson(s"$dir/t.shp")
+    val json = bundleFromDisk(s"$dir/t.shp")
     assert(json.startsWith("""{"type": "FeatureCollection", "bbox": ["""))
     assert(json.contains(""""type": "Feature""""))
     // typed properties: N 24.15 -> float, N 18.0 -> int, C -> string
@@ -254,12 +263,6 @@ class ShapefileSpec extends AnyFunSuite {
     assert(json.contains("[0.5, 0.5]") )
     val firstRing = json.split("\"coordinates\": ")(1)
     assert(firstRing.startsWith("[[[0.5, 0.5]") && firstRing.contains("[10.5, 0.5], [0.5, 0.5]]"))
-    // the .js sibling artifact
-    ShapefileIO.writeGeojsonJs(s"$dir/t.shp")
-    val js = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/tree_geojson.js")), "UTF-8")
-    assert(js.startsWith("var tree_shapes = {\"type\": \"FeatureCollection\""))
-    assert(js.drop("var tree_shapes = ".length) === json)
   }
 
   test("bundleGeojson: multi-outer record emits MultiPolygon with the hole on the right outer") {
@@ -271,7 +274,7 @@ class ShapefileSpec extends AnyFunSuite {
     assert(Geom.signedArea(outerA) < 0 && Geom.signedArea(outerB) < 0 && Geom.signedArea(holeA) > 0)
     val dir = java.nio.file.Files.createTempDirectory("shpmp").toString
     ShapefileIO.writeFile(s"$dir/mp.shp", Seq(ShpRecord(1, Seq(outerA, holeA, outerB))))
-    val json = ShapefileIO.bundleGeojson(s"$dir/mp.shp")
+    val json = bundleFromDisk(s"$dir/mp.shp")
     assert(json.contains("\"type\": \"MultiPolygon\""))
     // two polygons: [outerA, holeA] and [outerB]
     val coords = json.split("\"coordinates\": ")(1)
@@ -280,12 +283,12 @@ class ShapefileSpec extends AnyFunSuite {
     assert(coords.contains("[[[20, 0]"))    // outer B as a separate polygon
     // single-outer records still emit plain Polygon
     ShapefileIO.writeFile(s"$dir/p.shp", Seq(ShpRecord(1, Seq(outerA, holeA))))
-    assert(ShapefileIO.bundleGeojson(s"$dir/p.shp").contains("\"type\": \"Polygon\""))
+    assert(bundleFromDisk(s"$dir/p.shp").contains("\"type\": \"Polygon\""))
     // in-memory bundle is byte-identical to the from-disk one
     val (recs, attrs) = (Seq(ShpRecord(1, Seq(outerA, holeA, outerB))),
       Seq(Seq[Any]("0", 84.0, 60.0, 0.9, 1)))
     ShapefileIO.writeFile(s"$dir/m2.shp", recs, ShapefileIO.MergeFields, attrs)
-    val fromDisk = ShapefileIO.bundleGeojson(s"$dir/m2.shp")
+    val fromDisk = bundleFromDisk(s"$dir/m2.shp")
     val inMem = ShapefileIO.bundleGeojson(recs, ShapefileIO.MergeFields,
       attrs.map(ShapefileIO.cellStrings(ShapefileIO.MergeFields, _)))
     assert(inMem === fromDisk)
