@@ -1,42 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.GeoOps
-import graft.tables.IcebergLite
-
-/** Structured-Streaming façade over the batch engine. The reference is
-  * batch-with-checkpointing (SURVEY.md §2.10 — no event-time semantics
-  * exist in it), so streaming here is an INGEST mode: micro-batches of
-  * pages flow through the same geocode → tile-assign operators and each
-  * batch commits one IcebergLite snapshot with per-region lineage —
-  * `foreachBatch` + the commit log, exactly the pattern the survey
-  * prescribes.
+/** Structured Streaming operators. The reference is batch-only
+  * (SURVEY.md §2.10 — no streaming or event-time semantics exist in
+  * it); batch ingest and resume go through `CrownJob` and IcebergLite.
+  * The one streaming operator is continuous exact dedup.
   */
 object StreamingIngest {
-
-  /** Micro-batch ingest: per batch, tile-assign and commit one snapshot
-    * (stage "stream_assign") with per-region lineage. Returns the
-    * writer (caller starts/awaits). */
-  def ingest(spark: SparkSession, pages: DataFrame, warehouse: String,
-             checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    pages.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val assigned = GeoOps.assignTiles(batch)
-            .select(col("i"), col("region"), col("tile_id"), col("x"), col("y"))
-          // batchId as idempotency key: replay after a crash between
-          // manifest rename and checkpoint write is a no-op
-          IcebergLite.commit(spark, warehouse, "stream_assign", assigned,
-            "region", idempotencyKey = batchId)
-          ()
-        }
-      }
-  }
 
   /** Streaming exact dedup — the continuous-ingest flavor of
     * [[graft.operators.Dedup.exact]]: first-seen content hash wins

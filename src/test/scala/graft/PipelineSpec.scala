@@ -186,48 +186,6 @@ class PipelineSpec extends AnyFunSuite {
     IcebergLite.commit(spark, root, "s1", df.filter(col("id") < 10), "region")
     assert(IcebergLite.read(spark, root, "s1").get.count() === 110)
     assert(IcebergLite.snapshots(root).map(_.id) === Seq(1L, 2L))
-    // time travel: state as of snapshot 1 excludes the second commit
-    assert(IcebergLite.readAsOf(spark, root, "s1", 1L).get.count() === 100)
-    assert(IcebergLite.readAsOf(spark, root, "s1", 0L).isEmpty)
-    // idempotency key: re-commit with the same key is a no-op
-    val k1 = IcebergLite.commit(spark, root, "s1", df, "region", idempotencyKey = 7L)
-    val k2 = IcebergLite.commit(spark, root, "s1", df, "region", idempotencyKey = 7L)
-    assert(k1 === k2)
-    assert(IcebergLite.snapshots(root).size === 3)
-  }
-
-  test("IcebergLite readRange: snapshot skipping via manifest key stats") {
-    val root = java.nio.file.Files.createTempDirectory("icebrange").toString
-    // three snapshots with disjoint region ranges
-    (0 until 3).foreach { k =>
-      val df = spark.range(100).toDF("id")
-        .withColumn("region", col("id") % 10 + k * 10)
-      IcebergLite.commit(spark, root, "s", df, "region")
-    }
-    val snaps = IcebergLite.snapshots(root)
-    assert(snaps.map(s => (s.keyMin, s.keyMax)) === Seq((0L, 9L), (10L, 19L), (20L, 29L)))
-    // a range query touching one snapshot lists ONLY that snapshot's
-    // files (true data skipping, not just a filter)
-    val pruned = IcebergLite.readRange(spark, root, "s", "region", 12, 15).get
-    assert(pruned.count() === 40)
-    assert(pruned.inputFiles.forall(_.contains("snap-2")),
-      s"expected only snap-2 files, got ${pruned.inputFiles.toSeq}")
-    // spanning range reads two snapshots; out-of-range reads none
-    val two = IcebergLite.readRange(spark, root, "s", "region", 8, 12).get
-    assert(two.count() === 50)
-    assert(two.inputFiles.forall(f => f.contains("snap-1") || f.contains("snap-2")))
-    assert(IcebergLite.readRange(spark, root, "s", "region", 100, 200).isEmpty)
-    // the residual filter reaches the parquet scan (row-group pruning)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("GreaterThanOrEqual(region,12)"),
-      s"residual filter not pushed:\n$plan")
-    // an EMPTY snapshot (no rows → no stats) must never match a range
-    // read — "no stats" is not "contains every key"
-    IcebergLite.commit(spark, root, "s",
-      spark.range(0).toDF("id").withColumn("region", col("id")), "region")
-    val after = IcebergLite.readRange(spark, root, "s", "region", 12, 15).get
-    assert(after.inputFiles.forall(_.contains("snap-2")),
-      "empty snapshot leaked into the pruned file list")
   }
 
   /** Spark jobs launched while `body` runs, counted by a listener. */
@@ -256,7 +214,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(IcebergLite.snapshots(wh) === snaps)
   }
 
-  test("IcebergLite read and compact start no schema-inference job") {
+  test("IcebergLite read starts no schema-inference job") {
     val root = Files.createTempDirectory("iceb_schema").toString
     val df = spark.range(40).toDF("id")
       .withColumn("region", col("id") % 3).withColumn("tag", lit("t").cast("string"))
@@ -264,12 +222,8 @@ class PipelineSpec extends AnyFunSuite {
     val files = IcebergLite.snapshots(root).map(s => s"$root/data/s/snap-${s.id}")
     lazy val read = IcebergLite.read(spark, root, "s").get
     assert(jobsOf(read) === 0)
-    assert(jobsOf(IcebergLite.readRange(spark, root, "s", "region", 1, 1).get) === 0)
     assert(read.schema === spark.read.parquet(files: _*).schema)
     assert(read.count() === 40L)
-    // compaction: the rewrite's data write and tally, no read of its own
-    assert(jobsOf(IcebergLite.compact(spark, root, "s", "region")) <= 2)
-    assert(IcebergLite.read(spark, root, "s").get.count() === 40L)
   }
 
   test("IcebergLite lineage conserves rows over multi-key and empty commits") {
@@ -286,9 +240,6 @@ class PipelineSpec extends AnyFunSuite {
       val want = df.groupBy("region").count().as[(Long, Long)].collect().toMap
       assert(lin.filter(_._1 == id).map(r => r._2 -> r._3).toMap === want, s"snapshot $id")
       assert(snap.rowCount === want.values.sum && snap.rowCount === df.count())
-      val stats = if (want.isEmpty) (Long.MinValue, Long.MaxValue)
-        else (want.keys.min, want.keys.max)
-      assert((snap.keyMin, snap.keyMax) === stats, s"snapshot $id")
     }
     val data = IcebergLite.read(spark, root, "s").get
     assert(lin.map(_._3).sum === data.count())
@@ -356,74 +307,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(IcebergLite.snapshots(partial).size === snapsBefore)
   }
 
-  test("IcebergLite compact: snapshots collapse to one, data identical, other stages untouched") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("iceberg_compact").toString
-    (0 until 3).foreach { i =>
-      IcebergLite.commit(spark, root, "work",
-        Seq((i.toLong * 10, s"v$i"), (i.toLong * 10 + 1, s"w$i")).toDF("k", "v"), "k")
-    }
-    IcebergLite.commit(spark, root, "other", Seq((99L, "x")).toDF("k", "v"), "k")
-    val before = IcebergLite.read(spark, root, "work").get
-      .as[(Long, String)].collect().sortBy(_._1)
-    val oldIds = IcebergLite.snapshots(root).filter(_.stage == "work").map(_.id)
-    // a KEYED snapshot must survive compaction (its (stage, key)
-    // record is the streaming exactly-once replay guard)
-    IcebergLite.commit(spark, root, "work", Seq((50L, "keyed")).toDF("k", "v"), "k",
-      idempotencyKey = 7L)
-    val newId = IcebergLite.compact(spark, root, "work", "k", expireData = true)
-    assert(newId > 0)
-    val snaps = IcebergLite.snapshots(root)
-    assert(snaps.count(_.stage == "work") === 2) // compacted + keyed survivor
-    assert(snaps.exists(s => s.stage == "work" && s.id === newId))
-    assert(snaps.exists(s => s.stage == "work" && s.key === 7L), "keyed snapshot folded away")
-    assert(snaps.count(_.stage == "other") === 1) // untouched
-    // replaying the keyed batch is STILL a no-op after compaction
-    val replay = IcebergLite.commit(spark, root, "work",
-      Seq((50L, "keyed")).toDF("k", "v"), "k", idempotencyKey = 7L)
-    assert(replay === snaps.find(s => s.stage == "work" && s.key === 7L).get.id)
-    // data identical (compacted unkeyed rows + the keyed survivor);
-    // manifest stats (rowCount, key range) recomputed on the rewrite
-    val after = IcebergLite.read(spark, root, "work").get
-      .as[(Long, String)].collect().sortBy(_._1)
-    assert(after.toSeq === (before :+ (50L, "keyed")).sortBy(_._1).toSeq)
-    val ws = snaps.find(s => s.stage == "work" && s.id == newId).get
-    assert(ws.rowCount === 6 && ws.keyMin === 0 && ws.keyMax === 21)
-    // expired data dirs deleted (expireData = true)
-    oldIds.foreach { id =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$root/data/work/snap-$id")), s"snap-$id not expired")
-    }
-    // appends after compaction coexist with the compacted snapshot
-    IcebergLite.commit(spark, root, "work", Seq((100L, "z")).toDF("k", "v"), "k")
-    assert(IcebergLite.read(spark, root, "work").get.count() === 8)
-    // nothing to compact → -1, state unchanged
-    val root2 = java.nio.file.Files.createTempDirectory("iceberg_compact1").toString
-    IcebergLite.commit(spark, root2, "solo", Seq((1L, "a")).toDF("k", "v"), "k")
-    assert(IcebergLite.compact(spark, root2, "solo", "k") === -1L)
-    assert(IcebergLite.snapshots(root2).size === 1)
-  }
-
-  test("IcebergLite: concurrent compacts — exactly one wins, rows never doubled") {
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val root = java.nio.file.Files.createTempDirectory("iceberg_cc").toString
-    (0 until 4).foreach { i =>
-      IcebergLite.commit(spark, root, "s",
-        Seq((i.toLong, s"v$i")).toDF("k", "v"), "k")
-    }
-    val fs = (0 until 2).map(_ => Future(IcebergLite.compact(spark, root, "s", "k")))
-    val ids = fs.map(Await.result(_, 180.seconds))
-    // whichever interleaving happened, the validated swap admits at
-    // most one rewrite: the loser aborts (-1) instead of landing a
-    // second full-union snapshot that would double every row
-    assert(ids.count(_ > 0) === 1, s"ids=$ids")
-    assert(IcebergLite.read(spark, root, "s").get.count() === 4, "rows doubled or lost")
-    assert(IcebergLite.snapshots(root).count(_.stage == "s") === 1)
-  }
-
   test("IcebergLite: two concurrent committers — both snapshots visible, distinct ids") {
     import spark.implicits._
     import scala.concurrent.{Await, Future}
@@ -459,21 +342,84 @@ class PipelineSpec extends AnyFunSuite {
     try assert(live.count() <= 1L) finally live.close()
   }
 
-  test("IcebergLite: concurrent same-idempotency-key commits collapse to ONE snapshot") {
-    import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val root = java.nio.file.Files.createTempDirectory("iceberg_idem").toString
-    // both racers pass the optimistic pre-check (same manifest state),
-    // so only the under-lock re-check can prevent a duplicate
-    val fs = (0 until 2).map(_ => Future(
-      IcebergLite.commit(spark, root, "batch", Seq((1L, "x")).toDF("k", "v"), "k",
-        idempotencyKey = 7L)))
-    val ids = fs.map(Await.result(_, 120.seconds))
-    assert(ids.head === ids(1), "both callers must observe the winning snapshot id")
-    val snaps = IcebergLite.snapshots(root)
-    assert(snaps.count(_.stage == "batch") === 1, s"duplicate idempotent commit: $snaps")
-    assert(IcebergLite.read(spark, root, "batch").get.count() === 1L) // rows not doubled
+  test("IcebergLite commit refuses a stage name the manifest and paths cannot carry") {
+    val root = Files.createTempDirectory("iceb_stage").toString
+    val df = Seq((1L, "a")).toDF("k", "v")
+    // a quote broke the manifest entry (the snapshot vanished from reads);
+    // a slash or ".." put data and lineage outside their directories
+    Seq("a\"b", "../up", "a/b", "x.y", "").foreach { stage =>
+      intercept[IllegalArgumentException](IcebergLite.commit(spark, root, stage, df, "k"))
+    }
+    assert(IcebergLite.snapshots(root).isEmpty)
+    assert(!Files.exists(Paths.get(root, "data")) && !Files.exists(Paths.get(root, "lineage")))
+    assert(IcebergLite.commit(spark, root, "Stage_2", df, "k") === 1L)
+    assert(IcebergLite.snapshots(root) === Seq(IcebergLite.Snapshot(1L, "Stage_2", 1L)))
+  }
+
+  test("IcebergLite: a manifest entry or lineage line that does not parse fails loudly") {
+    val root = Files.createTempDirectory("iceb_parse").toString
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    IcebergLite.commit(spark, root, "s", df, "k")
+    val manifest = Paths.get(root, "manifest.json")
+    val good = new String(Files.readAllBytes(manifest), "UTF-8")
+    def expectFail(file: java.nio.file.Path)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(file.toString), e.getMessage)
+    }
+    // an entry with an unescaped quote in its stage, and a truncated manifest
+    val bad = good.stripSuffix("]}") + """,{"id":2,"stage":"a"b","rowCount":1}]}"""
+    Seq(bad, good.dropRight(1)).foreach { txt =>
+      Files.write(manifest, txt.getBytes("UTF-8"))
+      expectFail(manifest)(IcebergLite.snapshots(root))
+      expectFail(manifest)(IcebergLite.read(spark, root, "s"))
+      // a commit must not rewrite the manifest without the entry
+      expectFail(manifest)(IcebergLite.commit(spark, root, "s", df, "k"))
+      assert(new String(Files.readAllBytes(manifest), "UTF-8") === txt)
+    }
+    Files.write(manifest, good.getBytes("UTF-8"))
+    val lineage = Paths.get(root, "lineage", "s", "snap-1.jsonl")
+    Files.write(lineage, (new String(Files.readAllBytes(lineage), "UTF-8") +
+      "{\"unitKey\":3,\"rowCount\":}\n").getBytes("UTF-8"))
+    expectFail(lineage)(IcebergLite.committedKeys(spark, root, "s"))
+    expectFail(lineage)(IcebergLite.lineage(spark, root, "s"))
+  }
+
+  test("IcebergLite reads a warehouse whose manifest carries wallMs, key, kmin and kmax") {
+    val root = Files.createTempDirectory("iceb_compat").toString
+    // manifest, lineage and data files as the earlier writer laid them out
+    Files.write(Paths.get(root, "manifest.json"), ("""{"snapshots":[""" +
+      """{"id":1,"stage":"crowns","rowCount":3,"wallMs":412,"key":-1,"kmin":0,"kmax":1},""" +
+      """{"id":2,"stage":"crowns","rowCount":2,"wallMs":87,"key":-1,"kmin":2,"kmax":2},""" +
+      """{"id":3,"stage":"stream_assign","rowCount":1,"wallMs":30,"key":0,"kmin":7,"kmax":7},""" +
+      """{"id":4,"stage":"stream_assign","rowCount":0,"wallMs":5,"key":1}]}""").getBytes("UTF-8"))
+    val files = Seq(
+      ("crowns", 1L, Seq((0L, "a"), (0L, "b"), (1L, "c")), "{\"unitKey\":0,\"rowCount\":2}\n{\"unitKey\":1,\"rowCount\":1}\n"),
+      ("crowns", 2L, Seq((2L, "d"), (2L, "e")), "{\"unitKey\":2,\"rowCount\":2}\n"),
+      ("stream_assign", 3L, Seq((7L, "f")), "{\"unitKey\":7,\"rowCount\":1}\n"),
+      ("stream_assign", 4L, Seq.empty[(Long, String)], ""))
+    files.foreach { case (stage, id, rows, lineage) =>
+      rows.toDF("region", "v").write.parquet(s"$root/data/$stage/snap-$id")
+      Files.createDirectories(Paths.get(root, "lineage", stage))
+      Files.write(Paths.get(root, "lineage", stage, s"snap-$id.jsonl"), lineage.getBytes("UTF-8"))
+    }
+    assert(IcebergLite.snapshots(root) === files.map { case (stage, id, rows, _) =>
+      IcebergLite.Snapshot(id, stage, rows.size.toLong) })
+    def rows(stage: String) =
+      IcebergLite.read(spark, root, stage).get.as[(Long, String)].collect().sorted.toSeq
+    def keys(stage: String) =
+      IcebergLite.committedKeys(spark, root, stage).get.as[Long].collect().sorted.toSeq
+    assert(rows("crowns") === files.take(2).flatMap(_._3).sorted)
+    assert(rows("stream_assign") === Seq((7L, "f")))
+    assert(keys("crowns") === Seq(0L, 1L, 2L))
+    assert(keys("stream_assign") === Seq(7L))
+    assert(IcebergLite.lineage(spark, root, "crowns").get
+      .select("snapshotId", "unitKey", "rowCount").as[(Long, Long, Long)].collect().toSeq ===
+      Seq((1L, 0L, 2L), (1L, 1L, 1L), (2L, 2L, 2L)))
+    // the next commit appends after the earlier ids and keeps every entry
+    assert(IcebergLite.commit(spark, root, "crowns", Seq((3L, "g")).toDF("region", "v"),
+      "region") === 5L)
+    assert(IcebergLite.snapshots(root).map(_.id) === Seq(1L, 2L, 3L, 4L, 5L))
+    assert(keys("crowns") === Seq(0L, 1L, 2L, 3L))
+    assert(rows("crowns").size === 6)
   }
 }

@@ -2,48 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamingIngest
-import graft.tables.{IcebergLite, PagesGen}
 
-/** Structured-Streaming façade: micro-batch ingest through the same
-  * operators, committing IcebergLite snapshots; streaming dedup. */
+/** Structured Streaming: exact dedup across micro-batches, with and
+  * without a state TTL. */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
-
-  test("foreachBatch ingest commits snapshots; stream rows equal batch rows") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[Long]
-    val pages = PagesGen.projectColumns(mem.toDF().toDF("i"))
-    val wh = java.nio.file.Files.createTempDirectory("stream_wh").toString
-    val cp = java.nio.file.Files.createTempDirectory("stream_cp").toString
-
-    mem.addData(0L until 2000L: _*)
-    val q = StreamingIngest.ingest(spark, pages, wh, cp).start()
-    q.awaitTermination(60000)
-
-    val assigned = IcebergLite.read(spark, wh, "stream_assign").get
-    // identical to the batch path on the same indices
-    val batch = graft.operators.GeoOps.assignTiles(PagesGen.pages(spark, 2000))
-      .select(col("i"), col("tile_id"))
-    assert(assigned.count() === batch.count())
-    val streamSet = assigned.select("i", "tile_id").collect().map(_.toString()).toSet
-    val batchSet = batch.collect().map(_.toString()).toSet
-    assert(streamSet === batchSet)
-    // lineage records exactly the regions of the ingested pages
-    assert(IcebergLite.committedKeys(spark, wh, "stream_assign").get
-      .collect().map(_.getLong(0)).toSet ===
-      (0L until 2000L).map(_ / graft.operators.GeoOps.PagesPerRegion).toSet)
-
-    // second increment appends a new snapshot, no reprocessing of batch 1
-    mem.addData(2000L until 3000L: _*)
-    val q2 = StreamingIngest.ingest(spark, pages, wh, cp).start()
-    q2.awaitTermination(60000)
-    assert(IcebergLite.read(spark, wh, "stream_assign").get.count() ===
-      graft.operators.GeoOps.assignTiles(PagesGen.pages(spark, 3000)).count())
-  }
 
   test("streaming exact dedup: first-seen wins within and across batches") {
     import spark.implicits._
