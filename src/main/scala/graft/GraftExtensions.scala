@@ -25,18 +25,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
 
-  private def constOf(fn: String, pos: Int, e: Expression): Any = e match {
-    case l: Literal => l.value
-    case f if f.foldable => f.eval(null)
-    case other => throw new IllegalArgumentException(
-      s"$fn: argument ${pos + 1} must be a constant, got ${other.sql}")
+  private def constOf(fn: String, pos: Int, e: Expression): Any = {
+    val v = e match {
+      case l: Literal => l.value
+      case f if f.foldable => f.eval(null)
+      case other => throw new IllegalArgumentException(
+        s"$fn: argument ${pos + 1} must be a constant, got ${other.sql}")
+    }
+    require(v != null, s"$fn: argument ${pos + 1} must not be NULL")
+    v
   }
 
   private def dbl(fn: String, pos: Int, e: Expression): Double =
     constOf(fn, pos, e).toString.toDouble
 
-  private def int(fn: String, pos: Int, e: Expression): Int =
-    constOf(fn, pos, e).toString.toDouble.toInt
+  private def int(fn: String, pos: Int, e: Expression): Int = {
+    val d = dbl(fn, pos, e)
+    require(d == d.toInt, s"$fn: argument ${pos + 1} must be an integer, got $d")
+    d.toInt
+  }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cell_encode" -> ((args: Seq[Expression]) =>

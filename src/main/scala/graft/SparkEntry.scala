@@ -596,17 +596,15 @@ object SparkEntry {
     }),
 
     // --- dedup suite over documents (SURVEY/training-data ops)
-    // maxDf = 10000 is the explicit opt-in hot-shingle cap (the oracle
-    // SQL replicates exactly this cap)
     "dedup_ngram_jaccard" -> ((s, dir) =>
       Dedup.ngramJaccardPairs(s.read.parquet(t(dir, "documents")),
-        n = 3, thrMilli = 100, maxDf = 10000)),
+        n = 3, thrMilli = 100)),
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshPairs(s.read.parquet(t(dir, "documents")),
         n = 3, numHashes = 32, bands = 8, thrMilli = 100)),
     // maxHamming = 3 → 4 × 16-bit pigeonhole chunks: candidate join
     // bounded at ~4n²/2¹⁶ (maxHamming = 8 gave 7-bit chunks → quadratic
-    // candidates at corpus scale; wider radii need the maxBucket cap)
+    // candidates at corpus scale, so simhashPairs rejects it)
     "dedup_simhash" -> ((s, dir) =>
       Dedup.simhashPairs(s.read.parquet(t(dir, "documents")), maxHamming = 3)),
     "dedup_cosine_neardup" -> ((s, dir) =>
@@ -1066,18 +1064,18 @@ object SparkEntry {
     "stream_dedup" ->
       "SELECT md5(text) AS h, CAST(min(doc_id) AS BIGINT) AS keeper FROM documents GROUP BY 1",
     "dedup_ngram_jaccard" ->
-      """WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT DISTINCT doc_id, list_aggregate(toks[i:i+2], 'string_agg', ' ') AS shingle
         |  FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |       -- 2000 >> max tokens in any documents fixture (n_chars <= 553)
         |       (SELECT unnest(generate_series(1, 2000)) AS i)
         |  WHERE i + 2 <= len(toks)),
         |sz AS (SELECT doc_id, count(*) AS s FROM sh GROUP BY 1),
-        |-- same hot-shingle cap as the engine (df > 10000 dropped from
+        |-- same hot-shingle cap as the engine (df > ${Dedup.MaxDf} dropped from
         |-- pair generation only; doc sizes keep every shingle)
         |cold AS (
         |  SELECT sh.* FROM sh
-        |  JOIN (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) <= 10000) k
+        |  JOIN (SELECT shingle FROM sh GROUP BY 1 HAVING count(*) <= ${Dedup.MaxDf}) k
         |  USING (shingle)),
         |pairs AS (
         |  SELECT l.doc_id AS a, r.doc_id AS b, count(*) AS common

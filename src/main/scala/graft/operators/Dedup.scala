@@ -83,121 +83,83 @@ object Dedup {
       }.toDF("doc_id", "sz", "shingle")
   }
 
-  /** All-pairs n-gram Jaccard similarity ≥ `thr` via inverted-index
-    * self-join on shingle (pairs only materialize where a shingle is
+  /** Document-frequency cap of [[ngramJaccardPairs]]: a shingle held
+    * by more than `MaxDf` docs takes no part in pair generation, so no
+    * posting list holds more than `MaxDf` entries. [[hotShingles]]
+    * reports what the cap drops. */
+  val MaxDf = 10000
+
+  /** (shingle, df) for each shingle of `sh` held by more than [[MaxDf]]
+    * rows — the groups [[ngramJaccardPairs]] drops and [[hotShingles]]
+    * reports. */
+  private def hotShingleDf(sh: DataFrame): DataFrame =
+    sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      .filter(col("df") > MaxDf)
+
+  /** All-pairs n-gram Jaccard similarity ≥ `thrMilli`/1000 via per-
+    * shingle posting lists (pairs only materialize where a shingle is
     * shared). A shingle present in d documents materializes d² pairs —
     * quadratic in document frequency, which AQE cannot shrink (it only
-    * splits partitions) — so shingles with df > `maxDf` are dropped
+    * splits partitions) — so shingles with df > [[MaxDf]] are dropped
     * from pair GENERATION (boilerplate shingles connect everything and
     * carry no similarity signal anyway). Doc sizes na/nb still count
     * every shingle, so jac_milli stays a true Jaccard lower bound for
     * surviving pairs; `common` undercounts only by dropped-hot shared
     * shingles. Pairs whose overlap is exclusively hot shingles are
     * missed — corpora like that belong on [[minhashLshPairs]]. Use
-    * [[hotShingles]] to audit the dropped mass. The cap is OPT-IN
-    * (default = no cap); any job at corpus scale should pass an
-    * explicit maxDf. MIGRATION NOTE: before round 3 the default was
-    * maxDf = 10000 — a caller relying on that implicit cap now gets
-    * the complete (uncapped) pair set, including previously-dropped
-    * hot-shingle pairs, and on a skewed corpus an unbounded quadratic
-    * candidate join; pass maxDf = 10000 explicitly to keep the old
-    * behavior. Output (a, b, common, na, nb, jac_milli)
-    * with a < b; jac_milli = floor(1000 * common / (na+nb-common))
-    * (integer → engine-exact for the oracle). */
-  def ngramJaccardPairs(docs: DataFrame, n: Int = 3, thrMilli: Int = 500,
-                        maxDf: Int = Int.MaxValue): DataFrame = {
+    * [[hotShingles]] to audit the dropped mass. Output (a, b, common,
+    * na, nb, jac_milli) with a < b; jac_milli = floor(1000 * common /
+    * (na+nb-common)) (integer → engine-exact for the oracle). */
+  def ngramJaccardPairs(docs: DataFrame, n: Int = 3, thrMilli: Int = 500): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // (doc_id, sz, shingle): the doc's distinct-shingle count rides
     // with every shingle row, so the pair stage needs NO join back to
-    // a sizes table (the old shape re-scanned the source for sizes and
-    // joined it twice). sz is a pure function of doc_id, so grouping
+    // a sizes table. sz is a pure function of doc_id, so grouping
     // pairs by (a, na, b, nb) below groups exactly by (a, b).
-    // dropHotKeys stays AHEAD of the posting-list build: it enforces
-    // the df > maxDf cap with a constant-memory count + anti-join, so
-    // no collect_list buffer ever holds a hot shingle's full posting
-    // list (the cap's whole point is bounding that); with the cap
-    // applied, every surviving list is ≤ maxDf entries.
-    val cold = dropHotKeys(shinglesWithSize(docs, n), Seq("shingle"), maxDf)
-    // With a cap: ONE exchange builds the ≤ maxDf posting lists and
-    // pair generation walks each list directly instead of re-shuffling
-    // every (doc, shingle) row through a self-join. Pair SET and
-    // per-pair `common` counts are identical: a pair is emitted once
-    // per shared cold shingle either way (the posting list is sorted
-    // first, so a < b like the join's filter). UNCAPPED (the opt-in
-    // default) falls back to the streaming self-join shape — it
-    // produces the same d² pairs but never buffers a whole posting
-    // list in one aggregation row, which an unbounded collect_list
-    // would (the cap is what makes the list shape memory-safe).
-    val pairs =
-      if (maxDf == Int.MaxValue)
-        cold.as("l").join(cold.as("r"), col("l.shingle") === col("r.shingle"))
-          .filter(col("l.doc_id") < col("r.doc_id"))
-          .groupBy(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
-            col("l.sz").as("na"), col("r.sz").as("nb"))
-          .agg(count(lit(1)).as("common"))
-      else
-        cold.groupBy(col("shingle"))
-          .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ids"))
-          .select(col("ids")).as[Seq[(Long, Long)]]
-          .mapPartitions { lists =>
-            lists.flatMap { ids0 =>
-              val ids = ids0.toArray.sortBy(_._1)
-              new Iterator[(Long, Long, Long, Long)] {
-                private var i = 0
-                private var j = 1
-                def hasNext: Boolean = i < ids.length - 1
-                def next(): (Long, Long, Long, Long) = {
-                  val p = (ids(i)._1, ids(j)._1, ids(i)._2, ids(j)._2)
-                  j += 1
-                  if (j >= ids.length) { i += 1; j = i + 1 }
-                  p
-                }
-              }
+    val sh = shinglesWithSize(docs, n)
+    // the hot-shingle anti-join stays AHEAD of the posting-list build:
+    // it enforces the cap with a constant-memory count, so no
+    // collect_list buffer ever holds a hot shingle's full posting list
+    val cold = sh.join(hotShingleDf(sh).select("shingle"), Seq("shingle"), "left_anti")
+    // ONE exchange builds the ≤ MaxDf posting lists and pair generation
+    // walks each sorted list directly: a pair is emitted once per
+    // shared cold shingle, which the groupBy below counts as `common`
+    cold.groupBy(col("shingle"))
+      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ids"))
+      .select(col("ids")).as[Seq[(Long, Long)]]
+      .mapPartitions { lists =>
+        lists.flatMap { ids0 =>
+          val ids = ids0.toArray.sortBy(_._1)
+          new Iterator[(Long, Long, Long, Long)] {
+            private var i = 0
+            private var j = 1
+            def hasNext: Boolean = i < ids.length - 1
+            def next(): (Long, Long, Long, Long) = {
+              val p = (ids(i)._1, ids(j)._1, ids(i)._2, ids(j)._2)
+              j += 1
+              if (j >= ids.length) { i += 1; j = i + 1 }
+              p
             }
-          }.toDF("a", "b", "na", "nb")
-          // strict a < b exactly like the join's filter: a degenerate
-          // input with repeated doc_ids must not emit (x, x) pairs
-          .filter(col("a") < col("b"))
-          .groupBy(col("a"), col("b"), col("na"), col("nb"))
-          .agg(count(lit(1)).as("common"))
-    pairs
+          }
+        }
+      }.toDF("a", "b", "na", "nb")
+      // strict a < b: a degenerate input with repeated doc_ids must
+      // not emit (x, x) pairs
+      .filter(col("a") < col("b"))
+      .groupBy(col("a"), col("b"), col("na"), col("nb"))
+      .agg(count(lit(1)).as("common"))
       .withColumn("jac_milli",
         floor(lit(1000) * col("common") / (col("na") + col("nb") - col("common"))).cast("long"))
       .filter(col("jac_milli") >= thrMilli)
       .select("a", "b", "common", "na", "nb", "jac_milli")
   }
 
-  /** Skew guard shared by every bucket/band equi-join in the dedup/ANN
-    * suite: rows whose `keys` group occurs more than `maxDf` times are
-    * dropped from candidate GENERATION (a group of d rows materializes
-    * d² candidate pairs — quadratic in group size, which AQE cannot
-    * shrink). No-op at the default `Int.MaxValue`, so the cap is always
-    * opt-in; use the matching hot* audit to log the dropped mass first
-    * ("no silent caps"). */
-  private[operators] def dropHotKeys(df: DataFrame, keys: Seq[String],
-                                     maxDf: Int): DataFrame =
-    if (maxDf == Int.MaxValue) df
-    else df.join(
-      df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDf).select(keys.map(col): _*),
-      keys, "left_anti")
-
-  /** The (keys..., df) groups [[dropHotKeys]] would drop at `maxDf` —
-    * the observability side-channel behind every hot* audit. */
-  private[operators] def hotKeys(df: DataFrame, keys: Seq[String],
-                                 maxDf: Int): DataFrame =
-    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf)
-
-  /** The shingles [[ngramJaccardPairs]] would drop at `maxDf` — the
+  /** The shingles [[ngramJaccardPairs]] drops at [[MaxDf]] — the
     * observability side-channel for the hot-shingle cap (run it before
-    * a big job to log the dropped mass). `maxDf` has no default on
-    * purpose: pass the SAME value you pass to the pair job, so the
-    * audit can never disagree with the cap actually applied. Output
-    * (shingle, df). */
-  def hotShingles(docs: DataFrame, n: Int, maxDf: Int): DataFrame =
-    hotKeys(shingles(docs, n), Seq("shingle"), maxDf)
+    * a big job to log the dropped mass). Output (shingle, df). */
+  def hotShingles(docs: DataFrame, n: Int): DataFrame =
+    hotShingleDf(shingles(docs, n))
 
   /** MinHash signature: numHashes permutations h_i(s) = xxhash64(i, s),
     * signature element i = min over the doc's distinct shingles.
@@ -245,8 +207,8 @@ object Dedup {
   }
 
   /** (doc_id, sig, band, bucket) — one row per LSH band, bucket =
-    * hash of the band's signature slice. The candidate-generation key
-    * shared by [[minhashLshPairs]] and [[hotMinhashBuckets]]. */
+    * hash of the band's signature slice: the candidate-generation key
+    * of [[minhashLshPairs]]. */
   def minhashBands(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
                    bands: Int = 8): DataFrame = {
     val rows = numHashes / bands
@@ -258,28 +220,17 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
-  /** The (band, bucket, df) groups [[minhashLshPairs]] would drop at
-    * `maxBucket` — audit the skew cap before enabling it. */
-  def hotMinhashBuckets(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
-                        bands: Int = 8, maxBucket: Int): DataFrame =
-    hotKeys(minhashBands(docs, n, numHashes, bands), Seq("band", "bucket"), maxBucket)
-
   /** MinHash + LSH banding: split the signature into `bands` bands of
     * rows, bucket-join docs sharing any band hash, then verify with the
     * signature-level Jaccard estimate ≥ `thrMilli`/1000. The classic
     * shingle→minhash→band→bucket-join pipeline; candidate generation is
     * a pure equi-join on (band, bucket). A degenerate corpus (many
     * byte-identical docs) puts d docs in one bucket → d² candidates:
-    * pass `maxBucket` to drop such buckets from candidate generation
-    * (exact duplicates belong on [[exact]] anyway — run it first, as
-    * [[TrainingPipeline.cleanCorpus]] does); audit with
-    * [[hotMinhashBuckets]]. Pairs are missed only when EVERY band they
-    * agree on is hot. */
+    * exact duplicates belong on [[exact]] — run it first, as
+    * [[TrainingPipeline.cleanCorpus]] does. */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
-                      bands: Int = 8, thrMilli: Int = 500,
-                      maxBucket: Int = Int.MaxValue): DataFrame = {
-    val banded = dropHotKeys(minhashBands(docs, n, numHashes, bands),
-      Seq("band", "bucket"), maxBucket)
+                      bands: Int = 8, thrMilli: Int = 500): DataFrame = {
+    val banded = minhashBands(docs, n, numHashes, bands)
     // est is a pure function of (a, b) — one signature per doc — so
     // computing it BEFORE the distinct (per band collision instead of
     // per pair) lets the threshold filter drop most candidates ahead
@@ -345,7 +296,7 @@ object Dedup {
 
   /** (doc_id, simhash, chunk, v) — one row per pigeonhole chunk of the
     * 64-bit simhash split into maxHamming+1 chunks. */
-  def simhashChunks(docs: DataFrame, maxHamming: Int): DataFrame = {
+  private def simhashChunks(docs: DataFrame, maxHamming: Int): DataFrame = {
     val nChunks = maxHamming + 1
     val bounds = (0 to nChunks).map(c => 64 * c / nChunks)
     val sh = simhash(docs)
@@ -360,12 +311,6 @@ object Dedup {
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "v")
   }
 
-  /** The (chunk, v, df) buckets [[simhashPairs]] would drop at
-    * `maxBucket` — audit before enabling the cap for maxHamming ≥ 4. */
-  def hotSimhashBuckets(docs: DataFrame, maxHamming: Int,
-                        maxBucket: Int): DataFrame =
-    hotKeys(simhashChunks(docs, maxHamming), Seq("chunk", "v"), maxBucket)
-
   /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, found
     * by the pigeonhole principle: split the 64 bits into maxHamming+1
     * chunks — any pair within distance ≤ maxHamming must agree exactly
@@ -378,18 +323,12 @@ object Dedup {
     * At maxHamming ≤ 3 width ≥ 16 → n²/2¹⁶-ish, fine. At maxHamming = 8
     * width is 7 → ≤128 values per chunk → quadratic in corpus size
     * REGARDLESS of similarity — a scale-killer. The single-level
-    * pigeonhole is therefore restricted to maxHamming ≤ 3; wider radii
-    * must pass `maxBucket` (drop (chunk, v) buckets above the cap from
-    * candidate generation — bounds the join at a recall cost confined
-    * to hot buckets; audit with [[hotSimhashBuckets]]). */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(maxHamming <= 3 || maxBucket < Int.MaxValue,
-      s"maxHamming=$maxHamming gives chunks of ${64 / (maxHamming + 1)} bits — " +
-        "too few distinct bucket values for an uncapped candidate join; " +
-        "pass maxBucket (and audit with hotSimhashBuckets) or use maxHamming <= 3")
-    val chunked = dropHotKeys(simhashChunks(docs, maxHamming),
-      Seq("chunk", "v"), maxBucket)
+    * pigeonhole is therefore restricted to 0 ≤ maxHamming ≤ 3. */
+  def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"maxHamming=$maxHamming outside [0, 3]: a negative radius has no chunks, " +
+        "and above 3 the chunks are too narrow to bound the candidate join")
+    val chunked = simhashChunks(docs, maxHamming)
     // hamming is a pure function of (a, b): compute it per chunk
     // collision and filter BEFORE the dedup exchange (same move as
     // minhashLshPairs — distinct on (a, b, hamming) ≡ (a, b))

@@ -134,10 +134,10 @@ object RasterOps {
       .flatMap { t =>
         // this operator assumes the non-negative inference grid — a
         // tile at negative world coords (e.g. a warped tile) would be
-        // truncated into cache cell 0 by the divisions below; those
-        // inputs belong on [[reassemble]]
+        // truncated into cache cell 0 by the divisions below
         require(t.minX >= 0 && t.minY >= 0,
-          s"mosaic tile at negative origin (${t.minX}, ${t.minY}) — use reassemble for warped tiles")
+          s"mosaic tile at negative origin (${t.minX}, ${t.minY}) — mosaic takes tiles " +
+            "of the non-negative inference grid, not warped tiles")
         // output tiles overlapped by this (cropped) tile
         val maxX = t.minX + t.cols.toLong * t.gsd
         val maxY = t.minY + t.rows.toLong * t.gsd
@@ -179,14 +179,13 @@ object RasterOps {
   /** Distributed raster warp (P8, util.py:138-170): apply a WORLD-
     * coordinate affine `dst = A · src` to every tile — each tile warps
     * independently into its transformed bounding window (snapped to
-    * the gsd grid so downstream [[mosaic]] paste offsets stay
+    * the gsd grid, so pixel offsets between warped tiles stay
     * integer), nearest-neighbor by default (the reference's mask
     * setting; bilinear for imagery-like data). Narrow per-tile pass —
-    * no shuffle; cross-tile reassembly afterwards is [[reassemble]]
-    * (paste-only regroup — NOT [[mosaic]], whose innerCrop and
-    * non-negative grid assumptions are specific to the overlapping
-    * inference grid). The affine covers the reference's
-    * `calculate_default_transform`-shaped reprojects. */
+    * no shuffle and no cross-tile regroup. Warped tiles are not
+    * [[mosaic]] input: its innerCrop and non-negative grid assumptions
+    * are specific to the overlapping inference grid. The affine covers
+    * the reference's `calculate_default_transform`-shaped reprojects. */
   def warpTiles(spark: SparkSession, tiles: Dataset[ConfTile],
                 a: Double, b: Double, tx: Double,
                 d: Double, e: Double, ty: Double,
@@ -221,48 +220,6 @@ object RasterOps {
         pia, pib, pitx, pid, pie, pity, bilinear = bilinear)
       ConfTile(t.region, t.tileId, t.classIdx, gx0, gy0, dstRows, dstCols, t.gsd, data)
     }
-  }
-
-  /** Paste-only regroup of (possibly warped) tiles onto the
-    * `cacheTileSize` output grid — [[mosaic]] without its
-    * overlapping-grid innerCrop, and with floor semantics so tiles at
-    * NEGATIVE world coordinates land in the right (negative-indexed)
-    * cache cell instead of being truncated toward cell 0. Cache ids
-    * are (cy·2^21 + cx) over floor-divided signed cell coords. */
-  def reassemble(spark: SparkSession, tiles: Dataset[ConfTile],
-                 cacheTileSize: Long = 1024): Dataset[ConfTile] = {
-    import spark.implicits._
-    tiles
-      .flatMap { t =>
-        require(cacheTileSize % t.gsd == 0,
-          s"gsd=${t.gsd} does not divide cacheTileSize=$cacheTileSize")
-        val maxX = t.minX + t.cols.toLong * t.gsd
-        val maxY = t.minY + t.rows.toLong * t.gsd
-        for {
-          cy <- Math.floorDiv(t.minY, cacheTileSize) to Math.floorDiv(maxY - 1, cacheTileSize)
-          cx <- Math.floorDiv(t.minX, cacheTileSize) to Math.floorDiv(maxX - 1, cacheTileSize)
-        } yield ((t.region, t.classIdx, cy, cx), t)
-      }
-      .groupByKey(_._1)
-      .mapGroups { (key: (Long, Int, Long, Long), it: Iterator[((Long, Int, Long, Long), ConfTile)]) =>
-        val (region, classIdx, cy, cx) = key
-        // bijective signed packing for the output tile id (|cx| < 2^21)
-        require(math.abs(cx) < (1L << 21), s"cache column $cx out of id range")
-        val cacheId = cy * (1L << 22) + (cx + (1L << 21))
-        val first = it.next()._2
-        val gsd = first.gsd
-        val cc = (cacheTileSize / gsd).toInt
-        val baseX = cx * cacheTileSize
-        val baseY = cy * cacheTileSize
-        val canvas = new Array[Byte](cc * cc)
-        (Iterator.single(first) ++ it.map(_._2)).foreach { t =>
-          require(t.gsd == gsd, s"reassemble group mixes gsd ${t.gsd} with $gsd")
-          Raster.paste(canvas, cc, cc, t.data, t.rows, t.cols,
-            Math.floorDiv(t.minY - baseY, gsd).toInt,
-            Math.floorDiv(t.minX - baseX, gsd).toInt, mode = 1)
-        }
-        ConfTile(region, cacheId, classIdx, baseX, baseY, cc, cc, gsd, canvas)
-      }
   }
 
   /** Coverage statistics (A5): per (region, class), fraction of pixels

@@ -72,26 +72,13 @@ object Similarity {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
   }
 
-  /** The (band, bucket, df) groups the LSH joins would drop at
-    * `maxBucket` — audit the skew cap before enabling it (mirrors
-    * [[Dedup.hotMinhashBuckets]]). */
-  def hotLshBuckets(emb: DataFrame, nPlanes: Int = 16, bandBits: Int = 8,
-                    maxBucket: Int): DataFrame =
-    Dedup.hotKeys(lshBuckets(emb, nPlanes, bandBits), Seq("band", "bucket"), maxBucket)
-
   /** LSH-accelerated cosine top-k: candidates share an LSH bucket in at
     * least one band; exact cosine re-rank of candidates only. Recall
     * depends on nPlanes/bandBits; ANN by construction (tested ≥0.6
-    * recall@10 on the synthetic embeddings vs brute force). A
-    * degenerate corpus (many identical vectors) makes one bucket hold d
-    * vectors → d² candidate rows: pass `maxBucket` to drop such buckets
-    * from candidate generation (a query loses only its hot bands, not
-    * its cold ones; audit with [[hotLshBuckets]]). */
+    * recall@10 on the synthetic embeddings vs brute force). */
   def cosineTopKLsh(emb: DataFrame, nQueries: Int, k: Int,
-                    nPlanes: Int = 16, bandBits: Int = 8,
-                    maxBucket: Int = Int.MaxValue): DataFrame = {
-    val buckets = Dedup.dropHotKeys(lshBuckets(emb, nPlanes, bandBits),
-      Seq("band", "bucket"), maxBucket)
+                    nPlanes: Int = 16, bandBits: Int = 8): DataFrame = {
+    val buckets = lshBuckets(emb, nPlanes, bandBits)
     val base = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     val qb = buckets.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("band"), col("bucket"))
@@ -271,14 +258,10 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs (cos ≥ thrMicro/1e6) via LSH
-    * candidates — the embedding flavor of the dedup suite. `maxBucket`
-    * caps degenerate (band, bucket) groups exactly as in
-    * [[cosineTopKLsh]]; audit with [[hotLshBuckets]]. */
+    * candidates — the embedding flavor of the dedup suite. */
   def cosineNearDupPairs(emb: DataFrame, thrMicro: Long = 950000L,
-                         nPlanes: Int = 16, bandBits: Int = 8,
-                         maxBucket: Int = Int.MaxValue): DataFrame = {
-    val buckets = Dedup.dropHotKeys(lshBuckets(emb, nPlanes, bandBits),
-      Seq("band", "bucket"), maxBucket)
+                         nPlanes: Int = 16, bandBits: Int = 8): DataFrame = {
+    val buckets = lshBuckets(emb, nPlanes, bandBits)
     val base = emb.select(col("vec_id"), col("embedding"), norm(col("embedding")).as("nrm"))
     val cand = buckets.as("l").join(buckets.as("r"),
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&

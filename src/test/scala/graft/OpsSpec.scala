@@ -49,6 +49,54 @@ class OpsSpec extends AnyFunSuite {
     (0L until 20L).foreach(i => assert(exact.contains((i, 200L + i))))
   }
 
+  /** Driver-side brute force of [[Dedup.ngramJaccardPairs]] on a corpus
+    * with no shingle above the df cap: distinct word n-grams per doc,
+    * every pair of docs, exact (a, b, common, na, nb, jac_milli). */
+  private def ngramJaccardReference(rows: Seq[(Long, String)], n: Int,
+                                    thrMilli: Int): Seq[(Long, Long, Long, Long, Long, Long)] = {
+    val sets = rows.map { case (id, text) =>
+      val toks = text.split(" ", -1)
+      id -> toks.sliding(n).filter(_.length == n).map(_.mkString(" ")).toSet
+    }.sortBy(_._1)
+    for {
+      i <- sets.indices; j <- (i + 1) until sets.length
+      (a, sa) = sets(i); (b, sb) = sets(j)
+      common = (sa & sb).size.toLong
+      if common > 0
+      jac = 1000L * common / (sa.size + sb.size - common)
+      if jac >= thrMilli
+    } yield (a, b, common, sa.size.toLong, sb.size.toLong, jac)
+  }
+
+  private def ngramRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("a"), col("b"), col("common"), col("na"), col("nb"), col("jac_milli"))
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq.sorted
+
+  test("ngram jaccard equals a driver-side brute force row for row") {
+    val rows = docs.as[(Long, String)].collect().toSeq
+    for (thr <- Seq(100, 700, 1000)) {
+      val want = ngramJaccardReference(rows, 3, thr).sorted
+      assert(want.nonEmpty, s"vacuous at thrMilli $thr")
+      assert(ngramRows(Dedup.ngramJaccardPairs(docs, 3, thr)) === want, s"thrMilli $thr")
+    }
+  }
+
+  test("ngram jaccard drops exactly the shingle above MaxDf; hotShingles reports it") {
+    // MaxDf + 1 docs sharing ONLY the prefix shingle: every other
+    // shingle of theirs is unique (df 1), so the hot shingle is the
+    // only source of pairs among them — (MaxDf + 1)² / 2 of them
+    val hotDocs = (0L to Dedup.MaxDf.toLong).map(i => (1000000L + i, s"hotA hotB hotC u$i"))
+    val withHot = docs.union(spark.createDataset(hotDocs).toDF("doc_id", "text"))
+    val got = ngramRows(Dedup.ngramJaccardPairs(withHot, 3, 100))
+    // without the cap each hot pair would read common 1 of 3 → 333 ≥ 100
+    assert(!got.exists(r => r._1 >= 1000000L || r._2 >= 1000000L))
+    // the planted corpus keeps every pair, byte for byte
+    assert(got === ngramJaccardReference(docs.as[(Long, String)].collect().toSeq, 3, 100).sorted)
+    (0L until 20L).foreach(i => assert(got.exists(r => r._1 == i && r._2 == 200L + i)))
+    assert(Dedup.hotShingles(withHot, 3).as[(String, Long)].collect().toSeq ===
+      Seq(("hotA hotB hotC", Dedup.MaxDf + 1L)))
+  }
+
   test("minhash LSH recalls planted exact + most near duplicates") {
     val pairs = Dedup.minhashLshPairs(docs, n = 3, numHashes = 32, bands = 8,
       thrMilli = 500).select("a", "b").as[(Long, Long)].collect().toSet
@@ -176,41 +224,20 @@ class OpsSpec extends AnyFunSuite {
     assert(row.meta === StubCodec.decodeMeta(fakeGif))
   }
 
-  test("hot-bucket cap bounds a degenerate corpus without losing planted recall") {
-    // degenerate block: 200 byte-identical docs — uncapped LSH would
-    // put all 200 in the same (band, bucket) → 200²/2 candidate pairs
-    val degen = docs.union(spark.createDataset(
-      (1000L until 1200L).map(i => (i, "same text in every degenerate doc over and over")))
-      .toDF("doc_id", "text"))
-    // the audit surfaces the hot buckets before the cap is enabled
-    val hot = Dedup.hotMinhashBuckets(degen, maxBucket = 50).collect()
-    assert(hot.nonEmpty && hot.forall(_.getAs[Long]("df") >= 200L))
-    val capped = Dedup.minhashLshPairs(degen, thrMilli = 500, maxBucket = 50)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    // planted exact dups live in cold buckets → still found
-    (0L until 20L).foreach(i => assert(capped.contains((i, 200L + i))))
-    // the degenerate block's pairs are dropped (its buckets were hot),
-    // so the join stays bounded instead of materializing ~20k pairs
-    assert(!capped.exists { case (a, b) => a >= 1000L && b >= 1000L })
-  }
-
-  test("simhash maxHamming ≥ 4 demands the bucket cap; capped run keeps exact dups") {
-    intercept[IllegalArgumentException](Dedup.simhashPairs(docs, maxHamming = 8))
-    val audit = Dedup.hotSimhashBuckets(docs, maxHamming = 8, maxBucket = 5).collect()
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 8, maxBucket = 100)
+  test("simhash rejects maxHamming outside [0, 3]") {
+    // -1 has no pigeonhole chunks; 4 and up give chunks too narrow to
+    // bound the candidate join
+    for (h <- Seq(-1, 4, 8))
+      intercept[IllegalArgumentException](Dedup.simhashPairs(docs, maxHamming = h))
+    // the lower end still runs: one 64-bit chunk finds the exact dups
+    val pairs = Dedup.simhashPairs(docs, maxHamming = 0)
       .select("a", "b").as[(Long, Long)].collect().toSet
     (0L until 20L).foreach(i => assert(pairs.contains((i, 200L + i))))
-    // and the audit is consistent: buckets above the cap exist iff some
-    // (chunk, v) group holds > maxBucket docs
-    audit.foreach(r => assert(r.getAs[Long]("df") > 5L))
   }
 
-  test("embedding LSH cap drops degenerate identical-vector buckets") {
+  test("embedding LSH near-dup pairs: 100 identical vectors give all 4950 pairs") {
     val emb = spark.createDataset((0L until 100L).map(i =>
       (i, Seq.fill(64)(0.5f)))).toDF("vec_id", "embedding")
-    assert(Similarity.hotLshBuckets(emb, maxBucket = 50).count() > 0)
-    // uncapped: 100 identical vectors → 4950 pairs; capped: zero
-    assert(Similarity.cosineNearDupPairs(emb, thrMicro = 900000L, maxBucket = 50).count() === 0L)
     assert(Similarity.cosineNearDupPairs(emb, thrMicro = 900000L).count() === 4950L)
   }
 

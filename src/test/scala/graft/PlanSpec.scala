@@ -119,6 +119,12 @@ class PlanSpec extends AnyFunSuite {
       rejected(level)(spark.sql(s"SELECT cell_encode(100D, 200D, $level, 2048D, 2048D)").collect())
       rejected(level)(spark.range(1).select(cell_encode(lit(100.0), lit(200.0), level, 2048.0, 2048.0)))
     }
+    // a non-integral or NULL level is refused too, not truncated or NPE'd
+    for ((level, why) <- Seq("8.5" -> "must be an integer, got 8.5", "NULL" -> "must not be NULL")) {
+      val e = intercept[Exception](spark.sql(s"SELECT cell_encode(100D, 200D, $level, 2048D, 2048D)").collect())
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains(s"cell_encode: argument 3 $why")), e.toString)
+    }
     // both ends of the range still encode
     for (level <- Seq(0, graft.grid.CellIndex.MaxLevel)) {
       val got = spark.sql(s"SELECT cell_encode(100D, 200D, $level, 2048D, 2048D)").head().getLong(0)

@@ -252,7 +252,7 @@ class RasterPathSpec extends AnyFunSuite {
     assert(!(rot.head().data sameElements t.data))
   }
 
-  test("reassemble: warped tiles at negative coords regroup with floor semantics; mosaic rejects them") {
+  test("mosaic rejects a warped tile at a negative origin") {
     import spark.implicits._
     val t = synthConfTile(64, 64, 8).copy(minX = 0, minY = 0)
     val ds = spark.createDataset(Seq(t))
@@ -265,24 +265,6 @@ class RasterPathSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("negative origin") ||
       Option(err.getCause).exists(_.getMessage.contains("negative origin")))
-    // reassemble lands every pixel in the right signed cache cell
-    val out = RasterOps.reassemble(spark, warped, cacheTileSize = 256).collect()
-      .sortBy(o => (o.minY, o.minX))
-    val mass = t.data.map(b => (b & 0xff).toLong).sum
-    assert(out.map(_.data.map(b => (b & 0xff).toLong).sum).sum === mass)
-    // tile spans x ∈ [-256, 256), y ∈ [-128, 384) → 2×3 cache cells
-    assert(out.map(o => (o.minX, o.minY)).toSet ===
-      Set((-256L, -256L), (0L, -256L), (-256L, 0L), (0L, 0L), (-256L, 256L), (0L, 256L)))
-    // cache ids are distinct under the signed packing
-    assert(out.map(_.tileId).distinct.length === out.length)
-    // spot-check pixel placement: the warped tile starts at world
-    // (-256, -128); inside cache cell (-256, -256) its paste offset is
-    // (row (−128−(−256))/8 = 16, col 0), so warped pixel (0,0) — which
-    // equals t.data(0) under an exact-multiple translation — lands at
-    // canvas row 16, col 0 of the 32×32 cell
-    val cell = out.find(o => o.minX == -256 && o.minY == -256).get
-    assert(cell.cols === 32)
-    assert(cell.data(16 * 32 + 0) === t.data(0))
   }
 
   test("mosaic fails loud on mixed-gsd tiles in one group") {
