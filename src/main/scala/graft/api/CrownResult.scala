@@ -7,6 +7,7 @@ import graft.functions._
 import graft.geom.Geom
 import graft.operators.{CrownOps, GeoOps, RasterOps}
 import graft.tables.{FixtureIO, PagesGen}
+import org.apache.spark.sql.graft.Bridge
 
 /** The interactive query surface over a pipeline run — the engine's
   * `ProcessedResult` (reference result/processedresult.py:19-171,
@@ -17,19 +18,24 @@ import graft.tables.{FixtureIO, PagesGen}
   * the surface stays cluster-scale.
   *
   * Laziness and sharing: building a result (GraftPipeline.predict)
-  * starts no Spark job. The mosaic's upstream (synthesize →
-  * confidenceTiles exchange → mosaic exchange) runs ONCE, when the first
-  * verb touches [[mosaic]] — canopyCover/treeCover (already when their
-  * DataFrame is built), report, or GeoTiffIO.writeTable(mosaic) — and
-  * this result and every setThreshold/setRoi view reuse that run
-  * through the shuffle files Spark keeps. Nothing is cached: the files
-  * live while the result is reachable, lost ones are recomputed from
-  * lineage, and a new predict runs its own upstream. The instance
-  * verbs each run the merged-table plan.
+  * starts no Spark job. The crowns are exchanged ONCE, hash-partitioned
+  * on (region, classIdx) (CrownOps.byRegionClass), when the first verb
+  * needs them. The merged table and the mosaic are both plans over that
+  * one exchange, read through Bridge.partitionedView, so neither adds
+  * an exchange before its group-by and synthesis runs once per result.
+  * The mosaic's own upstream (confidenceTiles → mosaic exchange) runs
+  * once too, when the first verb touches [[mosaic]] — canopyCover/
+  * treeCover (already when their DataFrame is built), report, or
+  * GeoTiffIO.writeTable(mosaic). This result and every setThreshold/
+  * setRoi view share one [[CrownResult.Shared]] holder, so they reuse
+  * those runs through the shuffle files Spark keeps. Nothing is cached
+  * or persisted: the files live while the result is reachable, lost
+  * ones are recomputed from lineage, and a new predict runs its own
+  * upstream. Each instance verb runs the merge over the shared
+  * exchange.
   *
-  * @param merged     merged crown table (CrownOps.MergedCrown schema)
-  * @param mosaicPlan plan of the per-class confidence mosaic tiles;
-  *                   verbs read it through [[mosaic]]
+  * @param shared     the shared crowns exchange and the merged and
+  *                   mosaic plans over it (built on first use)
   * @param threshold  score threshold (reference confidence_threshold).
   *                   As in the reference, instances below the PIPELINE
   *                   confidence floor were never stored, so lowering the
@@ -45,19 +51,22 @@ import graft.tables.{FixtureIO, PagesGen}
   */
 final case class CrownResult(
     spark: SparkSession,
-    merged: DataFrame,
-    mosaicPlan: Dataset[RasterOps.ConfTile],
+    private val shared: CrownResult.Shared,
     threshold: Double = 0.3, // = GraftPipeline default confThr (the floor)
     roi: Option[Array[Double]] = None,
     rasterGsd: Int = RasterOps.DefaultGsd) {
 
-  /** Per-class confidence mosaic tiles, read from one shared run of
-    * `mosaicPlan`. `Dataset.rdd` is computed once per Dataset object,
+  /** Merged crown table (CrownOps.MergedCrown schema), unfiltered. */
+  def merged: DataFrame = shared.merged
+
+  /** Per-class confidence mosaic tiles, read from one shared run of the
+    * mosaic plan. `Dataset.rdd` is computed once per Dataset object,
     * and taking it makes adaptive execution materialize the plan's
-    * shuffle map stages (the confidenceTiles and mosaic exchanges). The
-    * views `copy` makes hold the same plan object, so the first call on
-    * any of them runs those stages and every later action over the
-    * wrapped RDD skips them.
+    * shuffle map stages (the mosaic exchange; the crowns exchange it
+    * reads is already materialized by the shared view). The views
+    * `copy` makes hold the same [[CrownResult.Shared]], so the first
+    * call on any of them runs those stages and every later action over
+    * the wrapped RDD skips them.
     *
     * Deliberately not `Dataset.cache`/`persist`: the CacheManager keys
     * on the plan, so an identical later predict would be served from
@@ -66,7 +75,7 @@ final case class CrownResult(
     * ContextCleaner removes them once the result is unreachable. */
   def mosaic: Dataset[RasterOps.ConfTile] = {
     import spark.implicits._
-    spark.createDataset(mosaicPlan.rdd)
+    spark.createDataset(shared.mosaicPlan.rdd)
   }
 
   def setThreshold(t: Double): CrownResult = copy(threshold = t)
@@ -275,10 +284,28 @@ final case class CrownResult(
   }
 }
 
+object CrownResult {
+
+  /** One predict run's crowns exchange and the two plans that read it,
+    * shared by every view `copy` makes. Building the view runs the
+    * crowns' map stage, and `predict` must start no job, so the view is
+    * a `lazy val`; the plans are built on it, so they are too. The
+    * mosaic plan is one object because [[CrownResult.mosaic]] reads its
+    * memoized `Dataset.rdd`. */
+  final class Shared private[api] (
+      crowns: Dataset[CrownOps.Crown],
+      mergePlan: Dataset[CrownOps.Crown] => DataFrame,
+      mosaicOf: Dataset[CrownOps.Crown] => Dataset[RasterOps.ConfTile]) {
+    private lazy val view = Bridge.partitionedView(CrownOps.byRegionClass(crowns))
+    private[api] lazy val merged: DataFrame = mergePlan(view)
+    private[api] lazy val mosaicPlan: Dataset[RasterOps.ConfTile] = mosaicOf(view)
+  }
+}
+
 /** The `Pipeline(...).predict(...)` analogue (reference pipeline.py +
-  * docs/prediction.md:146-157): one call runs geocode → tile-assign →
+  * docs/prediction.md:146-157): one call plans geocode → tile-assign →
   * synthesis → fused NMS+merge → mosaic and returns the interactive
-  * result surface. */
+  * result surface, which runs them on first use. */
 object GraftPipeline {
 
   /** `maxPerTile` mirrors the reference model's detections-per-tile cap
@@ -305,16 +332,15 @@ object GraftPipeline {
     val raw = CrownOps.synthesize(spark, assigned, spec)
     val crowns = if (conf.maxPerTile == Int.MaxValue) raw
       else CrownOps.capPerTile(raw, conf.maxPerTile)
-    val merged = CrownOps.nmsMerge(spark, crowns, conf.nmsIou, conf.confThr, conf.mergeIou)
     // a GSD-scaled spec can have windows/origins no fixed gsd divides
     // (e.g. 1463-px tiles at 585-px origins) — snap to the largest
     // aligned resolution ≤ conf.gsd so rasters and mosaic pastes stay
     // exactly on the pixel grid (Default spec: conf.gsd unchanged)
     val rgsd = RasterOps.alignedGsd(spec, conf.gsd)
-    val mosaic = RasterOps.mosaic(spark,
-      RasterOps.confidenceTiles(spark, crowns, spec, rgsd), spec)
-    CrownResult(spark, merged.toDF(), mosaic, threshold = conf.confThr,
-      rasterGsd = rgsd)
+    val shared = new CrownResult.Shared(crowns,
+      view => CrownOps.nmsMerge(spark, view, conf.nmsIou, conf.confThr, conf.mergeIou).toDF(),
+      view => RasterOps.mosaic(spark, RasterOps.confidenceTiles(spark, view, spec, rgsd), spec))
+    CrownResult(spark, shared, threshold = conf.confThr, rasterGsd = rgsd)
   }
 
   def predictPages(spark: SparkSession, nPages: Long): CrownResult =

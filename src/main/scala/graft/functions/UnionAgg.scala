@@ -59,9 +59,12 @@ import graft.geom.Overlay
   *   - neither an `Aggregator` nor a `TypedImperativeAggregate`
   *     chooses its own exchange; the only exchange exempt from
   *     coalescing is the caller's `repartition(n, key)`;
-  *   - a planner rule would need a session extension, loaded through
-  *     `spark.sql.extensions` or a ServiceLoader resource, which a
-  *     caller's classpath need not carry.
+  *   - a planner rule needs no session extension (a Strategy or an
+  *     optimizer rule installs at run time through the session's
+  *     `experimental.extraStrategies` / `extraOptimizations`), but a
+  *     function call that installs one changes session state for every
+  *     later query, and the rule would shuffle raw rings instead of
+  *     partials (ROADMAP direction 4 weighs this).
   * So the lever is the reduce's CPU. Two ways to move work were
   * measured and lost: tracing every ring once in finish() (no
   * compaction under 64 KB) lost 2 of 3 perfbench `spatial_join`

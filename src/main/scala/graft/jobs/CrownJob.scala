@@ -58,14 +58,15 @@ object CrownJob {
   }
 
   /** Merge stage over the crowns of regions not yet merged: the same
-    * fused NMS + merge as `predict`, one shuffle. */
+    * fused NMS + merge as `predict`, over the same one (region, class)
+    * exchange (CrownOps.byRegionClass). */
   def runMerge(spark: SparkSession, conf: Conf): Long = {
     import spark.implicits._
     val todo = committed(spark, conf, StageCrowns).diff(committed(spark, conf, StageMerged))
     if (todo.isEmpty) return -1L
     val crowns = IcebergLite.read(spark, conf.warehouse, StageCrowns).get
       .filter(col("region").isin(todo: _*))
-    val merged = CrownOps.nmsMerge(spark, crowns.as[CrownOps.Crown], conf.nmsIou,
+    val merged = CrownOps.nmsMerge(spark, CrownOps.byRegionClass(crowns.as[CrownOps.Crown]), conf.nmsIou,
       conf.confThr, conf.mergeIou, emitGeom = conf.emitGeom).toDF()
     IcebergLite.commit(spark, conf.warehouse, StageMerged, merged, "region")
   }

@@ -21,8 +21,8 @@ import graft.grid.TileGridSpec
   * Distribution model: the world is a sequence of independent 2048²
   * REGIONS (one reference "image" each, ~6k pages). All cross-crown
   * operators (NMS, dissolve, split) are region×class-local, so the
-  * whole merge phase is one `groupByKey(region).flatMapGroups` — no
-  * global shuffle beyond the group-by, and regions scale out linearly
+  * whole merge phase is one (region, class) group-by + flatMapGroups —
+  * no global shuffle beyond the group-by, and regions scale out linearly
   * to billions on a real cluster (each group is bounded, ~10⁴ crowns).
   * Within a group we use an in-memory spatial hash instead of the
   * reference's rtree, keeping per-group work near-linear.
@@ -446,10 +446,10 @@ object CrownOps {
         nmsLocal(it.toIndexedSeq, iouThr).iterator)
   }
 
-  /** The columns NMS + merge actually read — shuffled INSTEAD of the
+  /** The columns NMS + merge actually read — grouped INSTEAD of the
     * full Crown row (drops pageId, tileId and the classScores array:
-    * ~25% of the exchanged bytes; guide §2.3 "project before the
-    * exchange", which the typed groupByKey otherwise defeats). */
+    * ~25% of the exchanged bytes on raw crowns; guide §2.3 "project
+    * before the exchange"). */
   private[operators] final case class SlimCrown(
       region: Long, crownId: Long, classIdx: Int, score: Double,
       minX: Double, minY: Double, maxX: Double, maxY: Double,
@@ -459,11 +459,31 @@ object CrownOps {
     Crown(s.region, s.crownId, 0L, 0L, s.classIdx, s.score,
       s.minX, s.minY, s.maxX, s.maxY, s.poly)
 
+  /** Crowns hash-partitioned on (region, classIdx): the exchange
+    * [[nmsMerge]] and `RasterOps.confidenceTiles` both group under, so a
+    * plan over it (or over `Bridge.partitionedView` of it) adds no
+    * further exchange. The task count is left to adaptive execution,
+    * which coalesces the session's `spark.sql.shuffle.partitions` hash
+    * buckets into tasks of about equal bytes. A fixed count
+    * (`repartition(n, …)`) would keep one task per bucket, but the
+    * (region, class) groups are few and large: on perfbench `predict`,
+    * 24 groups hashed into 16 buckets left 7 empty and put 4 in one,
+    * and the merge ran slower than on the coalesced tasks (BENCH.md
+    * "Predict crowns once"). */
+  def byRegionClass(crowns: Dataset[Crown]): Dataset[Crown] =
+    crowns.repartition(col("region"), col("classIdx"))
+
   /** Fused NMS + merge in ONE shuffle: both operators group on the same
     * (region, class) key, so running them back-to-back inside a single
     * flatMapGroups halves the pipeline's shuffles (the dominant cost at
     * scale). Output is identical to `nmsLocal` then `mergeLocal` run
     * per (region, class).
+    *
+    * The group key is the (region, classIdx) columns, so an input
+    * already hash-partitioned on them ([[byRegionClass]], or
+    * `Bridge.partitionedView` of it) is merged with no further
+    * exchange; any other input gets the one exchange Spark plans for
+    * the group-by.
     *
     * `emitGeom = false` skips the dissolved-geometry border trace (the
     * dominant per-instance CPU cost — rasterize is still paid for the
@@ -477,21 +497,22 @@ object CrownOps {
     import spark.implicits._
     // MergedCrown reads nothing from pageId/tileId/classScores, and
     // nmsLocal/mergeLocal read only (crownId, classIdx, score, bbox,
-    // poly) — so the group exchange ships SlimCrown and the group-side
-    // Crowns are reinflated with zeroed pass-through fields (identical
-    // NMS order, merge decisions and output rows)
-    // confidence pre-filter BEFORE the exchange: mergeLocal drops
-    // score <= confThr instances anyway, and in descending-score NMS a
-    // crown can only be suppressed by a HIGHER-scoring kept crown — so
-    // sub-threshold crowns never influence which above-threshold
-    // crowns survive. Filtering them here (same strict > predicate)
-    // removes ~28% of the shuffled rows and of the NMS work with
-    // provably identical merged output.
-    crowns
-      .filter(c => c.score > confThr)
-      .map(c => SlimCrown(c.region, c.crownId, c.classIdx, c.score,
-        c.minX, c.minY, c.maxX, c.maxY, c.poly))
-      .groupByKey(c => (c.region, c.classIdx))
+    // poly) — so the groups read SlimCrown and are reinflated with
+    // zeroed pass-through fields (identical NMS order, merge decisions
+    // and output rows)
+    // confidence pre-filter: mergeLocal drops score <= confThr
+    // instances anyway, and in descending-score NMS a crown can only be
+    // suppressed by a HIGHER-scoring kept crown — so sub-threshold
+    // crowns never influence which above-threshold crowns survive.
+    // Filtering them (same strict > predicate) removes ~28% of the
+    // grouped rows and of the NMS work with provably identical merged
+    // output. On raw crowns it runs before the exchange and shrinks the
+    // shuffle too; on partitioned crowns it runs after it, the same
+    // filter over the same groups.
+    val slim = Seq("region", "crownId", "classIdx", "score",
+      "minX", "minY", "maxX", "maxY", "poly").map(col)
+    crowns.filter(col("score") > confThr).select(slim: _*)
+      .groupBy(col("region"), col("classIdx")).as[(Long, Int), SlimCrown]
       .flatMapGroups((key: (Long, Int), it: Iterator[SlimCrown]) => {
         val (region, classIdx) = key
         val kept = nmsLocal(it.map(reinflate).toIndexedSeq, nmsIou)

@@ -24,7 +24,8 @@ import graft.grid.TileGridSpec
   * Rasters ride as one row per (region, tile, class): tile-as-row
   * columnar blocks. `gsd` (pixels per raster cell, reference
   * `target_gsd`) scales resolution; kernels run in flatMapGroups —
-  * partition-local, no shuffle beyond the tile group-by.
+  * partition-local, no shuffle beyond the tile group-by (none when the
+  * crowns arrive partitioned on (region, class), see [[confidenceTiles]]).
   */
 object RasterOps {
 
@@ -63,7 +64,14 @@ object RasterOps {
   /** Rasterize each tile's crowns into a class-confidence tile:
     * crown pixels get round(score×255), max-merged (paste mode 1) —
     * the deterministic analogue of the semantic model's per-tile
-    * confidence output. */
+    * confidence output.
+    *
+    * One shuffle at most: the group key is the (region, tileId,
+    * classIdx) columns, and crowns already hash-partitioned on (region,
+    * classIdx) (`CrownOps.byRegionClass`, or `Bridge.partitionedView` of
+    * it) are clustered on it, so they are grouped with no exchange —
+    * predict's mosaic reads the same crowns exchange as its merge. Any
+    * other input gets the one exchange Spark plans for the group-by. */
   def confidenceTiles(spark: SparkSession, crowns: Dataset[CrownOps.Crown],
                       spec: TileGridSpec, gsd: Int = 8): Dataset[ConfTile] = {
     import spark.implicits._
@@ -75,7 +83,8 @@ object RasterOps {
       s"gsd=$gsd must divide the spec's tile size and every grid edge " +
         s"(tile=${spec.tileSize}); pick RasterOps.alignedGsd(spec, want)")
     val cols = (spec.tileSize / gsd).toInt
-    crowns.groupByKey(c => (c.region, c.tileId, c.classIdx))
+    crowns.groupBy(col("region"), col("tileId"), col("classIdx"))
+      .as[(Long, Long, Int), CrownOps.Crown]
       .flatMapGroups { (key: (Long, Long, Int), it: Iterator[CrownOps.Crown]) =>
         val (region, tileId, classIdx) = key
         val tile = spec.tile(tileId)

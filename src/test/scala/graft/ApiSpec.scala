@@ -260,33 +260,48 @@ class ApiSpec extends AnyFunSuite {
     val (res, built) = observe(GraftPipeline.predictPages(spark, 3000))
     assert(built.jobs === 0, "predict must start no Spark job")
 
+    // the merge runs first: its one submitted shuffle stage is the crowns
+    // exchange (the merge itself runs in the parquet write's result stage)
     val dir = java.nio.file.Files.createTempDirectory("sharedmosaic")
+    val (_, c0) = observe(res.serialiseTable(dir.resolve("table").toString))
+    assert(c0.submitted.size === 1, s"serialiseTable submitted ${c0.submitted}")
+    val crownsExchange = c0.submitted.head
     val (canopy, c1) = observe(covers(res.canopyCover))
     val (tree, c2) = observe(covers(res.treeCover))
     val (strict, c3) = observe(covers(res.setThreshold(0.5).canopyCover))
-    val (_, c4) = observe(GeoTiffIO.writeTable(res.mosaic, dir.toString))
+    val tiles = dir.resolve("tiles")
+    val (_, c4) = observe(GeoTiffIO.writeTable(res.mosaic, tiles.toString))
 
+    // every mosaic verb reads the crowns exchange the merge ran, and none
+    // runs it again: synthesize runs once per result
+    for (c <- Seq(c1, c2, c3, c4)) {
+      assert(c.listed.flatten.contains(crownsExchange),
+        s"a mosaic job does not read the crowns exchange: lists ${c.listed}")
+      assert(!c.submitted.contains(crownsExchange))
+    }
     // the GeoTIFF job reads the mosaic only: the shuffle stages it lists
-    // are the confidenceTiles and mosaic exchanges, and all were skipped
+    // are the crowns and mosaic exchanges, and all were skipped
     val upstream = c4.listed.flatten.toSet
     assert(upstream.size >= 2, s"writeTable job lists shuffle stages $upstream")
     assert(c4.submitted.isEmpty, s"writeTable re-ran shuffle stages ${c4.submitted}")
-    // canopyCover ran them once; each later cover runs only its own
-    // aggregation exchange and lists the upstream stages as skipped
-    assert(upstream.subsetOf(c1.submitted.toSet))
+    // canopyCover ran the mosaic exchange once; each later cover runs
+    // only its own aggregation exchange and lists the upstream stages as
+    // skipped
+    assert(upstream.subsetOf((c0.submitted ++ c1.submitted).toSet))
     for (c <- Seq(c2, c3)) {
       assert(c.submitted.size === 1 && !upstream.contains(c.submitted.head),
         s"cover submitted ${c.submitted}, upstream $upstream")
       assert(upstream.subsetOf(c.listed.flatten.toSet))
     }
-    val all = Seq(c1, c2, c3, c4).flatMap(_.submitted)
+    val all = Seq(c0, c1, c2, c3, c4).flatMap(_.submitted)
     assert(all.distinct.size === all.size, s"a shuffle stage ran twice: $all")
     assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty)
+    assert(sc.getPersistentRDDs.isEmpty)
 
     // a second predict on the same pages is a new run: its upstream runs again
     val (_, again) = observe(covers(GraftPipeline.predictPages(spark, 3000).canopyCover))
-    assert(again.submitted.size === c1.submitted.size)
+    assert(again.submitted.size === c0.submitted.size + c1.submitted.size)
     assert(again.submitted.toSet.intersect(all.toSet).isEmpty)
 
     // the shared run's outputs equal a fresh mosaic plan's
@@ -305,9 +320,9 @@ class ApiSpec extends AnyFunSuite {
     assert(canopy === freshCover(CrownOps.ClassCanopy, res.threshold))
     assert(tree === freshCover(CrownOps.ClassTree, res.threshold))
     assert(strict === freshCover(CrownOps.ClassCanopy, 0.5))
-    assert(dir.toFile.list().length === fresh.length)
+    assert(tiles.toFile.list().length === fresh.length)
     fresh.foreach { t =>
-      val f = dir.resolve(s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif")
+      val f = tiles.resolve(s"r${t.region}_c${t.classIdx}_t${t.tileId}.tif")
       assert(java.nio.file.Files.readAllBytes(f) sameElements GeoTiffIO.write(t, deflate = true))
     }
   }

@@ -87,6 +87,49 @@ class PipelineSpec extends AnyFunSuite {
     assert(fused.toSet === sep.toSet)
   }
 
+  test("nmsMerge and confidenceTiles over the partitioned crowns view equal them over raw crowns") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.graft.Bridge
+    import graft.operators.RasterOps
+    val crowns = crownsFor(2000)
+    def merged(c: Dataset[CrownOps.Crown]) =
+      CrownOps.nmsMerge(spark, c, 0.7, 0.3, 0.5).collect().toSeq.map(m =>
+        (m.region, m.classIdx, m.memberIds.toSeq, m.score, m.scores.toSeq,
+          Seq(m.minX, m.minY, m.maxX, m.maxY, m.area, m.perimeter),
+          m.parts.toSeq.map(_.toSeq), m.geom.toSeq.map(_.toSeq)))
+        .sortBy(r => (r._1, r._2, r._3.min))
+    def tiles(c: Dataset[CrownOps.Crown]) = {
+      val ts = RasterOps.confidenceTiles(spark, c, GeoOps.TileGrid.Default).collect()
+      val byKey = ts.map(t => (t.region, t.tileId, t.classIdx) ->
+        (t.minX, t.minY, t.rows, t.cols, t.gsd, t.data.toSeq)).toMap
+      assert(byKey.size === ts.length, "one confidence tile per (region, tileId, classIdx)")
+      byKey
+    }
+    val want = merged(crowns)
+    val wantTiles = tiles(crowns)
+    assert(want.nonEmpty && wantTiles.nonEmpty)
+    // 16 hash buckets read as adaptive execution coalesces them, and
+    // read as they are: the view must cluster each group either way
+    def withConf[T](kv: (String, String)*)(body: => T): T = {
+      val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally old.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    for ((coalesce, parts) <- Seq(("true", (n: Int) => n > 1 && n < 16), ("false", (n: Int) => n == 16)))
+      withConf("spark.sql.shuffle.partitions" -> "16", coalesceKey -> coalesce,
+          "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k") {
+        val view = Bridge.partitionedView(CrownOps.byRegionClass(crowns))
+        val n = view.rdd.getNumPartitions
+        assert(parts(n), s"coalesce=$coalesce: the view has $n partitions")
+        assert(merged(view) === want, s"coalesce=$coalesce")
+        assert(tiles(view) === wantTiles, s"coalesce=$coalesce")
+      }
+  }
+
   test("driver smoke gate: entry() returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

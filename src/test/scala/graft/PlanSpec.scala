@@ -248,4 +248,35 @@ class PlanSpec extends AnyFunSuite {
     assert(aggIdx > exIdx && exIdx >= 0, // partial BELOW the exchange in plan text = runs before it
       s"groupBy-direct shape lost its map-side combine:\n$densePlan")
   }
+
+  test("nmsMerge and confidenceTiles over the partitioned crowns view plan no exchange") {
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.graft.Bridge
+    import graft.operators.{CrownOps, RasterOps}
+    val spec = GeoOps.TileGrid.Default
+    val crowns = CrownOps.synthesize(spark, GeoOps.assignTiles(PagesGen.pages(spark, 2000), spec), spec)
+    // the exchanges of the plan as planned, before adaptive execution runs it
+    def exchanges(ds: Dataset[_]): Seq[ShuffleExchangeExec] =
+      (ds.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case e: ShuffleExchangeExec => e }
+    def merge(c: Dataset[CrownOps.Crown]) = CrownOps.nmsMerge(spark, c, 0.7, 0.3, 0.5)
+    def conf(c: Dataset[CrownOps.Crown]) = RasterOps.confidenceTiles(spark, c, spec)
+
+    val byRegionClass = CrownOps.byRegionClass(crowns)
+    assert(exchanges(byRegionClass).map(_.shuffleOrigin) === Seq(REPARTITION_BY_COL))
+    assert(exchanges(byRegionClass).head.numPartitions ===
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val view = Bridge.partitionedView(byRegionClass)
+    for (ds <- Seq(merge(view), conf(view)))
+      assert(exchanges(ds).isEmpty, s"exchange over the view:\n${ds.queryExecution.executedPlan}")
+    for (ds <- Seq(merge(crowns), conf(crowns)))
+      assert(exchanges(ds).size === 1, s"raw crowns:\n${ds.queryExecution.executedPlan}")
+    // a plan with no hash partitioning has none to declare
+    val err = intercept[IllegalArgumentException](Bridge.partitionedView(crowns))
+    assert(err.getMessage.contains("hash-partitioned"))
+  }
 }

@@ -19,7 +19,10 @@ cold repetition and the untimed warm-ups are included, and on assign the
 output check's own collect too.
 
 The CPU split is the executor threads' `jdk.ExecutionSample` events, each
-put in the first group one of its top frames matches (see GROUPS).
+put in the first group one of its top frames matches (see GROUPS). The
+topmost matching frame decides, so a `graft.geom.Raster` kernel the merge
+calls counts as a raster kernel, and the few `graft.geom.Geom` calls under
+crown synthesis count as merge kernels.
 Needs `jfr` on PATH.
 
 Usage: stage_table.py <run dir>
@@ -47,6 +50,13 @@ GROUPS = [
                         "UnsafeArrayData.fromPrimitiveArray")),
     ("hash aggregate", ("java.util.zip.CRC32", "BytesToBytesMap", "AggregationMap",
                         "agg_FastHashMap", "HashAggregate", "hashAgg_")),
+    ("crown synthesis", ("graft.operators.CrownOps$.synth", "graft.operators.CrownOps$.mix64")),
+    ("merge kernels", ("graft.operators.CrownOps$.nmsLocal", "graft.operators.CrownOps$.mergeLocal",
+                       "graft.operators.CrownOps$.dissolveLocal", "graft.operators.CrownOps$.splitLocal",
+                       "graft.operators.CrownOps$.toMerged", "graft.geom.Geom")),
+    ("raster kernels", ("graft.geom.Raster",)),
+    ("parquet write", ("org.apache.parquet",)),
+    ("shuffle serialization", ("UnsafeRowSerializer", "ShuffleWriter")),
 ]
 
 run = sys.argv[1].rstrip("/")
