@@ -337,199 +337,199 @@ object Raster {
   def vectorize(mask: Array[Byte], rows: Int, cols: Int): Seq[Array[Double]] =
     vectorizeWithHoles(mask, rows, cols).map(_.head)
 
-  /** First (row-major) pixel of each label in ONE pass — labels are
-    * assigned in scan order, so first occurrence is also the
-    * top-left-most start pixel traceBoundary needs. */
-  private def firstPixels(labels: Array[Int]): Array[Int] = {
-    val nLabels = if (labels.isEmpty) 0 else labels.max
-    val firstPixel = Array.fill(nLabels + 1)(-1)
-    var i = 0
-    while (i < labels.length) {
-      val l = labels(i)
-      if (l != 0 && firstPixel(l) < 0) firstPixel(l) = i
-      i += 1
-    }
-    firstPixel
-  }
-
   /** mask→polygons WITH holes: per 4-connected foreground component, a
     * ring list (outer ring first, then its hole rings) under EVEN-ODD
     * semantics — [[rasterizeRings]] over the returned rings reproduces
     * the mask's pixels exactly (asserted per-annotation against the
     * reference's 387-instance fixture; reference hole handling:
-    * processedinstance.py:385-426). A hole is a 4-connected background
+    * processedinstance.py:385-426). A hole is an 8-connected background
     * component that touches no mask border; its enclosing component is
     * the pixel directly above its first row-major pixel (that pixel is
-    * provably foreground). */
+    * provably foreground). Components come in the row-major order of
+    * their first pixel, and holes in that order within a component. */
   def vectorizeWithHoles(mask: Array[Byte], rows: Int, cols: Int): Seq[Seq[Array[Double]]] = {
     if (rows <= 0 || cols <= 0) return Seq.empty
-    val labels = connectedComponents(mask, rows, cols)
-    val firstPixel = firstPixels(labels)
-    val nLabels = firstPixel.length - 1
-
-    // background components (holes candidate set) — 8-connected, the
-    // topological dual of the 4-connected foreground (see
-    // connectedComponents doc): a background pocket reachable through a
-    // diagonal gap is NOT a hole
-    val bg = new Array[Byte](mask.length)
-    var i = 0
-    while (i < mask.length) { if (mask(i) == 0) bg(i) = 1; i += 1 }
-    val bgLabels = connectedComponents(bg, rows, cols, connectivity = 8)
-    val bgFirst = firstPixels(bgLabels)
-    val nBg = bgFirst.length - 1
-    val touchesBorder = new Array[Boolean](nBg + 1)
+    val comps = connectedComponents(mask, rows, cols)
+    val tracer = new Tracer(comps, rows, cols)
+    val touchesBorder = new Array[Boolean](comps.nBg + 1)
+    def markBorder(i: Int): Unit = { val k = comps(i); if (k < 0) touchesBorder(-k) = true }
     var c = 0
-    while (c < cols) {
-      touchesBorder(bgLabels(c)) = true
-      touchesBorder(bgLabels((rows - 1) * cols + c)) = true
-      c += 1
-    }
+    while (c < cols) { markBorder(c); markBorder((rows - 1) * cols + c); c += 1 }
     var r = 0
-    while (r < rows) {
-      touchesBorder(bgLabels(r * cols)) = true
-      touchesBorder(bgLabels(r * cols + cols - 1)) = true
-      r += 1
-    }
-
-    val holesByFg = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Array[Double]]]()
-    var hl = 1
-    while (hl <= nBg) {
-      if (!touchesBorder(hl)) {
-        val idx = bgFirst(hl)
-        val encl = labels(idx - cols) // pixel above the first hole pixel
-        var buf = holesByFg.get(encl)
-        if (buf == null) {
-          buf = new scala.collection.mutable.ArrayBuffer[Array[Double]]()
-          holesByFg.put(encl, buf)
-        }
-        buf += traceBoundary(bgLabels, rows, cols, hl, idx)
+    while (r < rows) { markBorder(r * cols); markBorder(r * cols + cols - 1); r += 1 }
+    // prepended from the last hole down, so each list is in hole order
+    val holes = Array.fill[List[Array[Double]]](comps.nFg + 1)(Nil)
+    var h = comps.nBg
+    while (h >= 1) {
+      if (!touchesBorder(h)) {
+        val first = comps.bgFirst(h)
+        val encl = comps(first - cols) // pixel above the first hole pixel
+        holes(encl) = tracer.ring(-h, first) :: holes(encl)
       }
-      hl += 1
+      h -= 1
     }
-
-    (1 to nLabels).map { lbl =>
-      val outer = traceBoundary(labels, rows, cols, lbl, firstPixel(lbl))
-      val holes = Option(holesByFg.get(lbl)).map(_.toSeq).getOrElse(Seq.empty)
-      outer +: holes
-    }.filter(_.head.length >= 6)
+    (1 to comps.nFg).map(k => tracer.ring(k, comps.fgFirst(k)) :: holes(k))
   }
 
-  /** 4-connected component labeling (two-pass union-find). Mirrors
-    * skimage.measure.label as used in tools/make_masks.py:64-87.
-    * `connectivity = 8` also links diagonals — needed for BACKGROUND
-    * labeling in [[vectorizeWithHoles]] (topological duality:
-    * 4-connected foreground ↔ 8-connected background; with 4-conn on
-    * both, a diagonal-gap background pocket would be misread as a
-    * hole and break the even-odd round trip). */
-  def connectedComponents(mask: Array[Byte], rows: Int, cols: Int,
-                          connectivity: Int = 4): Array[Int] = {
+  /** Component labels of one mask (see [[connectedComponents]]).
+    * `apply(i)` is pixel `i`'s component: foreground components are
+    * 1..nFg and background components −1..−nBg, each numbered in the
+    * row-major order of its first pixel, which `fgFirst` / `bgFirst`
+    * hold (index 0 unused). Pixels keep their provisional labels;
+    * `dense` maps each one to its component. */
+  final class Components private[Raster] (labels: Array[Int], dense: Array[Int],
+                                          val fgFirst: Array[Int], val bgFirst: Array[Int]) {
+    def nFg: Int = fgFirst.length - 1
+    def nBg: Int = bgFirst.length - 1
+    def apply(i: Int): Int = dense(labels(i))
+  }
+
+  /** Labels the 4-connected foreground and the 8-connected background of
+    * a mask in one row-major scan. Mirrors skimage.measure.label as used
+    * in tools/make_masks.py:64-87 for the foreground; the background
+    * uses 8-connectivity because [[vectorizeWithHoles]] needs the
+    * topological dual (4-connected foreground ↔ 8-connected
+    * background): with 4-connectivity on both, a background pocket
+    * reachable through a diagonal gap would be misread as a hole and
+    * break the even-odd round trip.
+    *
+    * Each pixel gets a provisional label from its already-scanned
+    * neighbours of the same kind, or a new one; a pixel joining two
+    * labels links their classes under the smaller root. Foreground
+    * labels are odd and background labels even, each minted in scan
+    * order, so a class's smallest label was minted at its first pixel.
+    * One walk over the labels in increasing order then maps every
+    * label to its dense component number, in first-pixel order. */
+  def connectedComponents(mask: Array[Byte], rows: Int, cols: Int): Components = {
     val labels = new Array[Int](rows * cols)
-    val uf = new Geom.UnionFind(rows * cols / 2 + 2)
-    val diag = connectivity == 8
-    var next = 1
+    var eq = new Array[Int](64)   // union-find parent; eq(l) <= l
+    var mint = new Array[Int](64) // pixel where label l was minted
+    var nextFg = 1
+    var nextBg = 2
+    var i = 0
     var r = 0
     while (r < rows) {
       var c = 0
       while (c < cols) {
-        if (mask(r * cols + c) != 0) {
-          val up = if (r > 0) labels((r - 1) * cols + c) else 0
-          val left = if (c > 0) labels(r * cols + c - 1) else 0
-          val upL = if (diag && r > 0 && c > 0) labels((r - 1) * cols + c - 1) else 0
-          val upR = if (diag && r > 0 && c < cols - 1) labels((r - 1) * cols + c + 1) else 0
-          // allocation-free neighbor fold (this runs per foreground
-          // pixel, twice per vectorizeWithHoles call — fg + bg passes)
-          var lbl = 0
-          if (up != 0) lbl = up
-          if (left != 0) {
-            if (lbl == 0) lbl = left
-            else if (left != lbl) { uf.union(lbl, left); lbl = math.min(lbl, left) }
-          }
-          if (upL != 0) {
-            if (lbl == 0) lbl = upL
-            else if (upL != lbl) { uf.union(lbl, upL); lbl = math.min(lbl, upL) }
-          }
-          if (upR != 0) {
-            if (lbl == 0) lbl = upR
-            else if (upR != lbl) { uf.union(lbl, upR); lbl = math.min(lbl, upR) }
-          }
-          if (lbl == 0) { lbl = next; next += 1 }
-          labels(r * cols + c) = lbl
+        var lbl = 0
+        val fg = mask(i) != 0
+        if (fg) {
+          if (r > 0 && mask(i - cols) != 0) lbl = labels(i - cols)
+          if (c > 0 && mask(i - 1) != 0) lbl = join(eq, lbl, labels(i - 1))
+        } else if (r > 0 && mask(i - cols) == 0) {
+          // the background above is 8-adjacent to every other background
+          // neighbour, so they are already joined with it
+          lbl = labels(i - cols)
+        } else {
+          // left and up-left are joined already (vertical neighbours)
+          if (c > 0 && mask(i - 1) == 0) lbl = labels(i - 1)
+          else if (r > 0 && c > 0 && mask(i - cols - 1) == 0) lbl = labels(i - cols - 1)
+          if (r > 0 && c < cols - 1 && mask(i - cols + 1) == 0) lbl = join(eq, lbl, labels(i - cols + 1))
         }
+        if (lbl == 0) {
+          lbl = if (fg) nextFg else nextBg
+          if (lbl >= eq.length) {
+            eq = java.util.Arrays.copyOf(eq, 2 * eq.length)
+            mint = java.util.Arrays.copyOf(mint, 2 * mint.length)
+          }
+          eq(lbl) = lbl
+          mint(lbl) = i
+          if (fg) nextFg += 2 else nextBg += 2
+        }
+        labels(i) = lbl
+        i += 1
         c += 1
       }
       r += 1
     }
-    // compress to canonical, densely renumbered labels
-    val remap = new java.util.HashMap[Int, Int]()
-    var dense = 0
-    var i = 0
-    while (i < labels.length) {
-      if (labels(i) != 0) {
-        val root = uf.find(labels(i))
-        var d = remap.getOrDefault(root, 0)
-        if (d == 0) { dense += 1; d = dense; remap.put(root, d) }
-        labels(i) = d
+    // eq(l) < l for every non-root, so the parent is already dense
+    val fgFirst = new Array[Int]((nextFg + 1) / 2)
+    val bgFirst = new Array[Int](nextBg / 2)
+    var nFg = 0
+    var nBg = 0
+    var l = 1
+    while (l < math.max(nextFg, nextBg)) {
+      if (l < (if ((l & 1) == 1) nextFg else nextBg)) {
+        val p = eq(l)
+        if (p != l) eq(l) = eq(p)
+        else if ((l & 1) == 1) { nFg += 1; eq(l) = nFg; fgFirst(nFg) = mint(l) }
+        else { nBg += 1; eq(l) = -nBg; bgFirst(nBg) = mint(l) }
       }
-      i += 1
+      l += 1
     }
-    labels
+    new Components(labels, eq, java.util.Arrays.copyOf(fgFirst, nFg + 1),
+      java.util.Arrays.copyOf(bgFirst, nBg + 1))
   }
 
-  /** Trace the outer boundary of component `lbl` clockwise along pixel
-    * edges, starting from its top-left-most pixel. Returns corner
-    * coordinates (x=col, y=row). */
-  private def traceBoundary(labels: Array[Int], rows: Int, cols: Int, lbl: Int,
-                            startIdx: Int): Array[Double] = {
-    def at(r: Int, c: Int): Boolean =
-      r >= 0 && r < rows && c >= 0 && c < cols && labels(r * cols + c) == lbl
-    if (startIdx < 0) return Array.emptyDoubleArray
-    val sr = startIdx / cols; val sc = startIdx % cols
-    // square-tracing on the corner lattice. State: corner (x,y) + heading.
-    // Start at the top-left corner of the start pixel heading east along
-    // its top edge (the pixel above is guaranteed empty).
-    val out = new scala.collection.mutable.ArrayBuffer[Double]()
-    var x = sc; var y = sr
-    var dx = 1; var dy = 0
-    val x0 = x; val y0 = y
-    var steps = 0
-    val maxSteps = 4 * (rows + 2) * (cols + 2)
-    do {
-      out += x.toDouble; out += y.toDouble
-      // advance one edge, then turn based on the two pixels ahead.
-      x += dx; y += dy
-      // pixels left/right of the new heading position determine the turn.
-      // heading east: leftPix=(y-1,x), rightPix=(y,x); north: left=(y-1,x-1) right=(y-1,x);
-      // west: left=(y,x-1) right=(y-1,x-1); south: left=(y,x) right=(y,x-1)
-      val (lpr, lpc, rpr, rpc) = (dx, dy) match {
-        case (1, 0)  => (y - 1, x, y, x)
-        case (0, -1) => (y - 1, x - 1, y - 1, x)
-        case (-1, 0) => (y, x - 1, y - 1, x - 1)
-        case _       => (y, x, y, x - 1)
-      }
-      val leftIn = at(lpr, lpc)
-      val rightIn = at(rpr, rpc)
-      if (leftIn) { val t = dx; dx = dy; dy = -t }        // turn left
-      else if (!rightIn) { val t = dx; dx = -dy; dy = t } // turn right
-      // else continue straight
-      steps += 1
-    } while ((x != x0 || y != y0) && steps < maxSteps)
-    // drop collinear interior vertices
-    dedupCollinear(out.toArray)
+  /** `lbl` joined with neighbour label `o` (0 = no label yet): the root
+    * of their joined class, so the row carries that label on and meets
+    * fewer distinct labels above it. */
+  private def join(eq: Array[Int], lbl: Int, o: Int): Int =
+    if (lbl == 0) o
+    else if (o == lbl) lbl
+    else {
+      val ra = root(eq, lbl)
+      val rb = root(eq, o)
+      if (ra < rb) { eq(rb) = ra; ra } else { eq(ra) = rb; rb }
+    }
+
+  private def root(eq: Array[Int], l: Int): Int = {
+    var rt = l
+    while (eq(rt) != rt) rt = eq(rt)
+    var c = l
+    while (eq(c) != rt) { val nx = eq(c); eq(c) = rt; c = nx }
+    rt
   }
 
-  private def dedupCollinear(c: Array[Double]): Array[Double] = {
-    val n = c.length / 2
-    if (n < 4) return c
-    val out = new scala.collection.mutable.ArrayBuffer[Double]()
-    var i = 0
-    while (i < n) {
-      val p = (i + n - 1) % n
-      val q = (i + 1) % n
-      val cross = (c(2 * i) - c(2 * p)) * (c(2 * q + 1) - c(2 * p + 1)) -
-                  (c(2 * i + 1) - c(2 * p + 1)) * (c(2 * q) - c(2 * p))
-      if (math.abs(cross) > 1e-12) { out += c(2 * i); out += c(2 * i + 1) }
-      i += 1
+  /** Traces the boundary of a component clockwise along pixel edges,
+    * square tracing on the corner lattice, into one corner buffer
+    * reused across rings. */
+  private final class Tracer(comps: Components, rows: Int, cols: Int) {
+    private var xy = new Array[Int](64)
+    private var n = 0
+
+    private def push(x: Int, y: Int): Unit = {
+      if (n + 2 > xy.length) xy = java.util.Arrays.copyOf(xy, 2 * xy.length)
+      xy(n) = x; xy(n + 1) = y
+      n += 2
     }
-    out.toArray
+
+    /** The ring of component `k`, starting at the top-left corner of its
+      * first pixel `start` heading east (the pixel above is not in `k`).
+      * Returns corner coordinates (x=col, y=row), one per turn of the
+      * heading, so no two consecutive edges are collinear. */
+    def ring(k: Int, start: Int): Array[Double] = {
+      def at(r: Int, c: Int): Boolean =
+        r >= 0 && r < rows && c >= 0 && c < cols && comps(r * cols + c) == k
+      val x0 = start % cols
+      val y0 = start / cols
+      var x = x0
+      var y = y0
+      var dir = 0 // 0 east, 1 south, 2 west, 3 north (clockwise, y down)
+      n = 0
+      push(x0, y0)
+      var steps = 0
+      val maxSteps = 4 * (rows + 2) * (cols + 2)
+      do {
+        // advance one edge, then turn on the two pixels ahead of the corner:
+        // left one in → turn left; neither in → turn right; else straight
+        var leftIn = false
+        var rightIn = false
+        if (dir == 0) { x += 1; leftIn = at(y - 1, x); rightIn = at(y, x) }
+        else if (dir == 1) { y += 1; leftIn = at(y, x); rightIn = at(y, x - 1) }
+        else if (dir == 2) { x -= 1; leftIn = at(y, x - 1); rightIn = at(y - 1, x - 1) }
+        else { y -= 1; leftIn = at(y - 1, x - 1); rightIn = at(y - 1, x) }
+        val turn = if (leftIn) 3 else if (!rightIn) 1 else 0
+        if (turn != 0) {
+          dir = (dir + turn) & 3
+          if (x != x0 || y != y0) push(x, y)
+        }
+        steps += 1
+      } while ((x != x0 || y != y0) && steps < maxSteps)
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < n) { out(i) = xy(i); i += 1 }
+      out
+    }
   }
 }

@@ -242,49 +242,184 @@ object CrownOps {
   }
 
   /** Greedy bbox NMS, torchvision contract (processedinstance.py:523-568):
-    * consider score-descending (ties → lower crownId), suppress when
-    * bbox IoU with an already-kept box exceeds `iouThr` (strict >). A
-    * spatial hash over kept boxes keeps it near-linear. Returns kept
-    * crowns in input order (indices like the reference). */
+    * consider score-descending (ties → lower crownId, then input order;
+    * scores compare as Scala's total `Double` order on `-score`, so NaN
+    * scores come last), suppress when bbox IoU with an already-kept box
+    * exceeds `iouThr` (strict >, `BBox.iou`'s arithmetic). Returns kept
+    * crowns in input order (indices like the reference).
+    *
+    * Kept boxes are indexed by the 64-px cells they cover, and a
+    * candidate is tested only against kept boxes that share a cell with
+    * it: a pair with IoU > 0 overlaps, and any point of the overlap lies
+    * in a cell of both. A box covering more than `NmsWideCells` cells
+    * is kept on a list that every candidate scans, and such a candidate
+    * scans every kept box, so the cell work per crown stays bounded
+    * whatever its extent. The decisions equal the plain O(n²) greedy
+    * scan for any `iouThr >= 0`. */
   def nmsLocal(crowns: IndexedSeq[Crown], iouThr: Double): IndexedSeq[Crown] = {
-    if (crowns.isEmpty) return crowns
-    val order = crowns.indices.sortBy(i => (-crowns(i).score, crowns(i).crownId))
-    val cellSize = 64.0
-    val keptByCell = new java.util.HashMap[Long, java.util.ArrayList[Int]]()
-    def cellsOf(c: Crown): Iterator[Long] = {
-      val cx0 = math.floor(c.minX / cellSize).toLong
-      val cx1 = math.floor(c.maxX / cellSize).toLong
-      val cy0 = math.floor(c.minY / cellSize).toLong
-      val cy1 = math.floor(c.maxY / cellSize).toLong
-      for (cy <- (cy0 to cy1).iterator; cx <- cx0 to cx1) yield cy * 1000003L + cx
+    val n = crowns.size
+    if (n == 0) return crowns
+    val x0 = new Array[Double](n); val y0 = new Array[Double](n)
+    val x1 = new Array[Double](n); val y1 = new Array[Double](n)
+    val area = new Array[Double](n)
+    val key = new Array[Long](n); val id = new Array[Long](n)
+    var i = 0
+    crowns.foreach { c =>
+      x0(i) = c.minX; y0(i) = c.minY; x1(i) = c.maxX; y1(i) = c.maxY
+      area(i) = math.max(0.0, c.maxX - c.minX) * math.max(0.0, c.maxY - c.minY)
+      key(i) = totalOrderKey(-c.score)
+      id(i) = c.crownId
+      i += 1
     }
-    val kept = new scala.collection.mutable.BitSet(crowns.size)
-    order.foreach { i =>
-      val c = crowns(i)
-      val bb = BBox(c.minX, c.minY, c.maxX, c.maxY)
+    def suppresses(c: Int, k: Int): Boolean = {
+      val ix = math.max(0.0, math.min(x1(c), x1(k)) - math.max(x0(c), x0(k)))
+      val iy = math.max(0.0, math.min(y1(c), y1(k)) - math.max(y0(c), y0(k)))
+      val inter = ix * iy
+      val u = area(c) + area(k) - inter
+      (if (u <= 0) 0.0 else inter / u) > iouThr
+    }
+    val order = scoreOrder(key, id)
+    val cells = new KeptCells(n)
+    val kept = new Array[Boolean](n)
+    val keptList = new Array[Int](n); var nKept = 0
+    val wide = new Array[Int](n); var nWide = 0
+    var o = 0
+    while (o < n) {
+      val c = order(o)
+      val fx0 = math.floor(x0(c) / NmsCellSize); val fx1 = math.floor(x1(c) / NmsCellSize)
+      val fy0 = math.floor(y0(c) / NmsCellSize); val fy1 = math.floor(y1(c) / NmsCellSize)
+      val isWide = (fx1 - fx0 + 1) * (fy1 - fy0 + 1) > NmsWideCells
+      val cx0 = fx0.toLong; val spanX = fx1.toLong - cx0
+      val cy0 = fy0.toLong; val spanY = fy1.toLong - cy0
       var suppressed = false
-      val it = cellsOf(c)
-      while (!suppressed && it.hasNext) {
-        val lst = keptByCell.get(it.next())
-        if (lst != null) {
-          var j = 0
-          while (!suppressed && j < lst.size()) {
-            val k = crowns(lst.get(j))
-            if (bb.iou(BBox(k.minX, k.minY, k.maxX, k.maxY)) > iouThr) suppressed = true
-            j += 1
+      if (isWide) {
+        var j = 0
+        while (!suppressed && j < nKept) { suppressed = suppresses(c, keptList(j)); j += 1 }
+      } else {
+        var j = 0
+        while (!suppressed && j < nWide) { suppressed = suppresses(c, wide(j)); j += 1 }
+        var dy = 0L
+        while (!suppressed && dy <= spanY) {
+          var dx = 0L
+          while (!suppressed && dx <= spanX) {
+            var e = cells.head((cy0 + dy) * 1000003L + cx0 + dx)
+            while (!suppressed && e >= 0) { suppressed = suppresses(c, cells.crown(e)); e = cells.next(e) }
+            dx += 1
           }
+          dy += 1
         }
       }
       if (!suppressed) {
-        kept += i
-        cellsOf(c).foreach { cell =>
-          var lst = keptByCell.get(cell)
-          if (lst == null) { lst = new java.util.ArrayList[Int](); keptByCell.put(cell, lst) }
-          lst.add(i)
+        kept(c) = true
+        keptList(nKept) = c; nKept += 1
+        if (isWide) { wide(nWide) = c; nWide += 1 }
+        else {
+          var dy = 0L
+          while (dy <= spanY) {
+            var dx = 0L
+            while (dx <= spanX) { cells.add((cy0 + dy) * 1000003L + cx0 + dx, c); dx += 1 }
+            dy += 1
+          }
         }
       }
+      o += 1
     }
-    crowns.indices.filter(kept).map(crowns)
+    val out = Vector.newBuilder[Crown]
+    i = 0
+    crowns.foreach { c => if (kept(i)) out += c; i += 1 }
+    out.result()
+  }
+
+  /** NMS spatial-hash cell side, px. */
+  private val NmsCellSize = 64.0
+  /** Boxes covering more cells than this skip the spatial hash. */
+  private val NmsWideCells = 64
+
+  /** A `Long` whose signed order is `java.lang.Double.compare`'s total
+    * order (−0.0 below 0.0, NaN above +∞) — the order of Scala 2.13's
+    * default `Ordering[Double]`. */
+  private def totalOrderKey(d: Double): Long = {
+    val b = java.lang.Double.doubleToLongBits(d)
+    b ^ ((b >> 63) & Long.MaxValue)
+  }
+
+  /** Indices sorted by (`key`, `id`), equal pairs in index order: a
+    * stable bottom-up merge sort. */
+  private def scoreOrder(key: Array[Long], id: Array[Long]): Array[Int] = {
+    val n = key.length
+    var a = Array.range(0, n)
+    var b = new Array[Int](n)
+    def less(p: Int, q: Int): Boolean = key(p) < key(q) || (key(p) == key(q) && id(p) < id(q))
+    var w = 1
+    while (w < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + w, n); val hi = math.min(lo + 2 * w, n)
+        var p = lo; var q = mid; var k = lo
+        while (k < hi) {
+          if (q < hi && (p >= mid || less(a(q), a(p)))) { b(k) = a(q); q += 1 }
+          else { b(k) = a(p); p += 1 }
+          k += 1
+        }
+        lo += 2 * w
+      }
+      val t = a; a = b; b = t
+      w *= 2
+    }
+    a
+  }
+
+  /** Cell key → the kept crowns in that cell, for [[nmsLocal]]: an
+    * open-addressed table of chain heads over an index-linked list of
+    * (crown, next) entries. Both grow with what is added, never with
+    * the extent of the coordinates. */
+  private final class KeptCells(expected: Int) {
+    private var bits = math.max(4, 32 - Integer.numberOfLeadingZeros(2 * expected - 1))
+    private var keys = new Array[Long](1 << bits)
+    private var heads = Array.fill(1 << bits)(-1)
+    private var used = 0
+    private var crowns = new Array[Int](math.max(16, expected))
+    private var nexts = new Array[Int](math.max(16, expected))
+    private var entries = 0
+
+    private def slot(k: Long): Int = {
+      var s = ((k * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (heads(s) >= 0 && keys(s) != k) s = (s + 1) & ((1 << bits) - 1)
+      s
+    }
+    /** First entry of cell `k`, or −1. */
+    def head(k: Long): Int = heads(slot(k))
+    def crown(e: Int): Int = crowns(e)
+    def next(e: Int): Int = nexts(e)
+
+    def add(k: Long, crown: Int): Unit = {
+      if (entries == crowns.length) {
+        crowns = java.util.Arrays.copyOf(crowns, 2 * entries)
+        nexts = java.util.Arrays.copyOf(nexts, 2 * entries)
+      }
+      var s = slot(k)
+      if (heads(s) < 0) {
+        if (2 * (used + 1) > heads.length) { grow(); s = slot(k) }
+        keys(s) = k
+        used += 1
+      }
+      crowns(entries) = crown
+      nexts(entries) = heads(s)
+      heads(s) = entries
+      entries += 1
+    }
+
+    private def grow(): Unit = {
+      val oldKeys = keys; val oldHeads = heads
+      bits += 1
+      keys = new Array[Long](1 << bits)
+      heads = Array.fill(1 << bits)(-1)
+      var s = 0
+      while (s < oldHeads.length) {
+        if (oldHeads(s) >= 0) { val t = slot(oldKeys(s)); keys(t) = oldKeys(s); heads(t) = oldHeads(s) }
+        s += 1
+      }
+    }
   }
 
   /** Connected components of the polygon-intersects graph = the
@@ -485,12 +620,13 @@ object CrownOps {
     * exchange; any other input gets the one exchange Spark plans for
     * the group-by.
     *
-    * `emitGeom = false` skips the dissolved-geometry border trace (the
-    * dominant per-instance CPU cost — rasterize is still paid for the
-    * exact pixel `area`, but hole-aware ring tracing is not) and leaves
-    * `geom` empty / `perimeter` 0.0. Use it for count/stats consumers
-    * that never read the rings; fixture serialization keeps the
-    * default. */
+    * `emitGeom = false` skips the dissolved-geometry border trace
+    * (about a sixth of the merge's executor samples on perfbench
+    * `predict`, 40 of 241 on seed 302; dissolve + split are half —
+    * rasterize is still paid for the exact pixel `area`, but hole-aware
+    * ring tracing is not) and leaves `geom` empty / `perimeter` 0.0.
+    * Use it for count/stats consumers that never read the rings;
+    * fixture serialization keeps the default. */
   def nmsMerge(spark: SparkSession, crowns: Dataset[Crown], nmsIou: Double,
                confThr: Double, mergeIou: Double,
                emitGeom: Boolean = true): Dataset[MergedCrown] = {

@@ -228,7 +228,7 @@ class GeomSpec extends AnyFunSuite {
     for (r <- 1 to 3; c <- 1 to 3) mask(r * 10 + c) = 1
     for (r <- 6 to 8; c <- 6 to 8) mask(r * 10 + c) = 1
     val labels = Raster.connectedComponents(mask, 10, 10)
-    assert(labels.max === 2)
+    assert(labels.nFg === 2)
     val polys = Raster.vectorize(mask, 10, 10)
     assert(polys.size === 2)
     assert(math.abs(Geom.area(polys.head) - 9.0) < 1e-9)

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.geom.{Geom, Raster}
+import graft.geom.Raster
 
 /** Parity against the REFERENCE's own golden serialized-geometry
   * fixture — the 387-instance COCO file from
@@ -15,34 +15,7 @@ import graft.geom.{Geom, Raster}
   * byte-for-byte. */
 class ReferenceGoldenSpec extends AnyFunSuite {
 
-  // minimal JSON walking (the file is well-formed, flat-ish)
-  private lazy val raw = new String(java.nio.file.Files.readAllBytes(
-    java.nio.file.Paths.get("src/test/resources/reference_golden_coco.json")),
-    java.nio.charset.StandardCharsets.UTF_8)
-
-  private case class Ann(id: Long, categoryId: Int, score: Double,
-                         bbox: Array[Double], area: Double,
-                         rows: Int, cols: Int, counts: String)
-
-  private lazy val annotations: Seq[Ann] = {
-    val body = raw.substring(raw.indexOf("\"annotations\""))
-    // the reference writes json.dump(indent=1) — whitespace-tolerant
-    val recRe = ("""(?s)\{\s*"id":\s*(\d+),\s*"image_id":\s*\d+,\s*""" +
-      """"category_id":\s*(\d+),\s*"score":\s*([0-9.eE+-]+),\s*""" +
-      """"label":\s*[^,]+,\s*"bbox":\s*\[([^\]]*)\],\s*""" +
-      """"area":\s*([0-9.eE+-]+),\s*"segmentation":\s*\{\s*""" +
-      """"size":\s*\[\s*(\d+),\s*(\d+)\s*\],\s*"counts":\s*"([^"]*)"""").r
-    val out = recRe.findAllMatchIn(body).map { m =>
-      Ann(m.group(1).toLong, m.group(2).toInt, m.group(3).toDouble,
-        m.group(4).split(",").map(_.trim.toDouble), m.group(5).toDouble,
-        m.group(6).toInt, m.group(7).toInt,
-        // RLE chars span ASCII 48..111 which includes backslash (92) —
-        // JSON-escaped in the raw text
-        m.group(8).replace("\\\\", "\\"))
-    }.toSeq
-    require(out.nonEmpty, "fixture parse produced no annotations")
-    out
-  }
+  import ReferenceFixture.annotations
 
   test("all 387 reference annotations parse") {
     assert(annotations.size === 387)
@@ -73,16 +46,7 @@ class ReferenceGoldenSpec extends AnyFunSuite {
     // reference instances → our Crown model (polygon = traced dominant
     // component in global coords) → NMS + dissolve/split merge with the
     // reference CLI defaults (merge.py:235: conf 0.35, iou 0.1; NMS 0.7)
-    val crowns = annotations.flatMap { a =>
-      val counts = Raster.rleFromCocoString(a.counts)
-      val mask = Raster.rleDecode(counts, a.rows, a.cols)
-      Raster.vectorize(mask, a.rows, a.cols).sortBy(-Geom.area(_)).headOption.map { local =>
-        val poly = Geom.translate(local, a.bbox(0), a.bbox(1))
-        val bb = Geom.BBox.ofPolygon(poly)
-        graft.operators.CrownOps.Crown(0L, a.id, a.id, 0L, a.categoryId,
-          a.score, bb.minX, bb.minY, bb.maxX, bb.maxY, poly)
-      }
-    }.toIndexedSeq
+    val crowns = ReferenceFixture.crowns
     assert(crowns.size === 387)
     val merged = Seq(0, 1).flatMap { cls =>
       val kept = graft.operators.CrownOps.nmsLocal(

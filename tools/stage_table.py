@@ -20,9 +20,10 @@ output check's own collect too.
 
 The CPU split is the executor threads' `jdk.ExecutionSample` events, each
 put in the first group one of its top frames matches (see GROUPS). The
-topmost matching frame decides, so a `graft.geom.Raster` kernel the merge
-calls counts as a raster kernel, and the few `graft.geom.Geom` calls under
-crown synthesis count as merge kernels.
+topmost matching frame decides, so the tracer and the rasterizer the merge
+calls count as "merge trace" and "rasterize", and the few `graft.geom.Geom`
+calls under crown synthesis count as merge kernels. Union-find frames are
+passed over (TRANSPARENT): their caller decides.
 Needs `jfr` on PATH.
 
 Usage: stage_table.py <run dir>
@@ -38,6 +39,9 @@ import sys
 MARKERS = {"predict": "foreachPartition at GeoTiffIO",
            "assign": "collect at Workloads",
            "spatial_join": "collect at Workloads"}
+# frames no group claims: a sample there goes to the first caller that
+# matches, so union-find work counts with the tracer or the dissolve
+TRANSPARENT = ("graft.geom.Geom$UnionFind",)
 # frame substrings per group, tried from the top frame down
 GROUPS = [
     ("overlay kernel", ("graft.geom.Overlay",)),
@@ -54,7 +58,12 @@ GROUPS = [
     ("merge kernels", ("graft.operators.CrownOps$.nmsLocal", "graft.operators.CrownOps$.mergeLocal",
                        "graft.operators.CrownOps$.dissolveLocal", "graft.operators.CrownOps$.splitLocal",
                        "graft.operators.CrownOps$.toMerged", "graft.geom.Geom")),
-    ("raster kernels", ("graft.geom.Raster",)),
+    ("merge trace", ("graft.geom.Raster$.vectorize", "graft.geom.Raster$.connectedComponents",
+                     "graft.geom.Raster$.traceBoundary", "graft.geom.Raster$.dedupCollinear",
+                     "graft.geom.Raster$.firstPixels", "graft.geom.Raster$.markBorder",
+                     "graft.geom.Raster$.join", "graft.geom.Raster$.root",
+                     "graft.geom.Raster$Components", "graft.geom.Raster$Tracer")),
+    ("rasterize", ("graft.geom.Raster",)),
     ("parquet write", ("org.apache.parquet",)),
     ("shuffle serialization", ("UnsafeRowSerializer", "ShuffleWriter")),
 ]
@@ -128,6 +137,8 @@ print(f"process launches per repetition: {len(cmds) / reps:.1f} "
 
 def group_of(frames):
     for frame in frames:
+        if any(k in frame for k in TRANSPARENT):
+            continue
         for name, keys in GROUPS:
             if any(k in frame for k in keys):
                 return name
