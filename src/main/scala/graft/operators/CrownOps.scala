@@ -24,8 +24,9 @@ import graft.grid.TileGridSpec
   * whole merge phase is one (region, class) group-by + flatMapGroups —
   * no global shuffle beyond the group-by, and regions scale out linearly
   * to billions on a real cluster (each group is bounded, ~10⁴ crowns).
-  * Within a group we use an in-memory spatial hash instead of the
-  * reference's rtree, keeping per-group work near-linear.
+  * Within a group, NMS, dissolve and the centroid filter share one
+  * bounded cell index ([[BoxCells]]) instead of the reference's rtree,
+  * keeping per-group work near-linear.
   *
   * IoU in `split` is computed on 1-px rasterized masks once geometries
   * are merged multipolygons (the reference's polygons originate from
@@ -170,15 +171,16 @@ object CrownOps {
   // single-node golden implementation for tests).
   // ---------------------------------------------------------------------
 
-  /** In-memory instance during group-local processing. */
+  /** In-memory instance during group-local processing; `bbox` is the
+    * union of its parts' bounding boxes. */
   final case class Inst(ids: List[Long], classIdx: Int, scores: List[Double],
-                        parts: List[Array[Double]]) {
-    lazy val bbox: BBox = parts.map(BBox.ofPolygon(_)).reduce(_ union _)
+                        parts: List[Array[Double]], bbox: BBox) {
     def merge(o: Inst): Inst =
-      Inst(ids ++ o.ids, classIdx, scores ++ o.scores, parts ++ o.parts)
+      Inst(ids ++ o.ids, classIdx, scores ++ o.scores, parts ++ o.parts, bbox union o.bbox)
   }
 
-  def instOf(c: Crown): Inst = Inst(List(c.crownId), c.classIdx, List(c.score), List(c.poly))
+  private def instOf(c: Crown): Inst =
+    Inst(List(c.crownId), c.classIdx, List(c.score), List(c.poly), BBox.ofPolygon(c.poly))
 
   private def instIntersects(a: Inst, b: Inst): Boolean =
     a.bbox.intersects(b.bbox) &&
@@ -248,14 +250,9 @@ object CrownOps {
     * exceeds `iouThr` (strict >, `BBox.iou`'s arithmetic). Returns kept
     * crowns in input order (indices like the reference).
     *
-    * Kept boxes are indexed by the 64-px cells they cover, and a
-    * candidate is tested only against kept boxes that share a cell with
-    * it: a pair with IoU > 0 overlaps, and any point of the overlap lies
-    * in a cell of both. A box covering more than `NmsWideCells` cells
-    * is kept on a list that every candidate scans, and such a candidate
-    * scans every kept box, so the cell work per crown stays bounded
-    * whatever its extent. The decisions equal the plain O(n²) greedy
-    * scan for any `iouThr >= 0`. */
+    * A candidate is tested only against the kept boxes [[BoxCells]]
+    * visits for it: a pair with IoU > 0 overlaps, so the decisions equal
+    * the plain O(n²) greedy scan for any `iouThr >= 0`. */
   def nmsLocal(crowns: IndexedSeq[Crown], iouThr: Double): IndexedSeq[Crown] = {
     val n = crowns.size
     if (n == 0) return crowns
@@ -279,48 +276,14 @@ object CrownOps {
       (if (u <= 0) 0.0 else inter / u) > iouThr
     }
     val order = scoreOrder(key, id)
-    val cells = new KeptCells(n)
+    val cells = new BoxCells(n)
     val kept = new Array[Boolean](n)
-    val keptList = new Array[Int](n); var nKept = 0
-    val wide = new Array[Int](n); var nWide = 0
     var o = 0
     while (o < n) {
       val c = order(o)
-      val fx0 = math.floor(x0(c) / NmsCellSize); val fx1 = math.floor(x1(c) / NmsCellSize)
-      val fy0 = math.floor(y0(c) / NmsCellSize); val fy1 = math.floor(y1(c) / NmsCellSize)
-      val isWide = (fx1 - fx0 + 1) * (fy1 - fy0 + 1) > NmsWideCells
-      val cx0 = fx0.toLong; val spanX = fx1.toLong - cx0
-      val cy0 = fy0.toLong; val spanY = fy1.toLong - cy0
-      var suppressed = false
-      if (isWide) {
-        var j = 0
-        while (!suppressed && j < nKept) { suppressed = suppresses(c, keptList(j)); j += 1 }
-      } else {
-        var j = 0
-        while (!suppressed && j < nWide) { suppressed = suppresses(c, wide(j)); j += 1 }
-        var dy = 0L
-        while (!suppressed && dy <= spanY) {
-          var dx = 0L
-          while (!suppressed && dx <= spanX) {
-            var e = cells.head((cy0 + dy) * 1000003L + cx0 + dx)
-            while (!suppressed && e >= 0) { suppressed = suppresses(c, cells.crown(e)); e = cells.next(e) }
-            dx += 1
-          }
-          dy += 1
-        }
-      }
-      if (!suppressed) {
+      if (!cells.exists(x0(c), y0(c), x1(c), y1(c))(suppresses(c, _))) {
         kept(c) = true
-        keptList(nKept) = c; nKept += 1
-        if (isWide) { wide(nWide) = c; nWide += 1 }
-        else {
-          var dy = 0L
-          while (dy <= spanY) {
-            var dx = 0L
-            while (dx <= spanX) { cells.add((cy0 + dy) * 1000003L + cx0 + dx, c); dx += 1 }
-            dy += 1
-          }
-        }
+        cells.add(c, x0(c), y0(c), x1(c), y1(c))
       }
       o += 1
     }
@@ -329,11 +292,6 @@ object CrownOps {
     crowns.foreach { c => if (kept(i)) out += c; i += 1 }
     out.result()
   }
-
-  /** NMS spatial-hash cell side, px. */
-  private val NmsCellSize = 64.0
-  /** Boxes covering more cells than this skip the spatial hash. */
-  private val NmsWideCells = 64
 
   /** A `Long` whose signed order is `java.lang.Double.compare`'s total
     * order (−0.0 below 0.0, NaN above +∞) — the order of Scala 2.13's
@@ -369,32 +327,92 @@ object CrownOps {
     a
   }
 
-  /** Cell key → the kept crowns in that cell, for [[nmsLocal]]: an
-    * open-addressed table of chain heads over an index-linked list of
-    * (crown, next) entries. Both grow with what is added, never with
-    * the extent of the coordinates. */
-  private final class KeptCells(expected: Int) {
-    private var bits = math.max(4, 32 - Integer.numberOfLeadingZeros(2 * expected - 1))
+  /** Cell side of [[BoxCells]], px. */
+  private val CellSize = 64.0
+  /** Boxes covering more cells than this skip the cells of [[BoxCells]]. */
+  private val WideCells = 64
+
+  /** The group-local merge's spatial index (PBSM's grid with
+    * multi-assignment, on one node): closed boxes, `Int` items, indexed
+    * by the 64-px cells they cover in an open-addressed `Long`-keyed
+    * table of chain heads over an index-linked list of (item, next)
+    * entries. Both grow with what is added, never with the extent of
+    * the coordinates. A box covering more than `WideCells` cells is
+    * not put in the table: it goes on a `wide` list that every query
+    * visits, and a query box that wide visits every item instead of its
+    * cells, so the cell work per box stays bounded whatever its extent.
+    * A query therefore visits every added box it intersects — two
+    * intersecting boxes share a cell (any common point lies in a cell of
+    * both) or one of them is wide — possibly more than once, among
+    * others the caller's predicate rejects. A point is a zero-size box
+    * in one cell, visited at most once per query. */
+  private final class BoxCells(expected: Int) {
+    private var bits = 32 - Integer.numberOfLeadingZeros(math.max(16, 2 * expected) - 1)
     private var keys = new Array[Long](1 << bits)
     private var heads = Array.fill(1 << bits)(-1)
     private var used = 0
-    private var crowns = new Array[Int](math.max(16, expected))
+    private var items = new Array[Int](math.max(16, expected))
     private var nexts = new Array[Int](math.max(16, expected))
     private var entries = 0
+    private var all = new Array[Int](math.max(16, expected)); private var nAll = 0
+    private var wide = new Array[Int](16); private var nWide = 0
+
+    def add(i: Int, x0: Double, y0: Double, x1: Double, y1: Double): Unit = {
+      all = append(all, nAll, i); nAll += 1
+      if (isWide(x0, y0, x1, y1)) { wide = append(wide, nWide, i); nWide += 1 }
+      else cells(x0, y0, x1, y1) { k => link(k, i); false }
+    }
+
+    /** Whether `p` holds for an item the query box visits; stops at the
+      * first that it holds for. */
+    def exists(x0: Double, y0: Double, x1: Double, y1: Double)(p: Int => Boolean): Boolean =
+      if (isWide(x0, y0, x1, y1)) listExists(all, nAll, p)
+      else listExists(wide, nWide, p) || cells(x0, y0, x1, y1) { k =>
+        var e = heads(slot(k)); var hit = false
+        while (!hit && e >= 0) { hit = p(items(e)); e = nexts(e) }
+        hit
+      }
+
+    private def isWide(x0: Double, y0: Double, x1: Double, y1: Double): Boolean =
+      (math.floor(x1 / CellSize) - math.floor(x0 / CellSize) + 1) *
+        (math.floor(y1 / CellSize) - math.floor(y0 / CellSize) + 1) > WideCells
+
+    /** The cell loop: `f` on each cell key of a box that is not wide,
+      * row by row, until it returns true; returns whether it did. */
+    private def cells(x0: Double, y0: Double, x1: Double, y1: Double)(f: Long => Boolean): Boolean = {
+      val cx0 = math.floor(x0 / CellSize).toLong; val spanX = math.floor(x1 / CellSize).toLong - cx0
+      val cy0 = math.floor(y0 / CellSize).toLong; val spanY = math.floor(y1 / CellSize).toLong - cy0
+      var hit = false
+      var dy = 0L
+      while (!hit && dy <= spanY) {
+        var dx = 0L
+        while (!hit && dx <= spanX) { hit = f((cy0 + dy) * 1000003L + cx0 + dx); dx += 1 }
+        dy += 1
+      }
+      hit
+    }
+
+    private def listExists(list: Array[Int], n: Int, p: Int => Boolean): Boolean = {
+      var j = 0
+      while (j < n && !p(list(j))) j += 1
+      j < n
+    }
+
+    private def append(list: Array[Int], n: Int, i: Int): Array[Int] = {
+      val out = if (n == list.length) java.util.Arrays.copyOf(list, 2 * n) else list
+      out(n) = i
+      out
+    }
 
     private def slot(k: Long): Int = {
       var s = ((k * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
       while (heads(s) >= 0 && keys(s) != k) s = (s + 1) & ((1 << bits) - 1)
       s
     }
-    /** First entry of cell `k`, or −1. */
-    def head(k: Long): Int = heads(slot(k))
-    def crown(e: Int): Int = crowns(e)
-    def next(e: Int): Int = nexts(e)
 
-    def add(k: Long, crown: Int): Unit = {
-      if (entries == crowns.length) {
-        crowns = java.util.Arrays.copyOf(crowns, 2 * entries)
+    private def link(k: Long, i: Int): Unit = {
+      if (entries == items.length) {
+        items = java.util.Arrays.copyOf(items, 2 * entries)
         nexts = java.util.Arrays.copyOf(nexts, 2 * entries)
       }
       var s = slot(k)
@@ -403,7 +421,7 @@ object CrownOps {
         keys(s) = k
         used += 1
       }
-      crowns(entries) = crown
+      items(entries) = i
       nexts(entries) = heads(s)
       heads(s) = entries
       entries += 1
@@ -424,102 +442,66 @@ object CrownOps {
 
   /** Connected components of the polygon-intersects graph = the
     * dissolve grouping (merge.py:85-122: unary_union components ↔
-    * transitive closure of `intersects`). Spatial-hash candidate
-    * pruning replaces the rtree. */
-  def dissolveLocal(insts: IndexedSeq[Inst]): Iterator[IndexedSeq[Inst]] = {
+    * transitive closure of `intersects`). Each instance, in index
+    * order, is unioned with the earlier ones [[BoxCells]] visits for its
+    * bbox and that it intersects; [[BoxCells]] replaces the rtree.
+    * Groups come out by union-find root, members in index order. */
+  private def dissolveLocal(insts: IndexedSeq[Inst]): Iterator[List[Inst]] = {
     val n = insts.size
-    if (n == 0) return Iterator.empty
     val uf = new Geom.UnionFind(n)
-    val cellSize = 64.0
-    val byCell = new java.util.HashMap[Long, java.util.ArrayList[Int]]()
-    insts.indices.foreach { i =>
+    val cells = new BoxCells(n)
+    var i = 0
+    while (i < n) {
       val bb = insts(i).bbox
-      val cx0 = math.floor(bb.minX / cellSize).toLong
-      val cx1 = math.floor(bb.maxX / cellSize).toLong
-      val cy0 = math.floor(bb.minY / cellSize).toLong
-      val cy1 = math.floor(bb.maxY / cellSize).toLong
-      for (cy <- cy0 to cy1; cx <- cx0 to cx1) {
-        val key = cy * 1000003L + cx
-        var lst = byCell.get(key)
-        if (lst == null) { lst = new java.util.ArrayList[Int](); byCell.put(key, lst) }
-        // union with intersecting prior members of this bucket
-        var j = 0
-        while (j < lst.size()) {
-          val o = lst.get(j)
-          if (uf.find(o) != uf.find(i) && instIntersects(insts(o), insts(i))) uf.union(o, i)
-          j += 1
-        }
-        lst.add(i)
+      cells.exists(bb.minX, bb.minY, bb.maxX, bb.maxY) { o =>
+        if (uf.find(o) != uf.find(i) && instIntersects(insts(o), insts(i))) uf.union(o, i)
+        false
       }
+      cells.add(i, bb.minX, bb.minY, bb.maxX, bb.maxY)
+      i += 1
     }
-    val groups = new java.util.HashMap[Int, scala.collection.mutable.ArrayBuffer[Inst]]()
-    insts.indices.foreach { i =>
-      val root = uf.find(i)
-      var g = groups.get(root)
-      if (g == null) { g = new scala.collection.mutable.ArrayBuffer[Inst](); groups.put(root, g) }
-      g += insts(i)
-    }
-    import scala.jdk.CollectionConverters._
-    groups.values().asScala.iterator.map(_.toIndexedSeq)
+    val byRoot = Array.fill(n)(List.empty[Inst])
+    i = n - 1
+    while (i >= 0) { val r = uf.find(i); byRoot(r) = insts(i) :: byRoot(r); i -= 1 }
+    byRoot.iterator.filter(_.nonEmpty)
   }
 
   /** Centroid filter (merge.py:167-192 / instanceprocessor.py:203-238):
-    * drop instances containing more than `maxOverlaps` other instances'
-    * centroids. Instances here are raw (single-part). */
-  def filterCentroids(group: IndexedSeq[Inst], maxOverlaps: Int = 1): IndexedSeq[Inst] = {
+    * drop instances containing more than `MaxCentroidsInside` other
+    * instances' centroids. Instances here are raw (single-part). The
+    * centroids are points in one [[BoxCells]], and each instance counts
+    * those its bbox query visits, up to the first one over the limit. */
+  private def filterCentroids(group: IndexedSeq[Inst]): IndexedSeq[Inst] = {
     val n = group.size
-    val cents = group.map(g => Geom.centroid(g.parts.head))
-    val counts = new Array[Int](n)
-    // spatial-hash the centroids so each polygon only tests centroids in
-    // the cells its bbox covers — O(n·local) instead of O(n²) (dense
-    // dissolve components reach thousands of members).
-    val cellSize = 64.0
-    val byCell = new java.util.HashMap[Long, java.util.ArrayList[Int]]()
-    var ai = 0
-    while (ai < n) {
-      val key = math.floor(cents(ai)._2 / cellSize).toLong * 1000003L +
-        math.floor(cents(ai)._1 / cellSize).toLong
-      var lst = byCell.get(key)
-      if (lst == null) { lst = new java.util.ArrayList[Int](); byCell.put(key, lst) }
-      lst.add(ai)
-      ai += 1
+    val cx = new Array[Double](n); val cy = new Array[Double](n)
+    val cents = new BoxCells(n)
+    var a = 0
+    while (a < n) {
+      val (x, y) = Geom.centroid(group(a).parts.head)
+      cx(a) = x; cy(a) = y
+      cents.add(a, x, y, x, y)
+      a += 1
     }
-    var bi = 0
-    while (bi < n) {
-      val b = group(bi)
-      val bb = b.bbox
-      var cy = math.floor(bb.minY / cellSize).toLong
-      while (cy <= math.floor(bb.maxY / cellSize).toLong) {
-        var cx = math.floor(bb.minX / cellSize).toLong
-        while (cx <= math.floor(bb.maxX / cellSize).toLong) {
-          val lst = byCell.get(cy * 1000003L + cx)
-          if (lst != null) {
-            var k = 0
-            while (k < lst.size()) {
-              val ai2 = lst.get(k)
-              if (ai2 != bi &&
-                  bb.contains(cents(ai2)._1, cents(ai2)._2) &&
-                  Geom.containsPoint(b.parts.head, cents(ai2)._1, cents(ai2)._2))
-                counts(bi) += 1
-              k += 1
-            }
-          }
-          cx += 1
-        }
-        cy += 1
+    group.indices.filterNot { b =>
+      val bb = group(b).bbox; val poly = group(b).parts.head
+      var inside = 0
+      cents.exists(bb.minX, bb.minY, bb.maxX, bb.maxY) { a =>
+        if (a != b && bb.contains(cx(a), cy(a)) && Geom.containsPoint(poly, cx(a), cy(a))) inside += 1
+        inside > MaxCentroidsInside
       }
-      bi += 1
-    }
-    group.indices.filter(counts(_) <= maxOverlaps).map(group)
+    }.map(group)
   }
+
+  /** More other centroids than this inside an instance drop it. */
+  private val MaxCentroidsInside = 1
 
   /** Iterative pop-merge (merge.py:34-82): pop the LAST instance; if it
     * overlaps any remaining instance with IoU >= thr, merge with the
     * FIRST such partner and push the union back; else emit. Members are
     * pre-sorted by crownId so the list semantics are deterministic. */
-  def splitLocal(group0: IndexedSeq[Inst], iouThr: Double): List[Inst] = {
+  private def splitLocal(group0: List[Inst], iouThr: Double): List[Inst] = {
     val work = scala.collection.mutable.ArrayBuffer.from(
-      filterCentroids(group0.sortBy(_.ids.min)))
+      filterCentroids(group0.sortBy(_.ids.min).toIndexedSeq))
     val merged = scala.collection.mutable.ListBuffer.empty[Inst]
     while (work.nonEmpty) {
       val a = work.remove(work.size - 1)
@@ -562,7 +544,7 @@ object CrownOps {
         !(c.minX.isNaN || c.minY.isNaN || c.maxX.isNaN || c.maxY.isNaN))
       .map(instOf).toIndexedSeq
     dissolveLocal(insts).flatMap { group =>
-      if (group.size == 1) group
+      if (group.tail.isEmpty) group
       else splitLocal(group, iouThr)
     }.toList
   }

@@ -320,12 +320,18 @@ object GeoTiffIO {
 
     val tw = one(TagTileWidth).toInt
     val th = one(TagTileLength).toInt
+    require(width > 0 && height > 0 && width.toLong * height <= Int.MaxValue,
+      s"bad image size ${width}x$height: want positive sides and at most ${Int.MaxValue} pixels")
     val data = new Array[Byte](width * height) // y-down while assembling
     if (tw > 0 && th > 0) {
       // tiled layout (tags 322-325) — what this sink writes
       val offsets = values(TagTileOffsets)
       val counts = values(TagTileCounts)
       val tilesAcross = (width + tw - 1) / tw
+      val nTiles = tilesAcross.toLong * ((height + th - 1) / th)
+      require(offsets.length == nTiles && counts.length == nTiles,
+        s"TileOffsets has ${offsets.length} and TileByteCounts ${counts.length} entries " +
+          s"for $nTiles tiles of ${tw}x$th over ${width}x$height")
       offsets.indices.foreach { i =>
         val raw = chunk(i.toLong, offsets(i), counts(i), tw * th, "tile")
         val ty = i / tilesAcross

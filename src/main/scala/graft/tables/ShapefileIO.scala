@@ -102,9 +102,10 @@ object ShapefileIO {
       val content = pos + 8
       // malformed header guard: content length below the 4-byte shape
       // type, or running past the buffer, would stall or overrun the
-      // scan — stop parsing rather than spin
+      // scan — fail loudly rather than return the records before it
       if (contentWords < 2 || content.toLong + contentWords.toLong * 2 > end)
-        return out.result()
+        throw new IllegalArgumentException(s"malformed .shp record $recNum at byte $pos: " +
+          s"$contentWords content words do not fit before byte $end")
       buf.order(ByteOrder.LITTLE_ENDIAN)
       val recType = buf.getInt(content)
       if (recType == PolygonType) {
@@ -112,10 +113,11 @@ object ShapefileIO {
         val numPoints = buf.getInt(content + 40)
         // body-level guard: corrupt part/point counts would otherwise
         // allocate huge arrays or read the NEXT record's bytes as
-        // coordinates — stop cleanly like the header guard
+        // coordinates — fail loudly like the header guard
         if (numParts < 0 || numPoints < 0 ||
             4L + 40L + 4L * numParts + 16L * numPoints > contentWords.toLong * 2)
-          return out.result()
+          throw new IllegalArgumentException(s"malformed .shp record $recNum at byte $pos: " +
+            s"$numParts parts and $numPoints points do not fit in $contentWords content words")
         val partsOff = content + 44
         val pointsOff = partsOff + 4 * numParts
         val starts = Array.tabulate(numParts)(p => buf.getInt(partsOff + 4 * p))
@@ -131,7 +133,9 @@ object ShapefileIO {
           prev = math.max(prev, s0)
           pi += 1
         }
-        if (!startsOk) return out.result()
+        if (!startsOk)
+          throw new IllegalArgumentException(s"malformed .shp record $recNum at byte $pos: " +
+            s"part offsets ${starts.mkString(",")} outside [0, $numPoints] or decreasing")
         val rings = (0 until numParts).map { p =>
           val from = starts(p)
           val until = if (p + 1 < numParts) starts(p + 1) else numPoints
@@ -546,7 +550,7 @@ object ShapefileIO {
               Some(raw)
             }
           }
-          val sidecar: Seq[Map[String, String]] =
+          val sidecar: Option[IndexedSeq[Map[String, String]]] =
             sidecarBytes(".dbf").map { raw =>
               val (fds, rows) =
                 try parseDbf(raw)
@@ -554,16 +558,21 @@ object ShapefileIO {
                   case scala.util.control.NonFatal(e) => throw new IllegalArgumentException(
                     s"corrupt .dbf sidecar for $path: ${e.getMessage}", e)
                 }
-              rows.map(r => fds.map(_.name).zip(r).toMap)
-            }.getOrElse(Seq.empty)
+              rows.map(r => fds.map(_.name).zip(r).toMap).toIndexedSeq
+            }
           val crsWkt = sidecarBytes(".prj")
             .map(new String(_, "US-ASCII").trim).getOrElse("")
           // dbf row i pairs with shp record number i+1 (spec: record
           // numbers are sequential 1-based) — null-shape records keep
-          // their dbf slot even though parse() doesn't emit them
+          // their dbf slot even though parse() doesn't emit them; a
+          // missing .dbf means no attributes, a short one fails loudly
           parse(bytes).map { r =>
-            (path, r.recordNum, r.rings,
-              sidecar.lift(r.recordNum - 1).getOrElse(Map.empty[String, String]), crsWkt)
+            val props = sidecar.fold(Map.empty[String, String]) { rows =>
+              require(r.recordNum >= 1 && r.recordNum <= rows.size,
+                s".dbf sidecar for $path has ${rows.size} rows, none for record ${r.recordNum}")
+              rows(r.recordNum - 1)
+            }
+            (path, r.recordNum, r.rings, props, crsWkt)
           }
         }
       }

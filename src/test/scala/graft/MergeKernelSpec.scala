@@ -344,4 +344,139 @@ class MergeKernelSpec extends AnyFunSuite {
     for (thr <- Seq(0.0, 0.5)) assertNmsLikeOracle(crowns, thr, "wide crowns")
     assert((System.nanoTime() - t0) / 1e9 < 30.0, "the wide crowns took too long")
   }
+
+  /** The merge with no spatial index: greedy NMS ([[nmsOracle]]), the
+    * confidence and NaN-bbox filters, an O(n²) closure of
+    * bbox-then-polygon `intersects`, a brute-force centroid filter and
+    * pop-merge whose mask IoU rasterizes each part with the full-scan
+    * `Raster.rasterize`. One row per merged instance: (ids, scores,
+    * parts, bbox, sorted-array median), in the order of their text. */
+  private def mergeReference(crowns: IndexedSeq[Crown], cls: Int, nmsIou: Double,
+                             confThr: Double, mergeIou: Double) = {
+    case class R(ids: List[Long], scores: List[Double], parts: List[Array[Double]]) {
+      def bbox: BBox = parts.map(BBox.ofPolygon).reduce(_ union _)
+    }
+    val insts = nmsOracle(crowns, nmsIou).filter(c => c.classIdx == cls && c.score > confThr &&
+        !(c.minX.isNaN || c.minY.isNaN || c.maxX.isNaN || c.maxY.isNaN))
+      .map(c => R(List(c.crownId), List(c.score), List(c.poly)))
+    def touches(a: R, b: R) = a.bbox.intersects(b.bbox) && Geom.intersects(a.parts.head, b.parts.head)
+    val comp = Array.fill(insts.size)(-1)
+    for (s <- insts.indices if comp(s) < 0) {
+      comp(s) = s
+      val stack = scala.collection.mutable.Stack(s)
+      while (stack.nonEmpty) {
+        val u = stack.pop()
+        for (v <- insts.indices if comp(v) < 0 && touches(insts(u), insts(v))) { comp(v) = s; stack.push(v) }
+      }
+    }
+    def iou(a: R, b: R): Double = {
+      if (!a.bbox.intersects(b.bbox)) 0.0
+      else if (a.parts.size == 1 && b.parts.size == 1) Geom.iouConvex(a.parts.head, b.parts.head)
+      else {
+        val bb = a.bbox.union(b.bbox)
+        val cols = math.max(1, math.ceil(bb.maxX - bb.minX).toInt)
+        val rows = math.max(1, math.ceil(bb.maxY - bb.minY).toInt)
+        def mask(r: R) = {
+          val m = new Array[Byte](rows * cols)
+          r.parts.foreach(p => Raster.rasterize(Geom.translate(p, -bb.minX, -bb.minY), rows, cols, m))
+          m
+        }
+        val ma = mask(a); val mb = mask(b)
+        val inter = ma.indices.count(i => ma(i) != 0 && mb(i) != 0)
+        val union = ma.indices.count(i => ma(i) != 0 || mb(i) != 0)
+        if (union == 0) 0.0 else inter.toDouble / union
+      }
+    }
+    val out = insts.indices.groupBy(comp).values.toSeq.flatMap { idx =>
+      val group = idx.sorted.map(insts)
+      if (group.size == 1) group
+      else {
+        val sorted = group.sortBy(_.ids.min)
+        val cents = sorted.map(r => Geom.centroid(r.parts.head))
+        val work = scala.collection.mutable.ArrayBuffer.from(sorted.indices.filter { b =>
+          sorted.indices.count(a => a != b && sorted(b).bbox.contains(cents(a)._1, cents(a)._2) &&
+            Geom.containsPoint(sorted(b).parts.head, cents(a)._1, cents(a)._2)) <= 1
+        }.map(sorted))
+        val merged = scala.collection.mutable.ListBuffer.empty[R]
+        while (work.nonEmpty) {
+          val a = work.remove(work.size - 1)
+          val partner = work.indexWhere(iou(a, _) >= mergeIou)
+          if (partner < 0) merged += a
+          else { val b = work.remove(partner); work += R(a.ids ++ b.ids, a.scores ++ b.scores, a.parts ++ b.parts) }
+        }
+        merged
+      }
+    }
+    out.map { r =>
+      val s = r.scores.toArray.sorted; val n = s.length
+      (r.ids, r.scores, r.parts.map(_.toSeq), r.bbox, if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0)
+    }.sortBy(_.toString)
+  }
+
+  private def assertMergeLikeReference(crowns: IndexedSeq[Crown], nmsIou: Double, confThr: Double,
+                                       mergeIou: Double, what: => String): Unit =
+    for (cls <- crowns.map(_.classIdx).distinct.sorted) {
+      val got = CrownOps.mergeLocal(CrownOps.nmsLocal(crowns, nmsIou), cls, confThr, mergeIou)
+        .map(i => (i.ids, i.scores, i.parts.map(_.toSeq), i.bbox, CrownOps.median(i.scores)))
+        .sortBy(_.toString)
+      val want = mergeReference(crowns, cls, nmsIou, confThr, mergeIou)
+      assert(got === want, s"$what, class $cls, nms $nmsIou, merge $mergeIou")
+    }
+
+  private def polyCrown(id: Long, score: Double, poly: Array[Double]): Crown = {
+    val bb = BBox.ofPolygon(poly)
+    Crown(0L, id, 0L, 0L, 1, score, bb.minX, bb.minY, bb.maxX, bb.maxY, poly)
+  }
+
+  test("mergeLocal equals the unindexed merge reference on fixture, 2000-page and fuzzed crowns") {
+    for ((key, g) <- ReferenceFixture.crowns.groupBy(c => (c.region, c.classIdx)).toSeq.sortBy(_._1))
+      assertMergeLikeReference(g, 0.7, 0.35, 0.1, s"fixture group $key")
+    val spark = SparkTestBase.spark
+    val pages = CrownOps.synthesize(spark, GeoOps.assignTiles(PagesGen.pages(spark, 2000)),
+      GeoOps.TileGrid.Default).collect().toIndexedSeq
+    for ((key, g) <- pages.groupBy(c => (c.region, c.classIdx)).toSeq.sortBy(_._1))
+      assertMergeLikeReference(g, 0.7, 0.3, 0.5, s"2000 pages group $key")
+
+    // exact duplicates, zero-area rings, NaN bboxes and boxes over 64 cells;
+    // NMS at 1.0 suppresses nothing, so duplicates reach the merge
+    val rnd = new scala.util.Random(1717)
+    for (k <- 0 until 150) {
+      val n = 2 + rnd.nextInt(60)
+      val cs = scala.collection.mutable.ArrayBuffer.empty[Crown]
+      while (cs.size < n) {
+        val x = rnd.nextInt(600).toDouble - 300; val y = rnd.nextInt(600).toDouble - 300
+        val score = 0.2 + 0.8 * rnd.nextDouble()
+        val id = rnd.nextInt(400).toLong
+        cs += (rnd.nextInt(10) match {
+          case 0 if cs.nonEmpty => cs(rnd.nextInt(cs.size))
+          case 1 => polyCrown(id, score, Array(x, y, x + 10, y + 10, x + 20, y + 20))
+          case 2 => polyCrown(id, score, Array(x, y, x, y, x, y))
+          case 3 =>
+            val p = Array(Double.NaN, y, x + 10, y, x + 10, y + 10)
+            Crown(0L, id, 0L, 0L, 1, score, Double.NaN, y, x + 10, y + 10, p)
+          case 4 =>
+            val w = 600.0 + rnd.nextInt(3000)
+            polyCrown(id, score, Array(x, y, x + w, y, x + w, y + w, x, y + w))
+          case _ => polyCrown(id, score, CrownOps.synthPoly(rnd.nextLong(), x, y))
+        })
+      }
+      for (nmsIou <- Seq(0.7, 1.0); mergeIou <- Seq(0.1, 0.5))
+        assertMergeLikeReference(cs.toIndexedSeq, nmsIou, 0.3, mergeIou, s"fuzz case $k")
+    }
+  }
+
+  test("mergeLocal: one 1e7-px crown holding other centroids equals the reference, in seconds") {
+    val rnd = new scala.util.Random(1718)
+    val normal = (0 until 2000).map { i =>
+      val x = rnd.nextInt(20000).toDouble; val y = rnd.nextInt(20000).toDouble
+      polyCrown(i.toLong, 0.4 + 0.5 * rnd.nextDouble(), CrownOps.synthPoly(rnd.nextLong(), x, y))
+    }
+    val huge = polyCrown(9000L, 0.99, Array(-5e6, -5e6, 5e6, -5e6, 5e6, 5e6, -5e6, 5e6))
+    val crowns = (normal :+ huge).toIndexedSeq
+    val t0 = System.nanoTime()
+    val got = CrownOps.mergeLocal(crowns, 1, 0.3, 0.5)
+    assert((System.nanoTime() - t0) / 1e9 < 30.0, "the 1e7-px crown took too long")
+    assert(!got.exists(_.ids.contains(9000L)), "the centroid filter drops the crown holding the others")
+    assertMergeLikeReference(crowns, 1.0, 0.3, 0.5, "1e7-px crown")
+  }
 }

@@ -349,6 +349,29 @@ class RasterPathSpec extends AnyFunSuite {
     assert(err.getMessage.contains("deflate"))
   }
 
+  test("GeoTIFF: missing tiles and an oversized header fail loud") {
+    import graft.tables.GeoTiffIO
+    val bytes = GeoTiffIO.write(synthConfTile(300, 520, 8), deflate = false)
+    val ifd = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(4)
+    def patched(edit: (java.nio.ByteBuffer, Int => Int) => Unit): Array[Byte] = {
+      val out = bytes.clone()
+      val bb = java.nio.ByteBuffer.wrap(out).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      val n = bb.getShort(ifd) & 0xFFFF
+      edit(bb, tag => (0 until n).map(i => ifd + 2 + 12 * i).find(e => (bb.getShort(e) & 0xFFFF) == tag).get)
+      out
+    }
+    // TileOffsets and TileByteCounts cut from 6 entries to 4
+    val cut = patched((bb, entry) => Seq(324, 325).foreach(t => bb.putInt(entry(t) + 4, 4)))
+    val err = intercept[IllegalArgumentException](GeoTiffIO.parse(cut))
+    assert(err.getMessage.contains("6 tiles"), err.getMessage)
+    // a 65536 x 65536 header: 2^32 pixels overflow an Int product
+    val huge = patched { (bb, entry) =>
+      Seq(256, 257).foreach { t => bb.putShort(entry(t) + 2, 4.toShort); bb.putInt(entry(t) + 8, 65536) }
+    }
+    val big = intercept[IllegalArgumentException](GeoTiffIO.parse(huge))
+    assert(big.getMessage.contains("65536x65536"), big.getMessage)
+  }
+
   /** Hand-assemble a STRIP-layout classic TIFF (tags 273/278/279) of a
     * ConfTile — the layout rasterio/GDAL default to for small rasters
     * (reference result/processedresult.py masks). `rowsPerStrip <= 0`

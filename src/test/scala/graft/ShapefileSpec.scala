@@ -53,37 +53,38 @@ class ShapefileSpec extends AnyFunSuite {
   }
 
   test("robustness: empty-ring records become Null Shapes; malformed bytes don't hang") {
+    def rejects(b: Array[Byte]) = intercept[IllegalArgumentException](ShapefileIO.parse(b))
     // ringless record (e.g. MergedCrown with emitGeom=false) → Null Shape
     val bytes = ShapefileIO.write(Seq(
       ShpRecord(1, Seq.empty), ShpRecord(2, Seq(square)), ShpRecord(3, Seq(Array(1.0, 2.0)))))
     val back = ShapefileIO.parse(bytes)
     assert(back.map(_.recordNum) === Seq(2)) // null shapes skipped on read
-    // corrupt record header (negative content length) stops cleanly
-    // instead of spinning or OOMing
+    // corrupt record header (negative content length) fails loudly
+    // instead of spinning, OOMing or returning the records before it
     val good = ShapefileIO.write(Seq(ShpRecord(1, Seq(square)), ShpRecord(2, Seq(square))))
     val corrupt = good.clone()
     val firstLen = java.nio.ByteBuffer.wrap(good).getInt(104) // record 1 content words
     val rec2 = 100 + 8 + firstLen * 2
     java.nio.ByteBuffer.wrap(corrupt).putInt(rec2 + 4, -4)
-    assert(ShapefileIO.parse(corrupt).map(_.recordNum) === Seq(1))
-    // truncated file parses the complete prefix
-    assert(ShapefileIO.parse(good.take(good.length - 10)).map(_.recordNum) === Seq(1))
-    // corrupt polygon BODY (numPoints huge / negative): clean stop, no
+    assert(rejects(corrupt).getMessage.contains(s"record 2 at byte $rec2"))
+    // truncated file fails loudly, naming the cut record
+    assert(rejects(good.take(good.length - 10)).getMessage.contains(s"record 2 at byte $rec2"))
+    // corrupt polygon BODY (numPoints huge / negative): loud failure, no
     // giant allocation, no reading the next record's bytes as coords
     val bodyCorrupt = good.clone()
     val bb2 = java.nio.ByteBuffer.wrap(bodyCorrupt).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb2.putInt(100 + 8 + 40, 1 << 30) // record 1 numPoints
-    assert(ShapefileIO.parse(bodyCorrupt).isEmpty)
+    assert(rejects(bodyCorrupt).getMessage.contains("record 1 at byte 100"))
     bb2.putInt(100 + 8 + 40, -7)
-    assert(ShapefileIO.parse(bodyCorrupt).isEmpty)
-    // corrupt ring part OFFSET (negative / past numPoints): clean stop
+    assert(rejects(bodyCorrupt).getMessage.contains("record 1 at byte 100"))
+    // corrupt ring part OFFSET (negative / past numPoints): loud failure
     // instead of reading header bytes as coordinates
     val startsCorrupt = good.clone()
     val bb3 = java.nio.ByteBuffer.wrap(startsCorrupt).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     bb3.putInt(100 + 8 + 44, -5) // record 1 parts[0]
-    assert(ShapefileIO.parse(startsCorrupt).isEmpty)
+    assert(rejects(startsCorrupt).getMessage.contains("record 1 at byte 100"))
     bb3.putInt(100 + 8 + 44, 1 << 28)
-    assert(ShapefileIO.parse(startsCorrupt).isEmpty)
+    assert(rejects(startsCorrupt).getMessage.contains("record 1 at byte 100"))
   }
 
   test("spec-violating unclosed ring keeps all vertices; closed ring drops only the repeat") {

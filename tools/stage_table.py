@@ -21,9 +21,11 @@ output check's own collect too.
 The CPU split is the executor threads' `jdk.ExecutionSample` events, each
 put in the first group one of its top frames matches (see GROUPS). The
 topmost matching frame decides, so the tracer and the rasterizer the merge
-calls count as "merge trace" and "rasterize", and the few `graft.geom.Geom`
-calls under crown synthesis count as merge kernels. Union-find frames are
-passed over (TRANSPARENT): their caller decides.
+calls count as "merge trace" and "rasterize" (the split's mask IoU
+rasterizes, so only its counting loop shows as "merge split IoU").
+`graft.geom.Geom` frames (union-find and the polygon primitives) and
+`CrownOps.BoxCells` frames are passed over (TRANSPARENT): their caller
+decides.
 Needs `jfr` on PATH.
 
 Usage: stage_table.py <run dir>
@@ -40,8 +42,10 @@ MARKERS = {"predict": "foreachPartition at GeoTiffIO",
            "assign": "collect at Workloads",
            "spatial_join": "collect at Workloads"}
 # frames no group claims: a sample there goes to the first caller that
-# matches, so union-find work counts with the tracer or the dissolve
-TRANSPARENT = ("graft.geom.Geom$UnionFind",)
+# matches, so union-find and polygon primitives count with the tracer, a
+# merge part or crown synthesis, and the merge's cell index with NMS, the
+# dissolve or the centroid filter
+TRANSPARENT = ("graft.geom.Geom", "graft.operators.CrownOps$BoxCells")
 # frame substrings per group, tried from the top frame down
 GROUPS = [
     ("overlay kernel", ("graft.geom.Overlay",)),
@@ -55,9 +59,14 @@ GROUPS = [
     ("hash aggregate", ("java.util.zip.CRC32", "BytesToBytesMap", "AggregationMap",
                         "agg_FastHashMap", "HashAggregate", "hashAgg_")),
     ("crown synthesis", ("graft.operators.CrownOps$.synth", "graft.operators.CrownOps$.mix64")),
-    ("merge kernels", ("graft.operators.CrownOps$.nmsLocal", "graft.operators.CrownOps$.mergeLocal",
-                       "graft.operators.CrownOps$.dissolveLocal", "graft.operators.CrownOps$.splitLocal",
-                       "graft.operators.CrownOps$.toMerged", "graft.geom.Geom")),
+    ("merge NMS", ("CrownOps$.nmsLocal", "CrownOps$.$anonfun$nmsLocal", "CrownOps$.scoreOrder")),
+    ("merge dissolve", ("CrownOps$.dissolveLocal", "CrownOps$.$anonfun$dissolveLocal",
+                        "CrownOps$.instIntersects")),
+    ("merge centroid filter", ("CrownOps$.filterCentroids", "CrownOps$.$anonfun$filterCentroids")),
+    ("merge split IoU", ("CrownOps$.instIoUCached", "CrownOps$MaskCache")),
+    ("merge Inst bookkeeping", ("CrownOps$Inst", "CrownOps$.instOf", "CrownOps$.splitLocal",
+                                "CrownOps$.mergeLocal", "CrownOps$.$anonfun$mergeLocal",
+                                "CrownOps$.toMerged")),
     ("merge trace", ("graft.geom.Raster$.vectorize", "graft.geom.Raster$.connectedComponents",
                      "graft.geom.Raster$.traceBoundary", "graft.geom.Raster$.dedupCollinear",
                      "graft.geom.Raster$.firstPixels", "graft.geom.Raster$.markBorder",
